@@ -356,6 +356,7 @@ query-suite workload).
 def main() -> None:
     from log_collector_spark.session import get_spark
     import __spark_entry__ as entry_mod
+    from log_collector_spark.registry import routed_slim
 
     spark = get_spark(master=f"local[{CPUS}]", shuffle_partitions=CPUS,
                       app_name="bench", extra_conf=_bench_conf())
@@ -393,7 +394,7 @@ def main() -> None:
     # (VERDICT r4 item 6: tx_cube_tool_usage's 5.2 s was ~4 s of shared
     # materialization being misread as query cost).
     t0 = time.perf_counter()
-    entry_mod._routed_slim(spark, SF_DIR).count()
+    routed_slim(spark, SF_DIR).count()
     timings["tx_slim_materialize"] = time.perf_counter() - t0
 
     # wide row-level outputs → noop write; aggregates → collect

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from log_collector_spark.registry import register, tbl
+
 # Filter constants sized for the synthetic sf tables (dates span 1995-2001).
 PRICING_CUTOFF = "2000-01-01"
 SHIP_SEGMENT = "BUILDING"
@@ -1255,3 +1257,176 @@ def sql_join_order_advisor() -> str:
         FROM plans
         ORDER BY join_order
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "join_order_advisor",
+    """System-R left-deep join-order decision table from measured
+    count/distinct stats over customer–orders–lineitem (CBO parity).""",
+    lambda spark, sf_dir: join_order_advisor(tbl(spark, sf_dir, "customer"),
+                                             tbl(spark, sf_dir, "orders"),
+                                             tbl(spark, sf_dir, "lineitem")),
+    sql_join_order_advisor)
+
+register(
+    "tpch_pricing_summary",
+    "Q1-shaped pricing summary: one 6-group partial-agg shuffle.",
+    lambda spark, sf_dir: pricing_summary(tbl(spark, sf_dir, "lineitem")),
+    sql_pricing_summary)
+
+register(
+    "tpch_shipping_priority",
+    "Q3-shaped top-10 revenue orders: broadcast dim + TakeOrdered top-k.",
+    lambda spark, sf_dir: shipping_priority(tbl(spark, sf_dir, "customer"),
+                                            tbl(spark, sf_dir, "orders"),
+                                            tbl(spark, sf_dir, "lineitem")),
+    sql_shipping_priority)
+
+register(
+    "tpch_local_supplier_volume",
+    "Q5-shaped 6-way star join: all dims broadcast, one fact shuffle.",
+    lambda spark, sf_dir: local_supplier_volume(tbl(spark, sf_dir, "region"),
+                                                tbl(spark, sf_dir, "nation"),
+                                                tbl(spark, sf_dir, "customer"),
+                                                tbl(spark, sf_dir, "supplier"),
+                                                tbl(spark, sf_dir, "orders"),
+                                                tbl(spark, sf_dir, "lineitem")),
+    sql_local_supplier_volume)
+
+register(
+    "tpch_forecast_revenue",
+    "Q6-shaped scan-bound revenue: all predicates pushed, no join.",
+    lambda spark, sf_dir: forecast_revenue(tbl(spark, sf_dir, "lineitem")),
+    sql_forecast_revenue)
+
+register(
+    "tpch_promo_share",
+    "Q14-shaped promo permille per ship month: broadcast part dim.",
+    lambda spark, sf_dir: promo_revenue_share(tbl(spark, sf_dir, "lineitem"),
+                                              tbl(spark, sf_dir, "part")),
+    sql_promo_revenue_share)
+
+register(
+    "tpch_order_priority",
+    "Q4-shaped EXISTS via left-semi join with non-equi lateness check.",
+    lambda spark, sf_dir: order_priority_counts(tbl(spark, sf_dir, "orders"),
+                                                tbl(spark, sf_dir, "lineitem")),
+    sql_order_priority_counts)
+
+register(
+    "tpch_large_orders",
+    "Q18-shaped HAVING-collapsed fact agg then dim joins, top-k.",
+    lambda spark, sf_dir: large_order_customers(tbl(spark, sf_dir, "customer"),
+                                                tbl(spark, sf_dir, "orders"),
+                                                tbl(spark, sf_dir, "lineitem")),
+    sql_large_order_customers)
+
+register(
+    "tpch_returned_items",
+    """Q10-shaped returned-revenue customer ranking: dims join ABOVE the
+    custkey aggregation, top-k via TakeOrderedAndProject.""",
+    lambda spark, sf_dir: returned_item_customers(
+        tbl(spark, sf_dir, "customer"),
+        tbl(spark, sf_dir, "orders"),
+        tbl(spark, sf_dir, "lineitem"),
+        tbl(spark, sf_dir, "nation")),
+    sql_returned_item_customers)
+
+register(
+    "tpch_supplier_share",
+    """Q11-shaped global-share filter: 1-row scalar broadcast, exact
+    cross-multiplied threshold (no AVG/DIV rounding).""",
+    lambda spark, sf_dir: supplier_revenue_share(
+        tbl(spark, sf_dir, "supplier"),
+        tbl(spark, sf_dir, "lineitem")),
+    sql_supplier_revenue_share)
+
+register(
+    "tpch_priority_class",
+    "Q12-shaped high/low-priority CASE-sum over late lines.",
+    lambda spark, sf_dir: priority_class_lines(tbl(spark, sf_dir, "orders"),
+                                               tbl(spark, sf_dir, "lineitem")),
+    sql_priority_class_lines)
+
+register(
+    "tpch_top_supplier",
+    "Q15-shaped max-of-sums with tie surfacing (scalar MAX broadcast).",
+    lambda spark, sf_dir: top_supplier(tbl(spark, sf_dir, "supplier"),
+                                       tbl(spark, sf_dir, "lineitem")),
+    sql_top_supplier)
+
+register(
+    "tpch_disjunctive_revenue",
+    "Q19-shaped OR-of-ANDs residual predicate over a broadcast dim join.",
+    lambda spark, sf_dir: disjunctive_revenue(tbl(spark, sf_dir, "lineitem"),
+                                              tbl(spark, sf_dir, "part")),
+    sql_disjunctive_revenue)
+
+register(
+    "tpch_prospects",
+    "Q22-shaped above-average-balance anti-join prospect report.",
+    lambda spark, sf_dir: prospect_customers(tbl(spark, sf_dir, "customer"),
+                                             tbl(spark, sf_dir, "orders"),
+                                             tbl(spark, sf_dir, "nation")),
+    sql_prospect_customers)
+
+register(
+    "tpch_order_count_dist",
+    """Q13-shaped order-count distribution with the zero bucket preserved
+    (LEFT OUTER + COUNT(col), double aggregation).""",
+    lambda spark, sf_dir: order_count_distribution(
+        tbl(spark, sf_dir, "customer"),
+        tbl(spark, sf_dir, "orders")),
+    sql_order_count_distribution)
+
+register(
+    "tpch_small_qty_revenue",
+    """Q17-shaped decorrelated per-part average threshold (cross-multiplied
+    — no division) over the brand-pruned fact.""",
+    lambda spark, sf_dir: small_quantity_revenue(
+        tbl(spark, sf_dir, "lineitem"),
+        tbl(spark, sf_dir, "part")),
+    sql_small_quantity_revenue)
+
+register(
+    "tpch_two_nation_volume",
+    "Q7-shaped symmetric two-nation trade volume per year.",
+    lambda spark, sf_dir: two_nation_volume(tbl(spark, sf_dir, "nation"),
+                                            tbl(spark, sf_dir, "customer"),
+                                            tbl(spark, sf_dir, "supplier"),
+                                            tbl(spark, sf_dir, "orders"),
+                                            tbl(spark, sf_dir, "lineitem")),
+    sql_two_nation_volume)
+
+register(
+    "tpch_waiting_suppliers",
+    """Q21-shaped unique-laggard suppliers: EXISTS + NOT EXISTS both
+    decorrelated into aggregates (n_supps >= 2, n_at_max == 1).""",
+    lambda spark, sf_dir: waiting_suppliers(tbl(spark, sf_dir, "supplier"),
+                                            tbl(spark, sf_dir, "orders"),
+                                            tbl(spark, sf_dir, "lineitem")),
+    sql_waiting_suppliers)
+
+register(
+    "tpch_market_share",
+    """Q8-shaped national market share per year: the nation filter lives
+    in a CASE inside the aggregate (the denominator keeps everyone).""",
+    lambda spark, sf_dir: market_share(tbl(spark, sf_dir, "region"),
+                                       tbl(spark, sf_dir, "nation"),
+                                       tbl(spark, sf_dir, "customer"),
+                                       tbl(spark, sf_dir, "supplier"),
+                                       tbl(spark, sf_dir, "orders"),
+                                       tbl(spark, sf_dir, "lineitem")),
+    sql_market_share)
+
+register(
+    "tpch_dead_stock",
+    """Anti-join audit: parts with NO sales in 1996Q1, per brand (the
+    NOT-EXISTS dual of tpch_order_priority's EXISTS).""",
+    lambda spark, sf_dir: dead_stock(tbl(spark, sf_dir, "part"),
+                                     tbl(spark, sf_dir, "lineitem")),
+    sql_dead_stock)

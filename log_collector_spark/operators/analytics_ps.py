@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .analytics import _cents, _bp, _sql_cents, _sql_bp, _ts
+from log_collector_spark.registry import register, tbl
 
 # Filter constants sized for the synthetic sf tables.
 MINCOST_SIZE = 15
@@ -352,3 +353,52 @@ def sql_excess_stock_suppliers(prefix: str = EXCESS_PREFIX,
         WHERE s.s_suppkey IN (SELECT ps_suppkey FROM excess)
         ORDER BY s_name, s_suppkey
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "tpch_min_cost_supplier",
+    """Q2-shaped min-cost supplier over the DERIVED partsupp (distinct
+    lineitem key pairs + deterministic integer attrs): the correlated MIN
+    subquery decorrelated into groupBy-min + equi-join back, ties kept.""",
+    lambda spark, sf_dir: min_cost_supplier(tbl(spark, sf_dir, "part"),
+                                            tbl(spark, sf_dir, "supplier"),
+                                            tbl(spark, sf_dir, "nation"),
+                                            tbl(spark, sf_dir, "region"),
+                                            tbl(spark, sf_dir, "lineitem")),
+    sql_min_cost_supplier)
+
+register(
+    "tpch_product_profit",
+    """Q9-shaped product-type profit by (nation, order-year): 6-way join,
+    profit = disc_price − supplycost·qty in exact integer micros.""",
+    lambda spark, sf_dir: product_type_profit(tbl(spark, sf_dir, "part"),
+                                              tbl(spark, sf_dir, "supplier"),
+                                              tbl(spark, sf_dir, "nation"),
+                                              tbl(spark, sf_dir, "orders"),
+                                              tbl(spark, sf_dir, "lineitem")),
+    sql_product_type_profit)
+
+register(
+    "tpch_supplier_relationship",
+    """Q16-shaped supplier-relationship count: DISTINCT suppliers per
+    (brand, type, size) with the NOT-IN exclusion as a broadcast
+    anti-join.""",
+    lambda spark, sf_dir: supplier_relationship(tbl(spark, sf_dir, "part"),
+                                                tbl(spark, sf_dir, "supplier"),
+                                                tbl(spark, sf_dir, "lineitem")),
+    sql_supplier_relationship)
+
+register(
+    "tpch_excess_stock",
+    """Q20-shaped excess-stock suppliers: nested IN-chain as
+    aggregate → join → semi-join; 0.5·qty comparison kept integer.""",
+    lambda spark, sf_dir: excess_stock_suppliers(
+        tbl(spark, sf_dir, "supplier"),
+        tbl(spark, sf_dir, "nation"),
+        tbl(spark, sf_dir, "part"),
+        tbl(spark, sf_dir, "lineitem")),
+    sql_excess_stock_suppliers)

@@ -27,9 +27,11 @@ sort-merge join would.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from log_collector_spark.registry import events, register
 
 _SIDE = "_asof_side"
 _ORD = "_asof_ord"
@@ -68,3 +70,37 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: str,
     for c in value_cols:
         out = out.withColumn(c, F.col(_PAYLOAD)[c])
     return out.drop(_SIDE, _ORD, _PAYLOAD)
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+def _asof_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    markers = (ev.filter(F.col("event_id") % 101 == 0)
+                 .select("user_id", F.col("event_id").alias("upd_id"),
+                         F.col("event_type").alias("upd_type")))
+    out = asof_join(ev.select("event_id", "user_id"), markers,
+                    on="user_id", left_ord="event_id", right_ord="upd_id",
+                    value_cols=["upd_id", "upd_type"])
+    return out.select("event_id", "user_id", "upd_id", "upd_type")
+
+
+register(
+    "asof_enrich_events",
+    """As-of join: each event picks up the most recent prior 'profile update'
+    (markers = every 101st event) of the SAME user — union-tag + one window
+    sweep, a single shuffle on user_id (operators/asof.py; DuckDB oracle uses
+    its native ASOF JOIN as the independent implementation).""",
+    _asof_enrich_events,
+    lambda: """
+            WITH markers AS (
+                SELECT user_id, event_id AS upd_id, event_type AS upd_type
+                FROM events WHERE event_id % 101 = 0
+            )
+            SELECT e.event_id, e.user_id, m.upd_id, m.upd_type
+            FROM events e
+            ASOF LEFT JOIN markers m
+              ON e.user_id = m.user_id AND e.event_id >= m.upd_id
+        """)

@@ -25,9 +25,11 @@ per key; skewed keys can reuse operators/order.py salting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from log_collector_spark.registry import events, register
 
 _SIDE = "_anear_side"
 _ORD = "_anear_ord"
@@ -161,3 +163,49 @@ def sql_asof_nearest(left_sql: str, right_sql: str, *, on: str,
                    AS asof_dist
         FROM final
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+ASOF_NEAREST_TOL_US = 86_400_000_000  # 1 day
+ASOF_MARKER_MOD = 101
+
+
+def _sql_asof_nearest_events() -> str:
+    q = sql_asof_nearest(
+        "SELECT user_id, epoch_us(ts) AS t_us, event_id, event_type "
+        "FROM events",
+        f"SELECT user_id, epoch_us(ts) AS m_us, event_type AS marker_type "
+        f"FROM events WHERE event_id % {ASOF_MARKER_MOD} = 0",
+        on="user_id", left_ord="t_us", right_ord="m_us",
+        value_cols=["marker_type"], tolerance=ASOF_NEAREST_TOL_US)
+    return (f"SELECT event_id, user_id, event_type, marker_type, asof_dist "
+            f"FROM ({q}) ORDER BY event_id")
+
+
+def _asof_nearest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))  # NTZ parquet; UTC tz
+    left = ev.select("user_id", "event_id", "event_type",
+                     us.alias("t_us"))
+    right = (ev.filter(F.col("event_id") % ASOF_MARKER_MOD == 0)
+               .select("user_id", us.alias("m_us"),
+                       F.col("event_type").alias("marker_type")))
+    out = asof_nearest(left, right, on="user_id", left_ord="t_us",
+                       right_ord="m_us", value_cols=["marker_type"],
+                       tolerance=ASOF_NEAREST_TOL_US)
+    return (out.select("event_id", "user_id", "event_type",
+                       "marker_type", "asof_dist")
+               .orderBy("event_id"))
+
+
+register(
+    "asof_nearest_events",
+    """Nearest-as-of (tolerance-bounded, both directions): every event is
+    matched to the closest per-user marker event (event_id % 101 == 0)
+    within 1 day — the pandas merge_asof(direction='nearest') contract as
+    a single union-tag exchange (operators/asof_nearest.py).""",
+    _asof_nearest_events,
+    _sql_asof_nearest_events)

@@ -24,11 +24,15 @@ from __future__ import annotations
 
 import math as _m
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.textops.common import h60
+from log_collector_spark.registry import (events, props_with_drift, register,
+                                          tbl, tx_view)
 
 FUNNEL_STEPS = ["signup", "view", "click", "purchase"]
 ANOMALY_LOOKBACK = 24   # trailing buckets in the baseline window
@@ -3174,3 +3178,491 @@ def sql_wilson_rates(table: str = "events",
                    AS wilson_lb_milli
         FROM agg ORDER BY event_type
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "benford_audit_events",
+    """First-significant-digit distribution of value-cents vs Benford's
+    law — the fabricated/synthetic-value data-quality screen.""",
+    lambda spark, sf_dir: benford_audit(events(spark, sf_dir)),
+    sql_benford_audit)
+
+register(
+    "mann_whitney_events",
+    """Exact tie-corrected Mann-Whitney U ('view' vs 'click' values)
+    with integer AUC effect size — the nonparametric A/B test.""",
+    lambda spark, sf_dir: mann_whitney_u(events(spark, sf_dir)),
+    sql_mann_whitney_u)
+
+register(
+    "token_bucket_events",
+    """Per-user token-bucket limiter replay (sequential applyInPandas
+    kernel; DuckDB replays the recurrence via WITH RECURSIVE).""",
+    lambda spark, sf_dir: token_bucket(events(spark, sf_dir)),
+    sql_token_bucket)
+
+register(
+    "wilson_rates_events",
+    """High-value rate per event type with exact-integer Wilson lower
+    bound (z=2) — ranking that resists small-n flukes.""",
+    lambda spark, sf_dir: wilson_rates(events(spark, sf_dir)),
+    sql_wilson_rates)
+
+register(
+    "slo_burn_alerts",
+    """Multiwindow SLO burn-rate alerts (5-min AND 1-hour conjunction,
+    integer milli burn); hour rolls up the 5-min partials, one scan.""",
+    lambda spark, sf_dir: slo_burn_alerts(events(spark, sf_dir)),
+    sql_slo_burn_alerts)
+
+register(
+    "k_anonymity_events",
+    """k-anonymity risk table on the (type, hour-of-day, value-decade)
+    quasi-identifier — the release audit.""",
+    lambda spark, sf_dir: k_anonymity(events(spark, sf_dir)),
+    sql_k_anonymity)
+
+register(
+    "l_diversity_events",
+    """l-diversity release audit (distinct sensitive users per QI class)
+    — the companion gate to k_anonymity_events.""",
+    lambda spark, sf_dir: l_diversity(events(spark, sf_dir)),
+    sql_l_diversity)
+
+register(
+    "t_closeness_events",
+    """t-closeness release audit: permille-EMD between each QI class's
+    ordered value-decade distribution and the global one — completes the
+    k-anonymity / l-diversity / t-closeness trio.""",
+    lambda spark, sf_dir: t_closeness(events(spark, sf_dir)),
+    sql_t_closeness)
+
+register(
+    "replayed_sequences_events",
+    """Bot/replay detection: user-days sharing a byte-identical ordered
+    event-type sequence, grouped by 60-bit sequence fingerprint.""",
+    lambda spark, sf_dir: replayed_sequences(events(spark, sf_dir)),
+    sql_replayed_sequences)
+
+register(
+    "fano_factor_events",
+    """Per-type burstiness: exact integer Fano factor (variance/mean of
+    zero-filled hourly counts) — 1000 ≈ Poisson, higher = bursty.""",
+    lambda spark, sf_dir: fano_factor(tbl(spark, sf_dir, "events")),
+    sql_fano_factor)
+
+register(
+    "simpson_diversity_events",
+    """Per-user Gini-Simpson behavioral diversity — exact integer where
+    entropy would float-drift; two stacked hash aggs.""",
+    lambda spark, sf_dir: simpson_diversity(tbl(spark, sf_dir, "events")),
+    sql_simpson_diversity)
+
+register(
+    "funnel_latency_events",
+    """Time-to-convert per funnel transition: exact p50/p90 of the
+    first-touch step deltas over converting users.""",
+    lambda spark, sf_dir: funnel_latency(tbl(spark, sf_dir, "events")),
+    sql_funnel_latency)
+
+register(
+    "value_jackknife_events",
+    """Delete-one-bucket jackknife table for the corpus mean —
+    deterministic hash buckets, exact integer leave-one-out means.""",
+    lambda spark, sf_dir: value_jackknife(tbl(spark, sf_dir, "events")),
+    sql_value_jackknife)
+
+register(
+    "ks_drift_events",
+    """One-vs-rest exact binned Kolmogorov-Smirnov distance per event
+    type — the distribution-drift screen, integer cross-multiplied CDFs.""",
+    lambda spark, sf_dir: ks_drift(tbl(spark, sf_dir, "events")),
+    sql_ks_drift)
+
+register(
+    "churn_matrix_events",
+    """Day-over-day retained/churned/acquired counts (set algebra as one
+    shifted full-outer self-join of the distinct user-day frame).""",
+    lambda spark, sf_dir: churn_matrix(tbl(spark, sf_dir, "events")),
+    sql_churn_matrix)
+
+register(
+    "decile_lift_events",
+    """NTILE decile lift table: per-activity-decile conversion lift in
+    permille (cross-multiplied — no rate division).""",
+    lambda spark, sf_dir: decile_lift(tbl(spark, sf_dir, "events")),
+    sql_decile_lift)
+
+register(
+    "bounce_rate_events",
+    """Per-day session bounce rate (1-event sessions permille, 30-min
+    gap sessionization rule).""",
+    lambda spark, sf_dir: bounce_rate(tbl(spark, sf_dir, "events")),
+    sql_bounce_rate)
+
+register(
+    "top_users_ties_events",
+    """Dense-rank top users WITH ties — the leaderboard cut LIMIT-k gets
+    wrong (tied peers must all surface).""",
+    lambda spark, sf_dir: top_users_with_ties(tbl(spark, sf_dir, "events")),
+    sql_top_users_with_ties)
+
+register(
+    "gmd_value_events",
+    """Exact Gini mean difference per event type via the sorted-weight
+    closed form (O(n log n), never the pair join).""",
+    lambda spark, sf_dir: gini_mean_difference(tbl(spark, sf_dir, "events")),
+    sql_gini_mean_difference)
+
+register(
+    "contribution_cap_events",
+    """DP-style per-user contribution capping audit: events removed and
+    users clipped per day at cap=5 — two count-only hash aggs, no
+    window.""",
+    lambda spark, sf_dir: contribution_cap(events(spark, sf_dir)),
+    sql_contribution_cap)
+
+register(
+    "ab_srm_events",
+    """A/B sample-ratio-mismatch guardrail per event_type: exposed-user
+    chi-square (milli) on the deterministic 50/50 hash assignment.""",
+    lambda spark, sf_dir: ab_srm(events(spark, sf_dir)),
+    sql_ab_srm)
+
+register(
+    "dp_noise_advisor_events",
+    """Laplace noise calibration table per candidate epsilon against the
+    capped mean daily count — contribution_cap's companion.""",
+    lambda spark, sf_dir: dp_noise_advisor(events(spark, sf_dir)),
+    sql_dp_noise_advisor)
+
+register(
+    "gap_histogram_events",
+    """Inter-event gap histogram per user stream (power-of-2 µs buckets) —
+    the evidence behind the sessionize/watermark threshold choice.""",
+    lambda spark, sf_dir: gap_histogram(tbl(spark, sf_dir, "events")),
+    lambda: sql_gap_histogram("events"))
+
+
+def _ri_audit_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = tbl(spark, sf_dir, "lineitem")
+    od = tbl(spark, sf_dir, "orders")
+    cu = tbl(spark, sf_dir, "customer")
+    pt = tbl(spark, sf_dir, "part")
+    role_lut, _ = pl.lookups(spark)
+    edges = [
+        ("events_user_customer",
+         tbl(spark, sf_dir, "events").select("user_id"),
+         cu.select("c_custkey")),
+        ("lineitem_orders", li.select("l_orderkey"),
+         od.select("o_orderkey")),
+        ("lineitem_part", li.select("l_partkey"), pt.select("p_partkey")),
+        ("orders_customer", od.select("o_custkey"), cu.select("c_custkey")),
+        ("tx_role_lookup",
+         pl.load_transcripts(spark, sf_dir).select("role"),
+         role_lut.select("role")),
+    ]
+    return ri_audit(edges)
+
+
+register(
+    "ri_audit_tables",
+    """Referential-integrity audit over five FK edges (star schema +
+    events→customer + transcript role→lookup, the last with real ~1%
+    orphans from unknown roles).""",
+    _ri_audit_tables,
+    lambda: sql_ri_audit([
+        ("events_user_customer", "user_id", "events",
+         "c_custkey", "customer"),
+        ("lineitem_orders", "l_orderkey", "lineitem",
+         "o_orderkey", "orders"),
+        ("lineitem_part", "l_partkey", "lineitem",
+         "p_partkey", "part"),
+        ("orders_customer", "o_custkey", "orders",
+         "c_custkey", "customer"),
+        ("tx_role_lookup", "role", tx_view(), "role",
+         "(VALUES ('user'), ('assistant'), ('system'), ('tool'))"
+         " AS rl(role)"),
+    ]))
+
+
+def _fingerprint_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = tbl(spark, sf_dir, "events")
+    us = F.expr("unix_micros(cast(ts as timestamp))")
+    day = (us - us % 86_400_000_000) / 86_400_000_000
+    row = F.concat_ws("|", "event_id", "user_id", "event_type",
+                      us.cast("string"))
+    return table_fingerprint(ev, day, row)
+
+
+register(
+    "fingerprint_events_daily",
+    """Per-day row-multiset fingerprint of the events table (count + XOR +
+    modular sum of 60-bit row hashes) — the replica-drift detector.""",
+    _fingerprint_events_daily,
+    lambda: sql_table_fingerprint(
+        "events",
+        "(epoch_us(ts) - epoch_us(ts) % 86400000000) / 86400000000",
+        "concat_ws('|', event_id, user_id, event_type, "
+        "CAST(epoch_us(ts) AS VARCHAR))"))
+
+register(
+    "activity_gini_events",
+    """Exact integer Gini of events-per-user via the histogram form (no
+    global sort — ranks from the tiny distinct-count-value frame).""",
+    lambda spark, sf_dir: activity_gini(tbl(spark, sf_dir, "events")),
+    sql_activity_gini)
+
+register(
+    "twa_value_events",
+    """Time-weighted average value per event_type (step interpolation,
+    integer cents x ms weights — the billing/SLO statistic).""",
+    lambda spark, sf_dir: twa_value(tbl(spark, sf_dir, "events")),
+    sql_twa_value)
+
+register(
+    "attribution_events",
+    """Last-touch conversion attribution: linear carry-forward window, not
+    the events×events range self-join.""",
+    lambda spark, sf_dir: last_touch_attribution(events(spark, sf_dir)),
+    sql_last_touch_attribution)
+
+register(
+    "funnel_events",
+    """Ordered first-touch funnel signup→view→click→purchase: per-step user
+    reach + permille vs step 1 — a chain of per-user min-aggregates, every
+    join co-partitioned on user_id (operators/behavior.py).""",
+    lambda spark, sf_dir: funnel_counts(events(spark, sf_dir)),
+    sql_funnel_counts)
+
+register(
+    "retention_cohorts",
+    """Cohort retention triangle: distinct active users per (first-seen
+    epoch-day cohort, day offset) — one user-keyed join + one hash agg.""",
+    lambda spark, sf_dir: retention_cohorts(events(spark, sf_dir)),
+    sql_retention_cohorts)
+
+register(
+    "anomaly_hours_events",
+    """Integer-exact trailing z-score volume anomalies per (event_type,
+    hour): flag when (m*x-S)^2 > 9*(m*Q-S^2) over the prior 24 observed
+    buckets — no float mean/stddev, so the flags hash identically across
+    engines.""",
+    lambda spark, sf_dir: hour_anomaly_flags(events(spark, sf_dir)),
+    sql_hour_anomaly_flags)
+
+register(
+    "ohlc_hours_events",
+    """OHLC candlestick rollup per (event_type, hour): open/close by
+    (event-time, event_id) order via min_by/max_by partials — one hash agg,
+    no window over raw events; value quantized to 0.001 for the hash-stable
+    oracle (which uses DuckDB's ordered FIRST/LAST as the independent
+    formulation).""",
+    lambda spark, sf_dir: ohlc_hours(events(spark, sf_dir)),
+    sql_ohlc_hours)
+
+register(
+    "transition_counts_events",
+    """First-order Markov transition matrix of event types per user stream
+    (lag window on user_id, then a tiny (prev, curr) hash agg).""",
+    lambda spark, sf_dir: transition_counts(events(spark, sf_dir)),
+    sql_transition_counts)
+
+
+def _winsorized_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    lat = h60(F.col("event_id").cast("string")) % 5000
+    return winsorized_stats(ev, "event_type", lat)
+
+
+register(
+    "winsorized_latency",
+    """Winsorized robust stats: clamp the synthetic latency into the exact
+    per-type [p05, p95] rank-selection bounds, then aggregate — outliers
+    saturate instead of distorting the sum; the bounds frame is a tiny
+    broadcast.""",
+    _winsorized_latency,
+    lambda: f"""
+            WITH lat AS (
+                SELECT event_type,
+                       {C.sql_h60("CAST(event_id AS VARCHAR)")} % 5000 AS v
+                FROM events
+            ), ranked AS (
+                SELECT event_type, v,
+                       ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v)
+                           AS rn,
+                       COUNT(*) OVER (PARTITION BY event_type) AS cnt
+                FROM lat
+            ), bounds AS (
+                SELECT event_type,
+                       MAX(CASE WHEN rn = CAST(FLOOR(0.05 * (cnt - 1)) AS BIGINT) + 1
+                                THEN v END) AS lo,
+                       MAX(CASE WHEN rn = CAST(FLOOR(0.95 * (cnt - 1)) AS BIGINT) + 1
+                                THEN v END) AS hi
+                FROM ranked GROUP BY event_type
+            )
+            SELECT l.event_type,
+                   CAST(COUNT(*) AS BIGINT) AS n,
+                   CAST(SUM(GREATEST(b.lo, LEAST(b.hi, l.v))) AS BIGINT)
+                       AS sum_w,
+                   CAST(MIN(GREATEST(b.lo, LEAST(b.hi, l.v))) AS BIGINT)
+                       AS min_w,
+                   CAST(MAX(GREATEST(b.lo, LEAST(b.hi, l.v))) AS BIGINT)
+                       AS max_w
+            FROM lat l JOIN bounds b USING (event_type)
+            GROUP BY 1
+        """)
+
+register(
+    "rolling_wau_events",
+    """Rolling 7-day distinct active users per observed day: distinct
+    (day, user) pairs explode into <= 7 report days (bounded narrow
+    duplication) — exact WAU with no sketch and no window over raw
+    events.""",
+    lambda spark, sf_dir: rolling_active_users(events(spark, sf_dir)),
+    sql_rolling_active_users)
+
+
+def _snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    vq = F.round(F.col("value").cast("double") * 1000, 0).cast("long")
+    base = ev.select("event_id", "event_type", "user_id", vq.alias("vq"))
+    changed_vq = (F.col("vq") +
+                  F.when(F.col("event_id") % 7 == 0, 1).otherwise(0))
+    new = (base.filter(F.col("event_id") % 13 != 0)
+               .select("event_id", "event_type", "user_id",
+                       changed_vq.alias("vq")))
+    added = (base.filter(F.col("event_id") % 101 == 0)
+                 .select((F.col("event_id") + 10_000_000).alias("event_id"),
+                         "event_type", "user_id", "vq"))
+    row_hash = h60(F.concat_ws(
+        "|", F.col("event_id").cast("string"), F.col("event_type"),
+        F.col("user_id").cast("string"), F.col("vq").cast("string")))
+    return snapshot_diff(base, new.unionByName(added), "event_id",
+                         row_hash)
+
+
+register(
+    "snapshot_diff_events",
+    """Snapshot reconciliation: events vs a deterministically drifted copy
+    (%13 removed, %7 value-changed, %101 re-keyed as added) classified by a
+    full-outer join on (key, h60-row-hash) — only (key, hash) pairs
+    shuffle, never the payload.""",
+    _snapshot_diff_events,
+    lambda: f"""
+            WITH base AS (
+                SELECT event_id, event_type, user_id,
+                       CAST(ROUND(value * 1000) AS BIGINT) AS vq
+                FROM events
+            ), newsnap AS (
+                SELECT event_id, event_type, user_id,
+                       vq + CASE WHEN event_id % 7 = 0 THEN 1 ELSE 0 END AS vq
+                FROM base WHERE event_id % 13 <> 0
+                UNION ALL
+                SELECT event_id + 10000000, event_type, user_id, vq
+                FROM base WHERE event_id % 101 = 0
+            ), o AS (
+                SELECT event_id AS k,
+                       {C.sql_h60("CAST(event_id AS VARCHAR) || '|' || event_type || '|' || CAST(user_id AS VARCHAR) || '|' || CAST(vq AS VARCHAR)")} AS h_old
+                FROM base
+            ), n AS (
+                SELECT event_id AS k,
+                       {C.sql_h60("CAST(event_id AS VARCHAR) || '|' || event_type || '|' || CAST(user_id AS VARCHAR) || '|' || CAST(vq AS VARCHAR)")} AS h_new
+                FROM newsnap
+            )
+            SELECT COALESCE(o.k, n.k) AS event_id,
+                   CASE WHEN o.h_old IS NULL THEN 'added'
+                        WHEN n.h_new IS NULL THEN 'removed'
+                        WHEN o.h_old <> n.h_new THEN 'changed'
+                        ELSE 'unchanged' END AS status
+            FROM o FULL OUTER JOIN n ON o.k = n.k
+        """)
+
+register(
+    "trigram_paths_events",
+    """Top-20 3-step behavioral paths per user stream: both lags in one
+    WindowExec pass, trigram hash agg, TakeOrderedAndProject top-k.""",
+    lambda spark, sf_dir: trigram_paths(events(spark, sf_dir)),
+    sql_trigram_paths)
+
+
+def _dq_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    src = ev.select("event_id", "ts", "user_id", "event_type", "value",
+                    props_with_drift(ev).alias("props"))
+    return dq_profile(src)
+
+
+register(
+    "dq_profile_events",
+    """Data-quality validity profile in one aggregate pass (nulls, invalid
+    JSON, non-positive values, out-of-range timestamps per event_type);
+    runs over the same deterministically drifted payload as
+    schema_profile_events so the invalid-JSON counter is non-trivial.""",
+    _dq_profile_events,
+    lambda: f"""
+            WITH src AS (
+                SELECT event_id, ts, user_id, event_type, value,
+                       CASE WHEN event_id % 7 = 0 THEN
+                                '{{"k":' || CAST(event_id % 100 AS VARCHAR)
+                                || ',"extra":"x","u":'
+                                || CAST(user_id AS VARCHAR) || '}}'
+                            WHEN event_id % 13 = 0 THEN 'not json'
+                            ELSE props END AS props
+                FROM events
+            )
+            {sql_dq_profile("src")}
+        """)
+
+register(
+    "mad_outliers_events",
+    """Hampel-style robust outliers: |v - median| > 5 * MAD per event
+    type, exact rank-selection medians (two shuffles) + broadcast clamp.""",
+    lambda spark, sf_dir: mad_outliers(events(spark, sf_dir)),
+    sql_mad_outliers)
+
+register(
+    "new_vs_returning_events",
+    """Daily growth accounting: active users split into new (first-ever
+    day) vs returning, plus event totals — two hash aggs, no windows.""",
+    lambda spark, sf_dir: new_vs_returning(events(spark, sf_dir)),
+    sql_new_vs_returning)
+
+register(
+    "debounce_events",
+    """Idempotency debounce: drop events < 1s after the previous event of
+    the same (user, type) key — one window pass, one shuffle.""",
+    lambda spark, sf_dir: debounce_events(events(spark, sf_dir)),
+    sql_debounce_events)
+
+register(
+    "scd2_intervals_events",
+    """SCD2 history build: per-user state-change rows with [valid_from,
+    valid_to) epoch-us intervals; lag+lead share one shuffle+sort.""",
+    lambda spark, sf_dir: scd2_intervals(events(spark, sf_dir)),
+    sql_scd2_intervals)
+
+register(
+    "pct_rank_events",
+    """Per-type percentile-rank (permille) normalization of the value
+    column — one window pass, rank ties share a rank.""",
+    lambda spark, sf_dir: pct_rank_events(events(spark, sf_dir)),
+    sql_pct_rank_events)
+
+register(
+    "activity_grid_events",
+    """Day-of-week x hour traffic heatmap per event type — integer epoch
+    arithmetic, one hash agg, <= 168 cells per group.""",
+    lambda spark, sf_dir: activity_grid(events(spark, sf_dir)),
+    sql_activity_grid)
+
+register(
+    "basket_pairs_events",
+    """Market-basket event-type pairs per (user, day): distinct-collapsed
+    baskets, within-basket self-join bounded by the type vocabulary.""",
+    lambda spark, sf_dir: basket_pairs(events(spark, sf_dir)),
+    sql_basket_pairs)

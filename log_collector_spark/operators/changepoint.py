@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from log_collector_spark.registry import register, tbl
+
 SHIFT_WINDOW_H = 6  # hours each side of the candidate boundary
 
 
@@ -93,3 +95,15 @@ def sql_mean_shift_hours(table: str = "events", ts_col: str = "ts",
                     AS BIGINT) AS shift_score
         FROM hourly
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "mean_shift_hours_events",
+    """Two-window CUSUM volume-shift score per (event_type, hour) — RANGE
+    frames over the epoch-hour index, gaps count as zero volume.""",
+    lambda spark, sf_dir: mean_shift_hours(tbl(spark, sf_dir, "events")),
+    sql_mean_shift_hours)

@@ -21,8 +21,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from log_collector_spark.registry import register, tbl
 
 _INT_RX = "^[+-]?[0-9]+$"
 
@@ -96,3 +98,57 @@ def csv_parse(df: DataFrame, dims: list[CsvDimension], *,
         c = F.col(nm).isNotNull()
         ok = c if ok is None else (ok | c)
     return out.withColumn("csv_ok", ok if ok is not None else F.lit(False))
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+def _csv_parse_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = tbl(spark, sf_dir, "lineitem")
+    flag = F.when(F.col("l_linenumber") % 5 == 0, F.lit("")) \
+            .otherwise(F.col("l_returnflag"))
+    full = F.concat_ws(
+        ",", F.col("l_orderkey").cast("string"),
+        F.col("l_linenumber").cast("string"), flag,
+        F.date_format("l_shipdate", "yyyy-MM-dd HH:mm:ss"))
+    short = F.concat_ws(",", F.col("l_orderkey").cast("string"),
+                        F.col("l_linenumber").cast("string"))
+    line = F.when(F.col("l_orderkey") % 13 == 0, short).otherwise(full)
+    df = li.select(F.col("l_orderkey").alias("src_key"),
+                   F.col("l_linenumber").alias("src_line"),
+                   line.alias("text"))
+    dims = [CsvDimension("okey", "long"),
+            CsvDimension("lineno", "int"),
+            CsvDimension("flag", "string", default="X"),
+            CsvDimension("ship", "date", format="yyyy-MM-dd HH:mm:ss")]
+    out = csv_parse(df, dims)
+    return out.select("src_key", "src_line", "okey",
+                      F.col("lineno").cast("int").alias("lineno"),
+                      "flag", "ship", "csv_ok")
+
+
+register(
+    "csv_parse_lineitem",
+    """P8: CSV split + typed dimensions with defaults (CSVParser.java:57-78).
+
+    Lines are synthesized from lineitem columns (orderkey,lineno,flag,ship);
+    %5 rows carry a blank flag (→ default 'X'), %13 rows are truncated to two
+    fields (absent → default/dropped). The oracle recomputes the expected
+    typed values straight from the source columns (generation ground truth).
+    """,
+    _csv_parse_lineitem,
+    lambda: """
+            SELECT l_orderkey AS src_key,
+                   l_linenumber AS src_line,
+                   l_orderkey AS okey,
+                   CAST(l_linenumber AS INT) AS lineno,
+                   CASE WHEN l_orderkey % 13 = 0 THEN 'X'
+                        WHEN l_linenumber % 5 = 0 THEN 'X'
+                        ELSE l_returnflag END AS flag,
+                   CASE WHEN l_orderkey % 13 = 0 THEN NULL
+                        ELSE CAST(epoch_ms(date_trunc('second', l_shipdate))
+                                  AS BIGINT) END AS ship,
+                   TRUE AS csv_ok
+            FROM lineitem
+        """)

@@ -24,8 +24,10 @@ inequality join (its IEJoin), proving the bucketization is exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from log_collector_spark.registry import events, register
 
 BUCKET_US = 600_000_000  # 10 minutes — equals the demo window length
 
@@ -152,3 +154,59 @@ def sql_interval_coverage(table: str, key: str, start_ms_sql: str,
         GROUP BY k
         ORDER BY k
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+def _coverage_intervals_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    ts_ms = F.expr(
+        "unix_micros(date_trunc('second', cast(ts as timestamp))) div 1000")
+    return interval_coverage(ev, "user_id", ts_ms)
+
+
+register(
+    "coverage_intervals_events",
+    """Per-user union of 10-min activity intervals (gaps-and-islands via
+    running-MAX(end), robust to contained intervals): islands + covered ms.""",
+    _coverage_intervals_events,
+    lambda: sql_interval_coverage(
+        "events", "user_id",
+        "epoch_ms(date_trunc('second', ts))"))
+
+
+def _interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    t_us = F.unix_micros(F.col("ts").cast("timestamp")).cast("long")
+    evs = ev.select(F.col("event_id"), t_us.alias("t_us"))
+    wins = (ev.filter(F.col("event_id") % 97 == 0)
+              .select(F.col("event_id").alias("window_id"),
+                      t_us.alias("start_us"),
+                      (t_us + 600_000_000).alias("end_us")))
+    out = interval_join(evs, wins)
+    return out.select("window_id", "event_id")
+
+
+register(
+    "interval_join_events",
+    """Time-interval join as a bucketized equi-join: every 97th event opens
+    a 10-minute window; events inside any window pair with it via a shuffle
+    equi-join on the time bucket (<= 2 buckets per window, lossless) instead
+    of the O(|W|*|E|) BroadcastNestedLoop a raw range predicate plans. The
+    DuckDB oracle runs the plain inequality join (IEJoin) to prove the pair
+    set is exact.""",
+    _interval_join_events,
+    lambda: """
+            WITH wins AS (
+                SELECT event_id AS window_id,
+                       epoch_us(ts) AS start_us,
+                       epoch_us(ts) + 600000000 AS end_us
+                FROM events WHERE event_id % 97 = 0
+            )
+            SELECT w.window_id, e.event_id
+            FROM wins w JOIN events e
+              ON epoch_us(e.ts) >= w.start_us
+             AND epoch_us(e.ts) < w.end_us
+        """)

@@ -19,8 +19,12 @@ hot conversation in one task. Strategy:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.registry import (docs, events, register, tbl, tx_glob,
+                                          tx_view)
 
 DEFAULT_SALT_BUCKETS = 8
 
@@ -908,3 +912,139 @@ def sql_selectivity_correlation_audit(table: str = "events",
         CROSS JOIN tot
         ORDER BY c.event_type, c.value_band
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+# Gson record for GROK_EXPR captures + provenance constants, keys in
+# TreeMap order: directory, filename, host, logtime, logtype, payload.
+# payload is a plain string capture (no ;json) whose only
+# escape-relevant characters in the generated corpus are double quotes.
+_TX_JSON = r"""
+        '{"directory":"transcripts","filename":"transcripts","host":"spark"'
+        || ',"logtime":' || CAST(CAST(epoch_ms(strptime(
+               regexp_extract(text, '^\[(\S+)\] \[([^\]]+)\] (.*)$', 2),
+               '%Y-%m-%d %H:%M:%S')) AS BIGINT) AS VARCHAR)
+        || ',"logtype":"'
+        || regexp_extract(text, '^\[(\S+)\] \[([^\]]+)\] (.*)$', 1)
+        || '","payload":"'
+        || replace(regexp_extract(text, '^\[(\S+)\] \[([^\]]+)\] (.*)$', 3),
+                   '"', '\"')
+        || '"}'
+    """
+
+register(
+    "selectivity_correlation",
+    """Independence-assumption selectivity error per (event_type,
+    value-band) cell — the multi-column-stats evidence table.""",
+    lambda spark, sf_dir: selectivity_correlation_audit(events(spark, sf_dir)),
+    sql_selectivity_correlation_audit)
+
+register(
+    "column_profile_events",
+    """Per-column value-distribution profile of the events feed (nulls,
+    distincts, modal value/share, candidate-key verdict).""",
+    lambda spark, sf_dir: column_profile(events(spark, sf_dir)),
+    sql_column_profile)
+
+register(
+    "shard_rebalance_audit",
+    """Mod-N vs consistent-hash-ring key movement when adding a shard
+    (8→9, 16 vnodes/shard): zero-shuffle narrow argmin over a literal
+    vnode array per key, one 2-row agg.""",
+    lambda spark, sf_dir: shard_rebalance_audit(docs(spark, sf_dir)),
+    sql_shard_rebalance_audit)
+
+register(
+    "dict_encoding_advisor_events",
+    """Dictionary-vs-plain storage advisor per string column (exact
+    bytes, parquet dictionary model).""",
+    lambda spark, sf_dir: dict_encoding_advisor(events(spark, sf_dir)),
+    sql_dict_encoding_advisor)
+
+register(
+    "delete_impact_audit",
+    """Copy-on-write DELETE planning: per-file rows touched / write
+    amplification for a deterministic ~5% key deletion list.""",
+    lambda spark, sf_dir: delete_impact_audit(
+        pl.load_transcripts(spark, sf_dir)),
+    lambda: sql_delete_impact_audit(tx_glob()))
+
+register(
+    "zonemap_audit_tx",
+    """Per-file min/max zone-map prunability for a one-day probe —
+    manifest-scale per-file agg; the file-skipping companion of
+    compaction_plan/rle_audit.""",
+    lambda spark, sf_dir: zonemap_audit(pl.load_transcripts(spark, sf_dir)),
+    lambda: sql_zonemap_audit(tx_glob()))
+
+
+def _broadcast_advisor_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
+    names = ("region", "nation", "supplier", "customer", "part")
+    return broadcast_advisor({n: tbl(spark, sf_dir, n) for n in names})
+
+
+register(
+    "broadcast_advisor_tables",
+    """Join-strategy advisor: measured rows + decoded bytes per dim table
+    vs the broadcast threshold, as an auditable relation.""",
+    _broadcast_advisor_tables,
+    lambda: sql_broadcast_advisor({
+        "region": (["r_name"], 1),
+        "nation": (["n_name"], 2),
+        "supplier": (["s_name"], 3),
+        "customer": (["c_name", "c_mktsegment"], 3),
+        "part": (["p_name", "p_brand", "p_type"], 3),
+    }))
+
+register(
+    "rle_audit_events",
+    """RLE-compressibility audit: run counts of event_type under the
+    clustered vs ingest orderings (the encoding-size decision).""",
+    lambda spark, sf_dir: rle_audit(tbl(spark, sf_dir, "events")),
+    sql_rle_audit)
+
+register(
+    "compaction_plan_tx",
+    """Small-files compaction plan over the transcripts directory:
+    cumulative-quota packing of name-ordered files into ~target-byte
+    output groups (metadata-scale window over per-file stats).""",
+    lambda spark, sf_dir: compaction_plan(pl.load_transcripts(spark, sf_dir)),
+    lambda: sql_compaction_plan(tx_glob()))
+
+
+def _tx_per_turn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    routed = pl.full_pipeline(spark, sf_dir)   # needs parsed_json (wide)
+    return ordered_salted(
+        routed.filter(F.col("parse_ok") & ~F.col("is_oversize"))
+              .select("conv_id", "turn_idx", "parsed_json"))
+
+
+register(
+    "tx_per_turn_json",
+    "Per-turn Gson-equal serialized records under stable ordering.",
+    _tx_per_turn_json,
+    lambda: f"""
+            SELECT conv_id, turn_idx, {_TX_JSON} AS parsed_json
+            FROM {tx_view()}
+            WHERE strlen(text) < 8192
+              AND trim(coalesce(text, '')) <> ''
+              AND text NOT LIKE 'corrupt#%'
+        """)
+
+
+def _zorder_audit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events(spark, sf_dir)
+    ts_ms = F.expr(
+        "unix_micros(date_trunc('second', cast(ts as timestamp))) div 1000")
+    return zorder_layout_audit(ev, "user_id", ts_ms)
+
+
+register(
+    "zorder_audit_events",
+    """Z-order vs linear layout: sum of per-file (user, day) min-max spans
+    — the file-skipping quality metric behind OPTIMIZE ZORDER BY.""",
+    _zorder_audit_events,
+    sql_zorder_layout_audit)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from log_collector_spark.registry import events, register
+
 METRICS = ["n_rows", "n_users", "value_floor_sum"]
 
 
@@ -59,3 +61,15 @@ def sql_unpivot_event_metrics(table: str = "events") -> str:
         UNPIVOT (metric_value FOR metric IN ({cols}))
         ORDER BY event_type, metric
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "unpivot_event_metrics",
+    """Native DataFrame.unpivot (melt) of the per-event-type metric frame
+    — the long-form twin of pivot_event_types.""",
+    lambda spark, sf_dir: unpivot_event_metrics(events(spark, sf_dir)),
+    sql_unpivot_event_metrics)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..textops import common as C
+from log_collector_spark.registry import events, register
 
 ACF_MAX_LAG = 48
 
@@ -734,3 +735,57 @@ def sql_hourly_gap_census(table: str = "events") -> str:
         FROM per
         ORDER BY event_type
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "hourly_gap_census",
+    """Hourly feed-completeness census per event type: present/missing
+    hour buckets over the type's own span + longest silent stretch.""",
+    lambda spark, sf_dir: hourly_gap_census(events(spark, sf_dir)),
+    sql_hourly_gap_census)
+
+register(
+    "cusum_changepoint_events",
+    """CUSUM single-changepoint scan per event type on the hourly count
+    series (exact integer, T-scaled deviations).""",
+    lambda spark, sf_dir: cusum_changepoint(events(spark, sf_dir)),
+    sql_cusum_changepoint)
+
+register(
+    "theil_sen_slope_events",
+    """Median-of-pairwise-slopes robust trend per event type over the
+    hourly count series (exact fixed-point, abs-split DIV).""",
+    lambda spark, sf_dir: theil_sen_slope(events(spark, sf_dir)),
+    sql_theil_sen_slope)
+
+register(
+    "crosscorr_types_events",
+    """Lead/lag cross-correlation between 'error' and 'purchase' hourly
+    series at lags ±6 (exact integer Pearson, isqrt-factor permille).""",
+    lambda spark, sf_dir: crosscorr_types(events(spark, sf_dir)),
+    sql_crosscorr_types)
+
+register(
+    "seasonal_naive_error_events",
+    """Week-over-week seasonal-naive backtest per complete day (the MASE
+    denominator for any fancier forecaster).""",
+    lambda spark, sf_dir: seasonal_naive_error(events(spark, sf_dir)),
+    sql_seasonal_naive_error)
+
+register(
+    "autocorr_hours_events",
+    """Exact integer lag-k autocorrelation (k=1..48) of the zero-filled
+    hourly count series — the seasonality detector.""",
+    lambda spark, sf_dir: autocorr_hourly(events(spark, sf_dir)),
+    sql_autocorr_hourly)
+
+register(
+    "dow_profile_events",
+    """Day-of-week × hour load profile with permille shares and peak-hour
+    flags; calendar keys from epoch-ms arithmetic (cross-engine safe).""",
+    lambda spark, sf_dir: dow_hour_profile(events(spark, sf_dir)),
+    sql_dow_hour_profile)

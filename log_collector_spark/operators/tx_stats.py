@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.registry import register, routed_slim, tx_view
+
 # The raw-parquet clean-row predicate (mirrors route_events' rules) for
 # DuckDB oracles, parameterized on the max-size the pipeline routes at.
 SQL_CLEAN = ("strlen(text) < 8192 AND trim(coalesce(text, '')) <> '' "
@@ -2239,3 +2242,256 @@ def sql_bestofn_gain(tx_view: str, ns: list[int] | None = None) -> str:
                CAST(SUM(best) // COUNT(*) AS BIGINT) AS mean_best_reward
         FROM stacked GROUP BY 1 ORDER BY n
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "tx_variant_stats",
+    """Payload stats via Spark 4 VARIANT (try_parse_json once +
+    try_variant_get per field) grouped by the payload's embedded tool.""",
+    lambda spark, sf_dir: variant_payload_stats(routed_slim(spark, sf_dir)),
+    lambda: sql_variant_payload_stats(tx_view()))
+
+register(
+    "tx_cube_tool_usage",
+    """CUBE(role_class, tool_category) turn/token rollup — all four
+    grouping combos in one partial-agg pass, grouping_id-disambiguated.""",
+    lambda spark, sf_dir: cube_tool_usage(routed_slim(spark, sf_dir)),
+    lambda: sql_cube_tool_usage(tx_view()))
+
+register(
+    "tx_latency_by_depth",
+    """Latency by conversation-depth decile — the context-length cost
+    curve; one conv window + a 10-row agg.""",
+    lambda spark, sf_dir: latency_by_depth(routed_slim(spark, sf_dir)),
+    lambda: sql_latency_by_depth(tx_view()))
+
+register(
+    "tx_cold_start",
+    """Per-tool first-call vs later-call latency ratio (cold-start cost);
+    one (conv, tool) window + bounded agg.""",
+    lambda spark, sf_dir: cold_start_ratio(routed_slim(spark, sf_dir)),
+    lambda: sql_cold_start_ratio(tx_view()))
+
+register(
+    "tx_shape_dupes",
+    """Conversation-level dedup on the interaction SHAPE (ordered
+    role/tool sequence): scripted/replayed sessions collapse onto few
+    shapes; two hash aggs, text never moves.""",
+    lambda spark, sf_dir: shape_dupes(routed_slim(spark, sf_dir)),
+    lambda: sql_shape_dupes(tx_view()))
+
+register(
+    "tx_latency_mad_udaf",
+    """Per-tool latency lower-median + MAD via pandas GROUPED_AGG UDAFs
+    (the §2.10 aggregate row); bounded-cardinality keys only — unbounded
+    keys use the histogram form.""",
+    lambda spark, sf_dir: tool_latency_mad_udaf(routed_slim(spark, sf_dir)),
+    lambda: sql_tool_latency_mad(tx_view()))
+
+register(
+    "tx_conv_stats_arrow",
+    """Per-conversation token stats via applyInArrow — the Arrow-native
+    grouped map (pyarrow.compute on columnar buffers, no pandas boxing).""",
+    lambda spark, sf_dir: conv_stats_arrow(routed_slim(spark, sf_dir)),
+    lambda: sql_conv_stats_arrow(tx_view()))
+
+register(
+    "tx_prefix_cache",
+    """Per-conversation prefix-cache hit rate (cachable vs processed token
+    mass) — the serving-cost multiplier a prefix cache removes; one
+    conv_id window + agg.""",
+    lambda spark, sf_dir: prefix_cache_rate(routed_slim(spark, sf_dir)),
+    lambda: sql_prefix_cache_rate(tx_view()))
+
+register(
+    "tx_schema_drift",
+    """Payload JSON key census per logtype (schema-drift monitor): regex
+    key extraction on the parsed capture, one (logtype, key) agg.""",
+    lambda spark, sf_dir: json_schema_drift(routed_slim(spark, sf_dir)),
+    lambda: sql_json_schema_drift(tx_view()))
+
+register(
+    "tx_token_midpoint",
+    """Token-mass pacing histogram: decile of the turn position where half
+    the conversation's tokens have arrived.""",
+    lambda spark, sf_dir: token_midpoint_histogram(routed_slim(spark, sf_dir)),
+    lambda: sql_token_midpoint_histogram(tx_view()))
+
+register(
+    "tx_parse_health",
+    """Hourly parse-health series over the RAW routed frame: blanks,
+    oversize, parse failures, clean rows, ok share — the reference's
+    counters unrolled into a time series.""",
+    lambda spark, sf_dir: parse_health_hourly(routed_slim(spark, sf_dir)),
+    lambda: sql_parse_health_hourly(tx_view()))
+
+register(
+    "tx_latency_bands",
+    """Hourly exact p50/p95 latency bands over the routed frame — the
+    dashboard time series, rank selection within hour partitions.""",
+    lambda spark, sf_dir: latency_bands_hourly(routed_slim(spark, sf_dir)),
+    lambda: sql_latency_bands_hourly(tx_view()))
+
+register(
+    "tx_redundancy",
+    """Per-conversation pooled TTR + repeated 3-gram share — the
+    multi-turn self-repetition signal; text moves only as 60-bit hashes.""",
+    lambda spark, sf_dir: conversation_redundancy(
+        pl.full_pipeline(spark, sf_dir)),
+    lambda: sql_conversation_redundancy(tx_view()))
+
+register(
+    "tx_tool_latency_percentiles",
+    """Per-tool EXACT p50/p90/p99 latency by rank selection — the SLA
+    table; value-deterministic under latency ties.""",
+    lambda spark, sf_dir: tool_latency_percentiles(routed_slim(spark, sf_dir)),
+    lambda: sql_tool_latency_percentiles(tx_view()))
+
+register(
+    "tx_retry_storms",
+    """Runs of >= 3 consecutive same-tool calls per conversation — the
+    agent retry-loop pathology, gaps-and-islands on the clean sequence.""",
+    lambda spark, sf_dir: retry_storms(routed_slim(spark, sf_dir)),
+    lambda: sql_retry_storms(tx_view()))
+
+register(
+    "tx_turn_holes",
+    """Per-conversation dropped-turn audit: hole counts + first hole index
+    in the routed turn sequence (the per-conv view of the failure
+    tallies).""",
+    lambda spark, sf_dir: turn_holes(routed_slim(spark, sf_dir)),
+    lambda: sql_turn_holes(tx_view()))
+
+register(
+    "tx_tool_latency",
+    """Per-tool latency profile over the ROUTED frame (full parse→enrich→
+    route path under the hash): one hash agg, JVM json-path extraction.""",
+    lambda spark, sf_dir: tool_latency(routed_slim(spark, sf_dir)),
+    lambda: sql_tool_latency(tx_view()))
+
+register(
+    "tx_role_alternation",
+    """Per-conversation same-role-adjacency report under stable
+    (conv_id, turn_idx) order — dialog-structure QA, one shuffle.""",
+    lambda spark, sf_dir: role_alternation(routed_slim(spark, sf_dir)),
+    lambda: sql_role_alternation(tx_view()))
+
+register(
+    "tx_conversation_stats",
+    "Per-conversation turn counts / span / role mix over routed rows.",
+    lambda spark, sf_dir: conversation_stats_ms(routed_slim(spark, sf_dir)),
+    lambda: sql_conversation_stats_ms(tx_view()))
+
+register(
+    "tx_tokens_by_role_class",
+    """Token totals per role CLASS — exercises the role broadcast lookup
+    (left-join misses surface as a NULL class group).""",
+    lambda spark, sf_dir: tokens_by_role_class(routed_slim(spark, sf_dir)),
+    lambda: sql_tokens_by_role_class(tx_view()))
+
+register(
+    "tx_response_gaps",
+    """Assistant response-latency per conversation (user→assistant adjacent
+    pairs under stable turn order) over the routed frame.""",
+    lambda spark, sf_dir: response_gaps(routed_slim(spark, sf_dir)),
+    lambda: sql_response_gaps(tx_view()))
+
+register(
+    "tx_tool_chain_bigrams",
+    """Tool-call transition counts on adjacent tool turns (workflow mining
+    over agent transcripts).""",
+    lambda spark, sf_dir: tool_chain_bigrams(routed_slim(spark, sf_dir)),
+    lambda: sql_tool_chain_bigrams(tx_view()))
+
+register(
+    "tx_tool_diversity",
+    """Per-conversation tool mix: distinct tools + dominant-tool permille
+    (loop detection) over the routed frame.""",
+    lambda spark, sf_dir: tool_diversity(routed_slim(spark, sf_dir)),
+    lambda: sql_tool_diversity(tx_view()))
+
+register(
+    "tx_role_matrix",
+    """Role→role transition matrix over stable turn order (structure
+    fingerprint of the dialog corpus).""",
+    lambda spark, sf_dir: role_matrix(routed_slim(spark, sf_dir)),
+    lambda: sql_role_matrix(tx_view()))
+
+register(
+    "tx_first_response_ms",
+    "Time-to-first-assistant-response per conversation (SLA metric).",
+    lambda spark, sf_dir: first_response_ms(routed_slim(spark, sf_dir)),
+    lambda: sql_first_response_ms(tx_view()))
+
+register(
+    "tx_slow_streaks",
+    """Max consecutive-slow-turn run per conversation (gaps-and-islands,
+    one conv_id exchange) over the routed frame.""",
+    lambda spark, sf_dir: slow_streaks(routed_slim(spark, sf_dir)),
+    lambda: sql_slow_streaks(tx_view()))
+
+register(
+    "tx_context_cutoff",
+    """Context-window truncation point per conversation: running token
+    prefix sums in stable turn order, budget overflow turn.""",
+    lambda spark, sf_dir: context_cutoff(routed_slim(spark, sf_dir)),
+    lambda: sql_context_cutoff(tx_view()))
+
+register(
+    "tx_context_depth",
+    """Serving-time context depth histogram: per-turn count of trailing
+    turns visible under the token budget — one fixed-offset RANGE frame
+    over the conv token cumsum, no self-join.""",
+    lambda spark, sf_dir: context_depth(routed_slim(spark, sf_dir)),
+    lambda: sql_context_depth(tx_view()))
+
+register(
+    "tx_sft_examples",
+    """SFT dataset assembly: one example per clean assistant turn with
+    prompt/completion token accounting (loss-mask boundary) and a
+    context-budget fit flag; one conv-keyed window, no join.""",
+    lambda spark, sf_dir: sft_examples(routed_slim(spark, sf_dir)),
+    lambda: sql_sft_examples(tx_view()))
+
+register(
+    "tx_dpo_pairs",
+    """DPO preference-pair assembly: chosen/rejected assistant turn per
+    conversation by integer token-throughput reward with deterministic
+    symmetric tie-breaks and the reward margin; one conv-keyed exchange
+    (two row_number orders + one agg on the same key).""",
+    lambda spark, sf_dir: dpo_pairs(routed_slim(spark, sf_dir)),
+    lambda: sql_dpo_pairs(tx_view()))
+
+register(
+    "tx_length_bias",
+    """Reward length-bias audit: exact Kendall tau-a between completion
+    length and per-token latency per tool category, computed on a 16x16
+    banded grid (constant-size pair join — no global sort, no O(n^2)).""",
+    lambda spark, sf_dir: length_bias(routed_slim(spark, sf_dir)),
+    lambda: sql_length_bias(tx_view()))
+
+register(
+    "tx_bestofn_gain",
+    """Best-of-n sampling gain curve: mean best reward among the first n
+    assistant turns (n in 1/2/4/8, same-population prefix max) — one
+    conv-keyed exchange + a constant-size explode.""",
+    lambda spark, sf_dir: bestofn_gain(routed_slim(spark, sf_dir)),
+    lambda: sql_bestofn_gain(tx_view()))
+
+register(
+    "tx_peak_inflight",
+    """Sweep-line max-overlap: peak concurrent tool calls per conversation
+    (half-open intervals; -1 sorts before +1 at equal instants).""",
+    lambda spark, sf_dir: peak_inflight(routed_slim(spark, sf_dir)),
+    lambda: sql_peak_inflight(tx_view()))
+
+register(
+    "tx_latency_inversions",
+    """Per-conversation latency inversion count: O(n log n) BIT kernel in
+    applyInPandas, verified against the O(n^2) pair-join oracle.""",
+    lambda spark, sf_dir: latency_inversions(routed_slim(spark, sf_dir)),
+    lambda: sql_latency_inversions(tx_view()))

@@ -51,6 +51,8 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from log_collector_spark.streaming.pipeline import read_transcript_stream
+from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.registry import register, tx_view
 
 OUT_SCHEMA = ("conv_id STRING, n_turns BIGINT, n_tool_calls BIGINT, "
               "first_ms BIGINT, last_ms BIGINT, duration_ms BIGINT")
@@ -341,3 +343,17 @@ def start_sft_example_stream(spark: SparkSession, input_dir: str,
             .option("checkpointLocation", checkpoint_loc)
             .trigger(availableNow=True)
             .format("parquet").option("path", out_dir).start())
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "tx_sessions",
+    """Gap-rule conversation sessionization (batch twin of the
+    transformWithState streaming sessionizer): sessions split where the
+    inter-turn gap exceeds 2 minutes; per-session turn/tool-call counts
+    and epoch-ms bounds.""",
+    lambda spark, sf_dir: gap_sessions(pl.load_transcripts(spark, sf_dir)),
+    lambda: sql_gap_sessions(tx_view()))

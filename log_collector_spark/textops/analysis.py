@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, events, register, tbl
 
 # "BPE-ish" lexer: letter runs, digit runs, single other-symbols — the shape
 # of a byte-pair pre-tokenizer's coarse split (public GPT-2 style pattern,
@@ -4168,3 +4169,399 @@ def sql_readability_census(table: str = "documents",
         FROM per_doc
         GROUP BY 1 ORDER BY 1
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "readability_census",
+    """Integer Flesch reading-ease band histogram (vowel-group syllable
+    proxy) — the no-model prose-vs-legalese curation screen.""",
+    lambda spark, sf_dir: readability_census(docs(spark, sf_dir)),
+    sql_readability_census)
+
+register(
+    "neyman_allocation",
+    """Minimum-variance (Neyman) stratified sample allocation across
+    sources vs proportional allocation — integer moments + exact isqrt.""",
+    lambda spark, sf_dir: neyman_allocation(docs(spark, sf_dir)),
+    sql_neyman_allocation)
+
+register(
+    "good_turing_vocab",
+    """Good-Turing unseen-mass + bias-corrected Chao1 vocabulary-size
+    estimate from the token frequency-of-frequencies (one row).""",
+    lambda spark, sf_dir: good_turing_vocab(docs(spark, sf_dir)),
+    sql_good_turing_vocab)
+
+register(
+    "source_concentration",
+    """Herfindahl concentration of per-source token shares + effective
+    source count — the corpus-monoculture dashboard (one row).""",
+    lambda spark, sf_dir: source_concentration(docs(spark, sf_dir)),
+    sql_source_concentration)
+
+register(
+    "bm25_topk_documents",
+    """Integer BM25 top-10 for the fixed keyword query — rational IDF
+    surrogate (no transcendentals), fixed-point k1/b, tf shuffle filtered
+    to query terms pre-agg, TakeOrderedAndProject top-k.""",
+    lambda spark, sf_dir: bm25_topk(docs(spark, sf_dir)),
+    sql_bm25_topk)
+
+register(
+    "quality_calibration_documents",
+    """Per-source quality mass across GLOBAL histogram deciles — drift
+    monitor; the cumulative window runs over a bounded <=1001-row value
+    histogram, never over docs.""",
+    lambda spark, sf_dir: quality_calibration(docs(spark, sf_dir)),
+    sql_quality_calibration)
+
+register(
+    "temperature_mixture_documents",
+    """Temperature-scaled per-source sampling shares (T=1 / T=2 via exact
+    integer sqrt / uniform) — the multilingual mixing knob.""",
+    lambda spark, sf_dir: temperature_mixture(docs(spark, sf_dir)),
+    sql_temperature_mixture)
+
+register(
+    "rouge_pairs_documents",
+    """Clipped ROUGE-1/2 recall over deterministic (even, even+1) doc
+    pairs — the summarization-eval primitive as a corpus op.""",
+    lambda spark, sf_dir: rouge_pairs(docs(spark, sf_dir)),
+    sql_rouge_pairs)
+
+register(
+    "rake_phrases_documents",
+    """RAKE keyphrases with data-derived stoplist: degree/frequency word
+    scores, top-20 phrases by summed integer score.""",
+    lambda spark, sf_dir: rake_phrases(docs(spark, sf_dir)),
+    sql_rake_phrases)
+
+register(
+    "watermark_bias_documents",
+    """Statistical-watermark screen per source: green-list token share +
+    integer chi-square score; one narrow hash pass, zero joins.""",
+    lambda spark, sf_dir: watermark_bias(docs(spark, sf_dir)),
+    sql_watermark_bias)
+
+register(
+    "len_quality_grid_documents",
+    """Joint global length-decile × quality-decile histogram — the
+    cut-line interaction grid; bounded value histograms broadcast back.""",
+    lambda spark, sf_dir: len_quality_grid(docs(spark, sf_dir)),
+    sql_len_quality_grid)
+
+register(
+    "bigram_coherence_documents",
+    """Model-free fluency proxy: per-doc share of bigrams the rest of the
+    corpus uses (df >= 5); hash-keyed vocab join, never broadcast.""",
+    lambda spark, sf_dir: bigram_coherence(docs(spark, sf_dir)),
+    sql_bigram_coherence)
+
+register(
+    "quality_vs_dup_documents",
+    """Duplicate share per stopword-ratio decile — filter-ordering
+    evidence (dedup before vs after the quality gate).""",
+    lambda spark, sf_dir: quality_vs_dup(docs(spark, sf_dir)),
+    sql_quality_vs_dup)
+
+register(
+    "pii_redact_events",
+    """PII redaction transform: email → IP → digit-run masking chained so
+    each stage counts replacements actually performed; pure JVM-side
+    regexp projection, scan-speed at any corpus size.""",
+    lambda spark, sf_dir: pii_redact(events(spark, sf_dir)),
+    sql_pii_redact)
+
+register(
+    "token_tvd_sources",
+    """Pairwise exact total-variation distance between source unigram
+    distributions — inner-join-only closed form, no dense vocab grid.""",
+    lambda spark, sf_dir: token_tvd_sources(docs(spark, sf_dir)),
+    sql_token_tvd_sources)
+
+register(
+    "token_coverage_documents",
+    """Token-weighted length quantiles: smallest length cutoff retaining
+    each target permille of corpus tokens (max-seq-len curation stat).""",
+    lambda spark, sf_dir: token_coverage_cutoff(docs(spark, sf_dir)),
+    sql_token_coverage_cutoff)
+
+register(
+    "freq_spectrum_documents",
+    "Type-frequency spectrum of the documents corpus (Zipf health).",
+    lambda spark, sf_dir: freq_spectrum(docs(spark, sf_dir)),
+    sql_freq_spectrum)
+
+register(
+    "sliding_hll_users_events",
+    """Rolling 24h distinct-user gauge per hour from slid HLL registers
+    (dense hour×register grid + range window — never rescans raw rows).""",
+    lambda spark, sf_dir: sliding_hll_users(tbl(spark, sf_dir, "events")),
+    sql_sliding_hll_users)
+
+register(
+    "vocab_drift_documents",
+    """Top token-rate movers between two deterministic corpus halves
+    (the snapshot-drift freshness monitor).""",
+    lambda spark, sf_dir: vocab_drift(docs(spark, sf_dir)),
+    sql_vocab_drift)
+
+register(
+    "weighted_sample_documents",
+    """Deterministic weighted bottom-k sample (integer Efraimidis-
+    Spirakis rank keys — RNG-free, append-stable).""",
+    lambda spark, sf_dir: weighted_sample(docs(spark, sf_dir)),
+    sql_weighted_sample)
+
+register(
+    "curriculum_stages_documents",
+    """Curriculum staging: TTR-difficulty value histogram cut into 5
+    equal-population stages with per-stage doc/token accounting — stage
+    assignment on the <= 1001-row histogram, no global sort.""",
+    lambda spark, sf_dir: curriculum_stages(tbl(spark, sf_dir, "documents")),
+    sql_curriculum_stages)
+
+register(
+    "judge_agreement_documents",
+    """Cohen's kappa (permille, exact integer) between the stopword-rate
+    and word-length quality judges — one scan to a 3x3 contingency grid,
+    margins and kappa on the constant-size grid.""",
+    lambda spark, sf_dir: judge_agreement(tbl(spark, sf_dir, "documents")),
+    sql_judge_agreement)
+
+register(
+    "dataset_card_documents",
+    """Per-source dataset-card row: docs/tokens/mean length/langs/exact
+    dup rate/vocab size — the datasheet header block, two aggs over one
+    projection.""",
+    lambda spark, sf_dir: dataset_card(tbl(spark, sf_dir, "documents")),
+    sql_dataset_card)
+
+register(
+    "fim_split_documents",
+    """FIM preprocessing accounting: per-source prefix/middle/suffix
+    token sums at deterministic h60 cut points; one scan, one agg.""",
+    lambda spark, sf_dir: fim_split(tbl(spark, sf_dir, "documents")),
+    sql_fim_split)
+
+register(
+    "scaling_budget_documents",
+    """Chinchilla budget advisor: per model size, token budget,
+    milli-epochs over this corpus, unique-token deficit.""",
+    lambda spark, sf_dir: scaling_budget_advisor(
+        tbl(spark, sf_dir, "documents")),
+    sql_scaling_budget_advisor)
+
+register(
+    "epoch_shuffle_documents",
+    """Data-loader reshuffle audit: cross-epoch same-shard rate vs
+    chance + epoch-0 shard balance, salted h60 assignment.""",
+    lambda spark, sf_dir: epoch_shuffle_audit(tbl(spark, sf_dir, "documents")),
+    sql_epoch_shuffle_audit)
+
+register(
+    "padding_waste_documents",
+    """Power-of-two length-bucket padding-waste table (dynamic-batching
+    ladder audit); constant-size agg, bit-length bucketing.""",
+    lambda spark, sf_dir: padding_waste(tbl(spark, sf_dir, "documents")),
+    sql_padding_waste)
+
+register(
+    "order_fingerprint_documents",
+    """Per-shard order-sensitive data-order checksum over the salted
+    stream order — the loader's reproducibility receipt.""",
+    lambda spark, sf_dir: data_order_fingerprint(
+        tbl(spark, sf_dir, "documents")),
+    sql_data_order_fingerprint)
+
+register(
+    "quality_score_documents",
+    "Text quality features + keep/drop flag (pretraining filter).",
+    lambda spark, sf_dir: quality_features(docs(spark, sf_dir)),
+    sql_quality_features)
+
+register(
+    "lang_id_documents",
+    "Stopword/CJK language-ID heuristic.",
+    lambda spark, sf_dir: lang_id(docs(spark, sf_dir)),
+    sql_lang_id)
+
+register(
+    "lang_id_confusion",
+    """Confusion matrix of the lang-ID heuristic vs the gold lang label
+    (diagonal row_permille = per-language recall).""",
+    lambda spark, sf_dir: lang_id_confusion(docs(spark, sf_dir)),
+    sql_lang_id_confusion)
+
+register(
+    "fingerprint_documents",
+    "Normalized md5 + 60-bit document fingerprints.",
+    lambda spark, sf_dir: fingerprint(docs(spark, sf_dir)),
+    sql_fingerprint)
+
+register(
+    "split_documents",
+    """Deterministic 80/10/10 train/val/test split by salted id hash —
+    stable under corpus growth, shuffle-free (unlike randomSplit).""",
+    lambda spark, sf_dir: split_assign(docs(spark, sf_dir)).select(
+        "doc_id", "split_bucket", "split"),
+    sql_split_assign)
+
+register(
+    "domain_cap_documents",
+    """Per-source cap by salted-hash rank (domain mixing): deterministic
+    uniform sample within each domain, one shuffle on source.""",
+    lambda spark, sf_dir: domain_cap(docs(spark, sf_dir), cap=10).select(
+        "doc_id", "source", "rk", "kept"),
+    lambda: sql_domain_cap(cap=10))
+
+register(
+    "repetition_documents",
+    "Gopher-style within-doc repetition: duplicate/top bigram permille.",
+    lambda spark, sf_dir: repetition_signals(docs(spark, sf_dir)),
+    sql_repetition_signals)
+
+register(
+    "vocab_stats_documents",
+    "Per-source vocabulary stats: docs, tokens, vocab size, TTR permille.",
+    lambda spark, sf_dir: vocab_stats(docs(spark, sf_dir)),
+    sql_vocab_stats)
+
+register(
+    "pii_scan_events",
+    "Per-event-type PII-class regex counts over the props payload.",
+    lambda spark, sf_dir: pii_scan(events(spark, sf_dir)),
+    sql_pii_scan)
+
+register(
+    "kmv_distinct_documents",
+    "Per-source KMV distinct-token sketch vs exact, with error permille.",
+    lambda spark, sf_dir: kmv_distinct(docs(spark, sf_dir)),
+    sql_kmv_distinct)
+
+register(
+    "kmv_overlap_sources",
+    """Pairwise source Jaccard from KMV union sketches (k longs per source
+    shuffle, then driver-scale pair algebra) vs the exact baseline.""",
+    lambda spark, sf_dir: kmv_overlap(docs(spark, sf_dir)),
+    sql_kmv_overlap)
+
+register(
+    "top_terms_documents",
+    "Per-source top-5 tokens: (group, token) partial agg + rank window.",
+    lambda spark, sf_dir: top_terms_per_source(docs(spark, sf_dir)),
+    sql_top_terms_per_source)
+
+register(
+    "hll_user_rollup_events",
+    """HLL mergeability: hourly distinct-user registers MAXed up to daily
+    estimates (sketches merged, never rebuilt from raw rows).""",
+    lambda spark, sf_dir: hll_user_rollup(tbl(spark, sf_dir, "events")),
+    sql_hll_user_rollup)
+
+register(
+    "stratified_sample_documents",
+    "Exact per-source quotas via hash-rank (RNG-free, unlike sampleBy).",
+    lambda spark, sf_dir: stratified_sample(docs(spark, sf_dir)),
+    sql_stratified_sample)
+
+register(
+    "token_rarity_documents",
+    """Rare-token fraction per doc (corpus count <= 2): the gibberish/OCR
+    screen; vocab-side join, shuffle carries (token, count) partials.""",
+    lambda spark, sf_dir: token_rarity(docs(spark, sf_dir)),
+    sql_token_rarity)
+
+register(
+    "normalize_documents",
+    """Text-normalization audit: canonical form lengths, control-char count,
+    changed flag, 60-bit hash of the normalized text (narrow, no shuffle).""",
+    lambda spark, sf_dir: normalize_profile(docs(spark, sf_dir)),
+    sql_normalize_profile)
+
+register(
+    "cooccur_topk_documents",
+    """Windowed token co-occurrence: top-30 pairs within 3 tokens, with
+    integer lift score — collocation mining, linear in corpus tokens.""",
+    lambda spark, sf_dir: cooccur_topk(docs(spark, sf_dir)),
+    sql_cooccur_topk)
+
+register(
+    "cms_heavy_hitters",
+    """Count-min sketch (4x512, mergeable cells) probed for the exact top-20
+    tokens; est >= exact by construction, overcount is the audit column.""",
+    lambda spark, sf_dir: cms_heavy_hitters(docs(spark, sf_dir)),
+    sql_cms_heavy_hitters)
+
+register(
+    "token_budget_documents",
+    """Greedy per-source token-budget sampling in salted-hash order (the
+    pretraining mixture op: hit a token target per domain, whole docs only,
+    append-stable) — one shuffle on source + a per-group running sum.""",
+    lambda spark, sf_dir: token_budget_sample(docs(spark, sf_dir)),
+    sql_token_budget_sample)
+
+register(
+    "tfidf_topk_documents",
+    """Per-doc top-3 keywords by integer TF-IDF (tf * 1e6 // df) — token
+    shuffle join (vocab not broadcastable at corpus scale) + per-doc top-k
+    window.""",
+    lambda spark, sf_dir: tfidf_topk(docs(spark, sf_dir)),
+    sql_tfidf_topk)
+
+register(
+    "source_overlap_documents",
+    """Cross-source contamination matrix: distinct shared 8-gram shingles
+    per source pair — join fan-out bounded by (#sources choose 2) per
+    shingle, independent of corpus size.""",
+    lambda spark, sf_dir: source_overlap(docs(spark, sf_dir)),
+    sql_source_overlap)
+
+register(
+    "quality_sample_documents",
+    """Quality-weighted deterministic subsampling: keep a doc iff
+    h60(salt||id) % 1000 < alpha-token permille — the soft quality filter,
+    RNG-free and append-stable; pure narrow projection, zero shuffle.""",
+    lambda spark, sf_dir: quality_sample(docs(spark, sf_dir)),
+    sql_quality_sample)
+
+register(
+    "keyword_search_documents",
+    """Conjunctive keyword search (AND over the token set): distinct-token
+    semi-join + count == k; the shuffle carries at most |docs|*k rows.""",
+    lambda spark, sf_dir: keyword_search(docs(spark, sf_dir)),
+    sql_keyword_search)
+
+register(
+    "mixture_weights_documents",
+    """Data-mixing rates: per-source token shares vs hash-derived target
+    weights -> clamped sampling permille; one hash agg + broadcast
+    totals.""",
+    lambda spark, sf_dir: mixture_weights(docs(spark, sf_dir)),
+    sql_mixture_weights)
+
+register(
+    "bpe_pair_counts_documents",
+    """BPE merge-step statistic: corpus-wide adjacent char-pair counts,
+    narrow nested transform + hash agg + TakeOrderedAndProject top-20.""",
+    lambda spark, sf_dir: bpe_pair_counts(docs(spark, sf_dir)),
+    sql_bpe_pair_counts)
+
+register(
+    "hll_distinct_documents",
+    """First-principles HyperLogLog distinct-token sketch per source: 64
+    integer registers, fixed-point harmonic mean, linear-counting table —
+    register MAX agg shuffles <= 64 rows per group.""",
+    lambda spark, sf_dir: hll_distinct(docs(spark, sf_dir)),
+    sql_hll_distinct)
+
+register(
+    "length_histogram_documents",
+    """Per-source token-length histogram over power-of-2 buckets — one
+    map-side-combined hash agg; buckets merge across shards.""",
+    lambda spark, sf_dir: length_histogram(docs(spark, sf_dir)),
+    sql_length_histogram)

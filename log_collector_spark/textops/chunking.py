@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, register
 
 # 64-token windows advancing 48 tokens (16-token overlap) — sandbox-sized
 # stand-ins for the usual 2048/1536; both are knobs, the math is scale-free.
@@ -225,3 +226,29 @@ def chunk_documents_udtf(df: DataFrame, w: int = CHUNK_W,
     return spark.sql(
         "SELECT c.doc_id, c.chunk_idx, c.n_chunk_tokens, c.chunk_h60 "
         "FROM _chunk_udtf_in, LATERAL chunk_plan_udtf(doc_id, text) AS c")
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "udtf_chunk_documents",
+    """Spark 4 Python UDTF lateral join emitting the chunk plan — pinned
+    to the declarative chunk_documents oracle (same rows, same hashes).""",
+    lambda spark, sf_dir: chunk_documents_udtf(docs(spark, sf_dir)),
+    sql_chunk_documents)
+
+register(
+    "chunk_documents",
+    """Context-window chunking: 64-token windows / 48-token stride per doc —
+    a pure narrow explode (no shuffle at any corpus size).""",
+    lambda spark, sf_dir: chunk_documents(docs(spark, sf_dir)),
+    sql_chunk_documents)
+
+register(
+    "pack_documents",
+    """GPT-style sequence packing: concatenate-then-split the token stream
+    every 512 tokens in salted-hash order, shard-local windows.""",
+    lambda spark, sf_dir: pack_sequences(docs(spark, sf_dir)),
+    sql_pack_sequences)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from . import common as C
 from .dedup import SHINGLE_K, doc_shingles, _sql_doc_shingles
+from log_collector_spark.registry import docs, register
 
 # C(A→B) >= CONT_NUM/CONT_DEN flags A as (near-)contained in B. 6/10 sits
 # between the Jaccard near-dup band (0.3) and exact duplication, so the
@@ -123,3 +124,15 @@ def sql_containment_pairs(table: str = "documents",
         WHERE inter * {den} >= {num} * size_sub
         ORDER BY doc_sub, doc_sup
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "containment_pairs",
+    """Asymmetric shingle containment (quote/subset detection) — ordered
+    (contained, container) pairs with C(A→B) >= 0.6.""",
+    lambda spark, sf_dir: containment_pairs(docs(spark, sf_dir)),
+    sql_containment_pairs)

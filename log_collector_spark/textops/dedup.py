@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, embs, register
 
 SHINGLE_K = 3
 # Jaccard threshold as exact fraction num/den (integer cross-multiply)
@@ -2413,3 +2414,279 @@ def sql_dedup_roi_curve(table: str = "documents",
         LEFT JOIN touched tc USING (threshold_permille)
         ORDER BY t.threshold_permille
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "winnowing_pairs_documents",
+    """MOSS winnowing: min-hash of every 4-shingle window (narrow per-row
+    selection, ~2/(w+1) of shingles kept), inverted-index pair join with
+    the max_df boilerplate guard.""",
+    lambda spark, sf_dir: winnowing_pairs(docs(spark, sf_dir)),
+    sql_winnowing_pairs)
+
+register(
+    "dedup_roi_curve_documents",
+    """Pairs fired / docs touched / docs removed per Jaccard threshold —
+    the evidence curve for picking the dedup cut before a 100-TB run.""",
+    lambda spark, sf_dir: dedup_roi_curve(docs(spark, sf_dir)),
+    sql_dedup_roi_curve)
+
+register(
+    "dup_ngram_coverage",
+    """Per-doc permille of token positions covered by a corpus-duplicated
+    k-gram (interval-union coverage, the Lee et al. 2022 dedup report
+    metric); shingle-hash agg + one lead() window over hit positions.""",
+    lambda spark, sf_dir: dup_ngram_coverage(docs(spark, sf_dir)),
+    sql_dup_ngram_coverage)
+
+register(
+    "boilerplate_source_matrix",
+    """Cross-source boilerplate-LINE matrix: distinct shared k-word
+    segments (the line-dedup unit) per source pair.""",
+    lambda spark, sf_dir: boilerplate_source_matrix(docs(spark, sf_dir)),
+    sql_boilerplate_source_matrix)
+
+register(
+    "cluster_size_histogram",
+    "Near-dup component-size distribution over MinHash-LSH CC labels.",
+    lambda spark, sf_dir: cluster_size_histogram(docs(spark, sf_dir)),
+    sql_cluster_size_histogram)
+
+register(
+    "corpus_token_yield",
+    """Cleaning-funnel yield in TOKEN MASS per source (quality → dedup →
+    decontamination) — the tokens-kept accounting of a corpus release.""",
+    lambda spark, sf_dir: corpus_token_yield(docs(spark, sf_dir)),
+    sql_corpus_token_yield)
+
+register(
+    "neardup_label_confusion",
+    """Near-dup pairs grouped by label pair — off-diagonal cells are the
+    label-noise review queue; one label join over the guarded pair graph.""",
+    lambda spark, sf_dir: neardup_label_confusion(embs(spark, sf_dir)),
+    sql_neardup_label_confusion)
+
+register(
+    "substring_span_pairs",
+    """Exact-substring span dedup: longest shared contiguous token span
+    per candidate pair via positional shingle anchors on one diagonal
+    (gaps-and-islands) — position-aware where the set-similarity family
+    is not.""",
+    lambda spark, sf_dir: substring_span_pairs(docs(spark, sf_dir)),
+    sql_substring_span_pairs)
+
+
+def _semantic_decontaminate_embeddings(spark: SparkSession,
+                                       sf_dir: str) -> DataFrame:
+    vectors = embs(spark, sf_dir)
+    return semantic_decontaminate(
+        vectors.filter(F.col("vec_id") % 50 != 0),
+        vectors.filter(F.col("vec_id") % 50 == 0))
+
+
+register(
+    "semantic_decontaminate_embeddings",
+    """Embedding-level train↔eval decontamination: sign-LSH buckets +
+    exact integer-cosine verify; the eval slice (vec_id % 50 == 0) is the
+    broadcast side.""",
+    _semantic_decontaminate_embeddings,
+    sql_semantic_decontaminate)
+
+register(
+    "ngram_jaccard_maxdf",
+    """Near-dup pairs with the hot-shingle guard ON (max_df): the web-scale
+    configuration — ubiquitous shingles are dropped from the inverted index
+    before the self-join, capping per-key join fan-out at max_df².""",
+    lambda spark, sf_dir: ngram_jaccard_pairs(
+        docs(spark, sf_dir),
+        max_df=NGRAM_MAX_DF),
+    sql_ngram_jaccard_pairs_maxdf)
+
+
+def _decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = docs(spark, sf_dir)
+    return decontaminate(corpus.filter(F.col("doc_id") % 50 != 0),
+                         corpus.filter(F.col("doc_id") % 50 == 0))
+
+
+register(
+    "decontaminate_documents",
+    """Eval-set decontamination: flag train docs (doc_id % 50 != 0) sharing
+    any 8-gram with the synthetic eval slice (doc_id % 50 == 0).""",
+    _decontaminate_documents,
+    sql_decontaminate)
+
+register(
+    "boilerplate_documents",
+    "C4-style corpus boilerplate: 3-word segments in >= 3 distinct docs.",
+    lambda spark, sf_dir: boilerplate_segments(docs(spark, sf_dir)),
+    sql_boilerplate_segments)
+
+register(
+    "exact_dedup_documents",
+    "Exact dedup summary via fingerprint hash-groupBy.",
+    lambda spark, sf_dir: exact_dedup_summary(docs(spark, sf_dir)),
+    sql_exact_dedup_summary)
+
+register(
+    "ngram_jaccard_pairs",
+    "Near-dup pairs: 3-gram shingle Jaccard >= 0.3, inverted-index join.",
+    lambda spark, sf_dir: ngram_jaccard_pairs(docs(spark, sf_dir)),
+    sql_ngram_jaccard_pairs)
+
+register(
+    "minhash_lsh_pairs",
+    "MinHash(8 perms) + LSH(4 bands) candidates, exactly verified.",
+    lambda spark, sf_dir: minhash_lsh_pairs(docs(spark, sf_dir)),
+    sql_minhash_lsh_pairs)
+
+register(
+    "dedup_clusters",
+    """Connected components over MinHash near-dup pairs → one canonical
+    doc per component (min-label propagation to fixpoint).""",
+    lambda spark, sf_dir: dedup_clusters(docs(spark, sf_dir)),
+    sql_dedup_clusters)
+
+register(
+    "keep_best_dedup_documents",
+    """Keep-BEST canonicalization per near-dup cluster (keep-longest rule,
+    packed-int64 argmax — engine-order-free).""",
+    lambda spark, sf_dir: keep_best_per_cluster(docs(spark, sf_dir)),
+    sql_keep_best_per_cluster)
+
+register(
+    "dedup_clusters_star",
+    """O(log n)-round connected components (large-star/small-star) — the
+    diameter-robust CC; same output contract as dedup_clusters.""",
+    lambda spark, sf_dir: dedup_clusters_star(docs(spark, sf_dir)),
+    sql_dedup_clusters)
+
+register(
+    "simhash_pairs",
+    """SimHash-60 pairs within hamming<=3 via lossless 15-bit-band blocking
+    (4 bands × 32,768 keys — the Manku-et-al web-corpus configuration).""",
+    lambda spark, sf_dir: simhash_pairs(docs(spark, sf_dir)),
+    sql_simhash_pairs)
+
+register(
+    "embedding_neardup",
+    """Embedding near-dup pairs: sign-LSH bucket + integer-cosine verify.
+    The scale-safe GUARDED variant (overfull buckets sub-split with the full
+    8-plane key — the max_df analog for the embedding family) is the public
+    default; the unguarded 4-plane form is a pytest-only oracle baseline.""",
+    lambda spark, sf_dir: embedding_neardup_pairs(embs(spark, sf_dir)),
+    sql_embedding_neardup_pairs)
+
+register(
+    "split_leakage",
+    """Near-dup pairs straddling the train/val/test hash split — the
+    eval-contamination audit run after splitting, before training.""",
+    lambda spark, sf_dir: split_leakage(embs(spark, sf_dir)),
+    sql_split_leakage)
+
+register(
+    "cluster_split_assign",
+    """Leak-free splitting: hash split at near-dup cluster granularity —
+    duplicate families never straddle train/val/test (the remedy for
+    what split_leakage audits).""",
+    lambda spark, sf_dir: cluster_split_assign(embs(spark, sf_dir)),
+    sql_cluster_split_assign)
+
+
+def _incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = docs(spark, sf_dir)
+    seen = (corpus.filter(F.col("doc_id") % 7 == 0)
+                .select(F.md5(_norm_text(F.col("text"))).alias("fp")))
+    new = corpus.filter(F.col("doc_id") % 7 != 0)
+    return incremental_dedup(new, seen)
+
+
+register(
+    "incremental_dedup",
+    """Batch-vs-committed-corpus dedup: anti-join of new-batch fingerprints
+    (doc_id % 7 != 0) against the committed set (% 7 == 0); within-batch
+    min-id canonical pick. Only (fp, id) pairs shuffle.""",
+    _incremental_dedup,
+    lambda: sql_incremental_dedup(
+        new_pred="doc_id % 7 <> 0", seen_pred="doc_id % 7 = 0"))
+
+register(
+    "ngram_jaccard_prefix",
+    """PPJoin-style prefix-filtered similarity self-join — provably the same
+    pairs as the brute-force inverted-index join (the oracle), generating
+    candidates from rarest-first shingle prefixes only.""",
+    lambda spark, sf_dir: ngram_jaccard_prefix(docs(spark, sf_dir)),
+    sql_ngram_jaccard_pairs)
+
+
+def _semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    vectors = embs(spark, sf_dir)
+    pairs = (embedding_neardup_guarded(vectors)
+              .select(F.col("vec_a").alias("doc_a"),
+                      F.col("vec_b").alias("doc_b")))
+    return dedup_clusters(vectors, pairs=pairs)
+
+
+register(
+    "semantic_dedup_embeddings",
+    """SemDeDup-style semantic dedup: connected components over the
+    guarded embedding near-dup pairs → one kept representative (min vec_id)
+    per semantic cluster. Composes the two scale-safe primitives: sign-LSH
+    bucketed pair generation (bounded per-bucket work) + min-label
+    propagation (shuffles only (id, label) pairs).""",
+    _semantic_dedup_embeddings,
+    lambda: sql_clusters_over(
+        sql_embedding_neardup_guarded(), "vec_a", "vec_b"))
+
+register(
+    "line_dedup_documents",
+    """RefinedWeb/CCNet-style first-occurrence line dedup: repeated 3-word
+    segments survive only at their corpus-wide min (doc_id, pos); one
+    window shuffle over the 60-bit segment hash (packed-int64 canonical
+    key), per-doc kept/total rollup.""",
+    lambda spark, sf_dir: line_dedup(docs(spark, sf_dir)),
+    sql_line_dedup)
+
+register(
+    "normalized_dedup_documents",
+    """Gopher-style fuzzy-exact dedup: strip all non-alphanumerics +
+    lowercase, hash-groupBy the normalized fingerprint, emit per-doc
+    canonical-survivor decisions.""",
+    lambda spark, sf_dir: normalized_dedup(docs(spark, sf_dir)),
+    sql_normalized_dedup)
+
+
+def _contamination_score_documents(spark: SparkSession,
+                                   sf_dir: str) -> DataFrame:
+    corpus = docs(spark, sf_dir)
+    return contamination_score(corpus.filter(F.col("doc_id") % 50 != 0),
+                               corpus.filter(F.col("doc_id") % 50 == 0))
+
+
+register(
+    "contamination_score_documents",
+    """Graded eval-contamination: permille of each train doc's distinct
+    8-grams found in the eval slice (doc_id %% 50 == 0) — broadcast eval
+    membership join, per-doc map-side-combined counts.""",
+    _contamination_score_documents,
+    sql_contamination_score)
+
+register(
+    "novelty_score_documents",
+    """Per-doc marginal-diversity score: permille of distinct 3-gram
+    shingles first introduced (min doc_id corpus-wide) by this doc — one
+    window shuffle over the shingle hash.""",
+    lambda spark, sf_dir: novelty_score(docs(spark, sf_dir)),
+    sql_novelty_score)
+
+register(
+    "corpus_yield_documents",
+    """Cleaning-funnel yield per source: quality filter -> dedup
+    canonical -> decontamination, applied sequentially; flags join on
+    doc_id only, one final hash agg.""",
+    lambda spark, sf_dir: corpus_yield(docs(spark, sf_dir)),
+    sql_corpus_yield)

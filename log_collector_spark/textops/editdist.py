@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from . import common as C
 from .dedup import doc_shingles, _sql_doc_shingles
+from log_collector_spark.registry import docs, register
 
 EDIT_MAX_DIST = 5
 EDIT_MAX_DF = 20
@@ -113,3 +114,15 @@ def sql_edit_distance_pairs(table: str = "documents",
           AND levenshtein(ta.text, tb.text) <= {max_dist}
         ORDER BY doc_a, doc_b
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "edit_distance_pairs",
+    """Character-level near-dup: banded Levenshtein (shingle-blocked
+    candidates, length prefilter, JVM levenshtein verify).""",
+    lambda spark, sf_dir: edit_distance_pairs(docs(spark, sf_dir)),
+    sql_edit_distance_pairs)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, embs, register
 
 # ---------------------------------------------------------------------------
 # ANN recall@k: LSH candidates vs brute-force ground truth
@@ -1966,3 +1967,152 @@ def sql_jl_distortion(table: str = "embeddings") -> str:
         FROM scored
         GROUP BY 1 ORDER BY 1
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "jl_distortion",
+    """Johnson-Lindenstrauss ±1 sign-projection (64→16) distance
+    distortion histogram over query×corpus pairs, permille deciles.""",
+    lambda spark, sf_dir: jl_distortion(embs(spark, sf_dir)),
+    sql_jl_distortion)
+
+register(
+    "simhash_calibration",
+    """Hamming × exact-Jaccard cross-tab over simhash band candidates —
+    the threshold-selection evidence for SIMHASH_HAMMING_MAX.""",
+    lambda spark, sf_dir: simhash_calibration(docs(spark, sf_dir)),
+    sql_simhash_calibration)
+
+register(
+    "ann_mrr_embeddings",
+    """Integer MRR of the true nearest neighbor inside each ANN path's
+    top-k — rank quality, sharing one brute-force truth scan.""",
+    lambda spark, sf_dir: ann_mrr(embs(spark, sf_dir)),
+    sql_ann_mrr)
+
+register(
+    "ann_ndcg_embeddings",
+    """Micro-averaged integer nDCG@k per ANN path vs the exact top-k —
+    grades the whole returned ranking, not just the best hit.""",
+    lambda spark, sf_dir: ann_ndcg(embs(spark, sf_dir)),
+    sql_ann_ndcg)
+
+register(
+    "kcore_peel_documents",
+    """One k-core peel round (k=2) over the MinHash near-dup graph:
+    whisker removal report (deg0, removed, surviving degree).""",
+    lambda spark, sf_dir: kcore_peel(docs(spark, sf_dir)),
+    sql_kcore_peel)
+
+register(
+    "link_jaccard_documents",
+    """Neighborhood-Jaccard strength per near-dup edge: family-internal
+    edges vs bridges the clustering step must not merge across.""",
+    lambda spark, sf_dir: link_jaccard(docs(spark, sf_dir)),
+    sql_link_jaccard)
+
+register(
+    "sq8_recall_embeddings",
+    """Asymmetric SQ8 retrieval audit: recall@k + top-1 preservation of
+    reconstructed candidates vs the exact brute-force truth.""",
+    lambda spark, sf_dir: sq8_recall(embs(spark, sf_dir)),
+    sql_sq8_recall)
+
+register(
+    "ann_map_embeddings",
+    """Micro-averaged integer mAP@k per ANN path — the front-loadedness
+    metric completing recall/MRR/nDCG.""",
+    lambda spark, sf_dir: ann_map(embs(spark, sf_dir)),
+    sql_ann_map)
+
+register(
+    "lsh_probe_curve",
+    """Recall@k vs LSH multiprobe budget (0/2/4/8 plane flips) against one
+    shared brute-force truth scan — the LSH twin of ivf_nprobe_curve.""",
+    lambda spark, sf_dir: lsh_probe_curve(embs(spark, sf_dir)),
+    sql_lsh_probe_curve)
+
+register(
+    "matryoshka_recall",
+    """Dimension-truncation eval: recall@k of a 16-dim-prefix brute scan
+    against the full 64-dim exact top-k (the Matryoshka serving bet).""",
+    lambda spark, sf_dir: matryoshka_recall(embs(spark, sf_dir)),
+    sql_matryoshka_recall)
+
+register(
+    "ann_recall_embeddings",
+    """Per-query recall@k of the LSH ANN index vs brute-force ground truth
+    (textops/evalops.py — the published quality metric of the index).""",
+    lambda spark, sf_dir: ann_recall(embs(spark, sf_dir)),
+    sql_ann_recall)
+
+register(
+    "minhash_estimate_error",
+    """MinHash sketch calibration: estimated vs exact Jaccard per LSH
+    candidate pair (threshold-free — rejected pairs included).""",
+    lambda spark, sf_dir: minhash_estimate_error(docs(spark, sf_dir)),
+    sql_minhash_estimate_error)
+
+register(
+    "ivf_balance_embeddings",
+    "IVF cell-population skew report (hot cell = hot partition at scale).",
+    lambda spark, sf_dir: ivf_balance(embs(spark, sf_dir)),
+    sql_ivf_balance)
+
+register(
+    "tokenizer_fertility",
+    "Per-source chars-per-token fertility (tokenizer-change gate).",
+    lambda spark, sf_dir: tokenizer_fertility(docs(spark, sf_dir)),
+    sql_tokenizer_fertility)
+
+register(
+    "packing_efficiency",
+    "Per-(source, shard) sequence-packing waste report.",
+    lambda spark, sf_dir: packing_efficiency(docs(spark, sf_dir)),
+    sql_packing_efficiency)
+
+register(
+    "ivfadc_recall",
+    """Recall@k decomposition of the compressed IVFADC scan: exact-L2
+    ground truth vs probed-cells ceiling vs ADC ranking — isolates
+    coarse-quantizer loss from PQ compression loss per query.""",
+    lambda spark, sf_dir: ivfadc_recall(embs(spark, sf_dir)),
+    sql_ivfadc_recall)
+
+register(
+    "ivf_nprobe_curve",
+    """IVF tuning curve: micro-averaged recall@k at nprobe = 1, 2, 3 vs
+    the exact brute-force top-k (what each extra probe buys).""",
+    lambda spark, sf_dir: ivf_nprobe_curve(embs(spark, sf_dir)),
+    sql_ivf_nprobe_curve)
+
+register(
+    "neardup_degree_histogram",
+    """Power-of-two degree histogram of the MinHash near-dup graph (the
+    dedup blast-radius / mega-cluster early-warning report).""",
+    lambda spark, sf_dir: neardup_degree_histogram(docs(spark, sf_dir)),
+    sql_neardup_degree_histogram)
+
+register(
+    "pagerank_step_documents",
+    """One damped PageRank power iteration over the near-dup graph in
+    fixed-point integers (template/hub-document centrality).""",
+    lambda spark, sf_dir: pagerank_step(docs(spark, sf_dir)),
+    sql_pagerank_step)
+
+register(
+    "triangle_count_documents",
+    "Triangle census of the near-dup graph (template family vs chain).",
+    lambda spark, sf_dir: triangle_count(docs(spark, sf_dir)),
+    sql_triangle_count)
+
+register(
+    "clustering_coefficient",
+    """Per-node local clustering coefficient of the near-dup graph:
+    clique members (collapse-safe) vs chain hubs (over-merge risk).""",
+    lambda spark, sf_dir: clustering_coefficient(docs(spark, sf_dir)),
+    sql_clustering_coefficient)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, register
 
 INDEX_MAX_DF = 400  # postings fingerprint cutoff (sandbox-sized)
 
@@ -88,3 +89,16 @@ def sql_inverted_index_stats(table: str = "documents",
                     ELSE NULL END AS postings_h60
         FROM per
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "inverted_index_stats",
+    """Per-token inverted-index dictionary rows: exact df/postings counts
+    for every token; posting-list fingerprint only under max_df (the hot
+    stop-word posting list never materializes as one shuffle value).""",
+    lambda spark, sf_dir: inverted_index_stats(docs(spark, sf_dir)),
+    sql_inverted_index_stats)

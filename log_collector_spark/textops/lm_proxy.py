@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from log_collector_spark.textops import common as C
+from log_collector_spark.registry import docs, register
 
 
 def _bigrams(text_col: str):
@@ -224,3 +225,26 @@ def sql_dsir_importance(table: str = "documents",
         WHERE rank <= {top_k}
         ORDER BY rank
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "bigram_surprisal_documents",
+    """LM-proxy quality score: mean corpus-bigram surprisal in millibits
+    (bit-length log — identical bin() semantics both engines).""",
+    lambda spark, sf_dir: bigram_surprisal(docs(spark, sf_dir)),
+    sql_bigram_surprisal)
+
+register(
+    "dsir_importance_documents",
+    """DSIR importance resampling (hashed-bigram importance weights vs a
+    target domain, Xie et al.): top-50 raw docs that look most like the
+    target slice. The 1024-bucket feature table is constant-size at any
+    corpus scale (broadcast score join, never a vocab shuffle); log
+    ratios in whole bits via the bit-length log, no products, overflow-
+    free by construction.""",
+    lambda spark, sf_dir: dsir_importance(docs(spark, sf_dir)),
+    sql_dsir_importance)

@@ -29,11 +29,14 @@ Plan shapes at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import common as C
+from log_collector_spark.operators import tx_stats as TX
+from log_collector_spark.registry import (docs, events, register, routed_slim,
+                                          tx_view)
 
 TEMPLATE_PREFIX_K = 6      # tokens kept as the template key
 TEMPLATE_TOPK = 50
@@ -223,3 +226,50 @@ def sql_markov_next_event(table: str = "events", key_col: str = "user_id",
         FROM tot t JOIN top p USING (prev_type)
         ORDER BY t.prev_type
     """
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "log_templates_documents",
+    """Drain-lite log-template mining: digit-masked token-prefix templates,
+    one hash agg + TakeOrdered top-k (textops/mining.py).""",
+    lambda spark, sf_dir: log_templates(docs(spark, sf_dir)),
+    sql_log_templates)
+
+register(
+    "vocab_growth_documents",
+    """Heaps-law vocabulary growth curve: token first-occurrence buckets +
+    running vocabulary size (one token-level shuffle).""",
+    lambda spark, sf_dir: vocab_growth(docs(spark, sf_dir)),
+    sql_vocab_growth)
+
+register(
+    "markov_next_event",
+    """First-order Markov next-event predictability per antecedent type
+    (modal successor + hit rate, lexicographic tie-break).""",
+    lambda spark, sf_dir: markov_next_event(events(spark, sf_dir)),
+    sql_markov_next_event)
+
+
+def _tx_markov_next_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
+    routed = routed_slim(spark, sf_dir)
+    clean = (routed.filter(F.col("parse_ok") & ~F.col("is_oversize"))
+                   .filter(F.col("tool").isNotNull())
+                   .select("conv_id", "turn_idx", "tool"))
+    return markov_next_event(clean, key_col="conv_id",
+                             seq_col="turn_idx", type_col="tool")
+
+
+register(
+    "tx_markov_next_tool",
+    """Markov next-TOOL predictability over clean transcript turns —
+    the workflow-automation screen on the flagship routed frame (adjacency
+    over non-null-tool turns, same discipline as tx_tool_chain_bigrams).""",
+    _tx_markov_next_tool,
+    lambda: sql_markov_next_event(
+        table=f"(SELECT conv_id, turn_idx, tool FROM {tx_view()} "
+              f"WHERE {TX.SQL_CLEAN} AND tool IS NOT NULL)",
+        key_col="conv_id", seq_col="turn_idx", type_col="tool"))

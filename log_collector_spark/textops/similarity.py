@@ -33,6 +33,7 @@ from log_collector_spark.textops import common as C
 from log_collector_spark.textops.dedup import (
     EMB_PLANES, _emb_bucket,
 )
+from log_collector_spark.registry import embs, register
 
 TOP_K = 5
 QUERY_MOD = 100  # vec_id % QUERY_MOD == 0 → query vector
@@ -2055,3 +2056,175 @@ def sql_k_center_select(table: str = "embeddings",
         FROM cov
         ORDER BY round
     """)
+
+
+# ---------------------------------------------------------------------------
+# driver queries declared over this module's operators (see registry.py)
+# ---------------------------------------------------------------------------
+
+register(
+    "embedding_isotropy",
+    """Pairwise signed-cos² histogram over deterministic stride pairs —
+    the anisotropy/representation-collapse audit (sqrt-free, int64-safe
+    by Cauchy-Schwarz).""",
+    lambda spark, sf_dir: embedding_isotropy(embs(spark, sf_dir)),
+    sql_embedding_isotropy)
+
+register(
+    "pca_power_step",
+    """Two integer power-iteration steps toward the dominant principal
+    direction of the embedding Gram matrix — Aᵀ(A·v) without
+    materializing the d×d Gram, 64-key dim aggs, one-row broadcast of
+    the direction between steps.""",
+    lambda spark, sf_dir: pca_power_step(embs(spark, sf_dir)),
+    sql_pca_power_step)
+
+register(
+    "pca_alignment",
+    """Per-vector squared-cosine histogram against the power-iteration
+    principal direction — the "all-but-the-top" collapse report; per-row
+    bounded integer chain, 11-key agg.""",
+    lambda spark, sf_dir: pca_alignment(embs(spark, sf_dir)),
+    sql_pca_alignment)
+
+register(
+    "ann_topk_graph",
+    """Graph-expansion ANN: offline degree-bounded kNN graph from
+    multiprobe LSH candidates; queries probe one bucket + one graph hop
+    (the NSW/HNSW index-effort-for-query-latency trade).""",
+    lambda spark, sf_dir: graph_ann_topk(embs(spark, sf_dir)),
+    sql_graph_ann_topk)
+
+register(
+    "silhouette_labels",
+    """Per-label simplified silhouette (centroid form, integer permille):
+    label-coherence audit before trusting labels for splits/sampling;
+    one (label,dim) agg + in-row distance transforms, no n×L shuffle.""",
+    lambda spark, sf_dir: silhouette_labels(embs(spark, sf_dir)),
+    sql_silhouette_labels)
+
+register(
+    "embedding_norm_audit",
+    """Quantized squared-L2 histogram vs corpus max — the pre-ANN sanity
+    gate for mixed/un-normalized embedding versions.""",
+    lambda spark, sf_dir: embedding_norm_audit(embs(spark, sf_dir)),
+    sql_embedding_norm_audit)
+
+register(
+    "sq8_recon_embeddings",
+    """SQ8 scalar-quantization audit: exact integer reconstruction error
+    per label against corpus-wide per-dim ranges — dim stats fold to one
+    broadcast row, error is in-row zip_with (no join-back shuffle).""",
+    lambda spark, sf_dir: sq8_recon_error(embs(spark, sf_dir)),
+    sql_sq8_recon_error)
+
+register(
+    "triplet_mining_embeddings",
+    """FaceNet-taxonomy triplet report per label (hard / semi-hard /
+    easy / no-positive anchors) on exact signed-cos2 integer similarity;
+    corpus side broadcast, IVF-cell candidates at scale.""",
+    lambda spark, sf_dir: triplet_mining(embs(spark, sf_dir)),
+    sql_triplet_mining)
+
+register(
+    "index_plan_advisor_embeddings",
+    """ANN index capacity plan from one stats row: IVF nlist/nprobe,
+    PQ subspaces, per-encoding footprints, rule-based recommendation.""",
+    lambda spark, sf_dir: index_plan_advisor(embs(spark, sf_dir)),
+    sql_index_plan_advisor)
+
+register(
+    "inbatch_negatives_embeddings",
+    """In-batch false-negative collision permille per candidate batch
+    size (hash batching, pair counts from the (batch,label) histogram).""",
+    lambda spark, sf_dir: inbatch_negatives(embs(spark, sf_dir)),
+    sql_inbatch_negatives)
+
+register(
+    "latesim_topk_embeddings",
+    """ColBERT-style late-interaction MaxSim top-k (8x8 sub-vectors,
+    in-row nested max/sum — brute-ANN plan shape).""",
+    lambda spark, sf_dir: latesim_topk(embs(spark, sf_dir)),
+    sql_latesim_topk)
+
+register(
+    "knn_label_consistency",
+    "kNN majority-label vs own label: mislabeled-example screen.",
+    lambda spark, sf_dir: knn_label_consistency(embs(spark, sf_dir)),
+    sql_knn_label_consistency)
+
+register(
+    "ann_topk_brute",
+    "Exact brute-force cosine top-k (broadcast queries, windowed rank).",
+    lambda spark, sf_dir: brute_force_topk(embs(spark, sf_dir)),
+    sql_brute_force_topk)
+
+register(
+    "ann_topk_lsh",
+    "LSH-bucketed ANN top-k with Hamming-1 multiprobe.",
+    lambda spark, sf_dir: lsh_ann_topk(embs(spark, sf_dir)),
+    sql_lsh_ann_topk)
+
+register(
+    "ann_topk_ivf",
+    """IVF-flat ANN top-k: fixed coarse-quantizer cells + nprobe probing,
+    exact integer-dot re-rank (partition-prunable corpus layout at scale).""",
+    lambda spark, sf_dir: ivf_ann_topk(embs(spark, sf_dir)),
+    sql_ivf_ann_topk)
+
+register(
+    "ann_topk_rrf",
+    """Reciprocal-rank fusion of the LSH and IVF ANN paths — union recall
+    at top-k cost, integer-micros scores, no cross-ranker calibration.""",
+    lambda spark, sf_dir: rrf_fusion_topk(embs(spark, sf_dir)),
+    sql_rrf_fusion_topk)
+
+register(
+    "ann_topk_ivfadc",
+    """IVFADC: PQ-compressed ANN scan — probed coarse cells, candidates
+    scored from the packed 8-byte PQ code via a per-query 128-entry LUT
+    (asymmetric distance); full vectors never touched on the corpus side.""",
+    lambda spark, sf_dir: ivfadc_ann_topk(embs(spark, sf_dir)),
+    sql_ivfadc_ann_topk)
+
+register(
+    "label_centroid_embeddings",
+    """Per-(label, dim) centroid sums over quantized embeddings: narrow
+    posexplode + one map-side-combined hash agg — exact, mergeable class
+    statistics (#labels x dims output rows at any corpus size).""",
+    lambda spark, sf_dir: label_centroid_stats(embs(spark, sf_dir)),
+    sql_label_centroid_stats)
+
+register(
+    "pq_codes_embeddings",
+    """Product-quantization encoding: 8 x 4-bit nearest-centroid codes
+    packed into one int64 + squared reconstruction error — pure Catalyst,
+    zero shuffle.""",
+    lambda spark, sf_dir: pq_codes(embs(spark, sf_dir)),
+    sql_pq_codes)
+
+register(
+    "kcenter_select_embeddings",
+    """Greedy k-center (Gonzalez farthest-first) coreset selection over
+    the embedding space: 8 mutually-farthest exemplars + the maxmin
+    radius curve + final coverage d2 — per round one narrow scan +
+    TakeOrdered(1) with the chosen centers inlined as literals (no
+    shuffle, no join, stateless per-round plans).""",
+    lambda spark, sf_dir: k_center_select(embs(spark, sf_dir)),
+    sql_k_center_select)
+
+register(
+    "kmeans_step_embeddings",
+    """One Lloyd k-means iteration vs the IVF centroids: pure-Catalyst
+    argmin assignment + one (cell, dim) hash agg -> exact sums, floored
+    new centroids, per-coordinate drift.""",
+    lambda spark, sf_dir: kmeans_step(embs(spark, sf_dir)),
+    sql_kmeans_step)
+
+register(
+    "centroid_outliers_embeddings",
+    """OOD embedding screen: exact squared distance to the assigned IVF
+    centroid; flagged when the origin explains the vector better than its
+    own nearest centroid. Pure Catalyst, zero shuffle.""",
+    lambda spark, sf_dir: centroid_outliers(embs(spark, sf_dir)),
+    sql_centroid_outliers)

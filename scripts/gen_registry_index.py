@@ -1,7 +1,7 @@
 """Regenerate README.md's auto-generated query-registry appendix.
 
-Reads `queries()` from __spark_entry__.py, takes each q-function's
-docstring flattened to one line (truncated at 160 chars), and rewrites
+Reads every declared query (log_collector_spark/registry.py), takes its
+description flattened to one line (truncated at 160 chars), and rewrites
 everything below the appendix header in place. Run after registering new
 queries:
 
@@ -37,11 +37,10 @@ def one_line(doc: str | None, limit: int = 160) -> str:
 
 
 def main() -> None:
-    import __spark_entry__ as entry
+    from log_collector_spark import registry
 
-    qs = entry.queries()
-    rows = [f"| `{name}` | {one_line(fn.__doc__)} |"
-            for name, fn in sorted(qs.items())]
+    rows = [f"| `{name}` | {one_line(q.doc)} |"
+            for name, q in registry.records().items()]
 
     path = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "README.md")

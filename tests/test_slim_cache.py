@@ -13,7 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E
+from log_collector_spark import registry as R
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -30,38 +30,38 @@ class _StoppedSc:
 
 
 def test_cache_keyed_by_application_id(spark):
-    E._ROUTED_SLIM_CACHE.clear()
-    a = E._routed_slim(spark, SF_DIR)
-    b = E._routed_slim(spark, SF_DIR)
+    R.ROUTED_SLIM_CACHE.clear()
+    a = R.routed_slim(spark, SF_DIR)
+    b = R.routed_slim(spark, SF_DIR)
     assert a is b
-    (app_id, sf_dir), = E._ROUTED_SLIM_CACHE.keys()
+    (app_id, sf_dir), = R.ROUTED_SLIM_CACHE.keys()
     assert app_id == spark.sparkContext.applicationId
     assert sf_dir == SF_DIR
-    E.clear_routed_slim()
+    R.clear_routed_slim()
 
 
 def test_stopped_session_entries_evicted_on_access(spark):
-    E._ROUTED_SLIM_CACHE.clear()
-    E._ROUTED_SLIM_CACHE[("dead-app", SF_DIR)] = (_StoppedSc(), object())
-    live = E._routed_slim(spark, SF_DIR)
-    assert ("dead-app", SF_DIR) not in E._ROUTED_SLIM_CACHE
+    R.ROUTED_SLIM_CACHE.clear()
+    R.ROUTED_SLIM_CACHE[("dead-app", SF_DIR)] = (_StoppedSc(), object())
+    live = R.routed_slim(spark, SF_DIR)
+    assert ("dead-app", SF_DIR) not in R.ROUTED_SLIM_CACHE
     key = (spark.sparkContext.applicationId, SF_DIR)
-    assert E._ROUTED_SLIM_CACHE[key][1] is live
-    E.clear_routed_slim()
+    assert R.ROUTED_SLIM_CACHE[key][1] is live
+    R.clear_routed_slim()
 
 
 def test_clear_routed_slim_unpersists_and_empties(spark):
-    E._ROUTED_SLIM_CACHE.clear()
-    df = E._routed_slim(spark, SF_DIR)
+    R.ROUTED_SLIM_CACHE.clear()
+    df = R.routed_slim(spark, SF_DIR)
     df.count()  # materialize the cache
     assert df.storageLevel.useMemory
-    E.clear_routed_slim()
-    assert E._ROUTED_SLIM_CACHE == {}
+    R.clear_routed_slim()
+    assert R.ROUTED_SLIM_CACHE == {}
     assert not df.storageLevel.useMemory
 
 
 def test_clear_survives_dead_entries():
-    E._ROUTED_SLIM_CACHE.clear()
-    E._ROUTED_SLIM_CACHE[("dead-app", SF_DIR)] = (_StoppedSc(), object())
-    E.clear_routed_slim()  # must not raise on the stopped context
-    assert E._ROUTED_SLIM_CACHE == {}
+    R.ROUTED_SLIM_CACHE.clear()
+    R.ROUTED_SLIM_CACHE[("dead-app", SF_DIR)] = (_StoppedSc(), object())
+    R.clear_routed_slim()  # must not raise on the stopped context
+    assert R.ROUTED_SLIM_CACHE == {}
