@@ -30,7 +30,6 @@ from pyspark.sql.window import Window
 
 from log_collector_spark.textops import common as C
 from log_collector_spark.plans import pipeline as pl
-from log_collector_spark.textops.common import h60
 from log_collector_spark.registry import (events, props_with_drift, register,
                                           tbl, tx_view)
 
@@ -3252,70 +3251,70 @@ register(
     "fano_factor_events",
     """Per-type burstiness: exact integer Fano factor (variance/mean of
     zero-filled hourly counts) — 1000 ≈ Poisson, higher = bursty.""",
-    lambda spark, sf_dir: fano_factor(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: fano_factor(events(spark, sf_dir)),
     sql_fano_factor)
 
 register(
     "simpson_diversity_events",
     """Per-user Gini-Simpson behavioral diversity — exact integer where
     entropy would float-drift; two stacked hash aggs.""",
-    lambda spark, sf_dir: simpson_diversity(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: simpson_diversity(events(spark, sf_dir)),
     sql_simpson_diversity)
 
 register(
     "funnel_latency_events",
     """Time-to-convert per funnel transition: exact p50/p90 of the
     first-touch step deltas over converting users.""",
-    lambda spark, sf_dir: funnel_latency(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: funnel_latency(events(spark, sf_dir)),
     sql_funnel_latency)
 
 register(
     "value_jackknife_events",
     """Delete-one-bucket jackknife table for the corpus mean —
     deterministic hash buckets, exact integer leave-one-out means.""",
-    lambda spark, sf_dir: value_jackknife(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: value_jackknife(events(spark, sf_dir)),
     sql_value_jackknife)
 
 register(
     "ks_drift_events",
     """One-vs-rest exact binned Kolmogorov-Smirnov distance per event
     type — the distribution-drift screen, integer cross-multiplied CDFs.""",
-    lambda spark, sf_dir: ks_drift(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: ks_drift(events(spark, sf_dir)),
     sql_ks_drift)
 
 register(
     "churn_matrix_events",
     """Day-over-day retained/churned/acquired counts (set algebra as one
     shifted full-outer self-join of the distinct user-day frame).""",
-    lambda spark, sf_dir: churn_matrix(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: churn_matrix(events(spark, sf_dir)),
     sql_churn_matrix)
 
 register(
     "decile_lift_events",
     """NTILE decile lift table: per-activity-decile conversion lift in
     permille (cross-multiplied — no rate division).""",
-    lambda spark, sf_dir: decile_lift(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: decile_lift(events(spark, sf_dir)),
     sql_decile_lift)
 
 register(
     "bounce_rate_events",
     """Per-day session bounce rate (1-event sessions permille, 30-min
     gap sessionization rule).""",
-    lambda spark, sf_dir: bounce_rate(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: bounce_rate(events(spark, sf_dir)),
     sql_bounce_rate)
 
 register(
     "top_users_ties_events",
     """Dense-rank top users WITH ties — the leaderboard cut LIMIT-k gets
     wrong (tied peers must all surface).""",
-    lambda spark, sf_dir: top_users_with_ties(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: top_users_with_ties(events(spark, sf_dir)),
     sql_top_users_with_ties)
 
 register(
     "gmd_value_events",
     """Exact Gini mean difference per event type via the sorted-weight
     closed form (O(n log n), never the pair join).""",
-    lambda spark, sf_dir: gini_mean_difference(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: gini_mean_difference(events(spark, sf_dir)),
     sql_gini_mean_difference)
 
 register(
@@ -3344,7 +3343,7 @@ register(
     "gap_histogram_events",
     """Inter-event gap histogram per user stream (power-of-2 µs buckets) —
     the evidence behind the sessionize/watermark threshold choice.""",
-    lambda spark, sf_dir: gap_histogram(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: gap_histogram(events(spark, sf_dir)),
     lambda: sql_gap_histogram("events"))
 
 
@@ -3356,7 +3355,7 @@ def _ri_audit_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     role_lut, _ = pl.lookups(spark)
     edges = [
         ("events_user_customer",
-         tbl(spark, sf_dir, "events").select("user_id"),
+         events(spark, sf_dir).select("user_id"),
          cu.select("c_custkey")),
         ("lineitem_orders", li.select("l_orderkey"),
          od.select("o_orderkey")),
@@ -3391,7 +3390,7 @@ register(
 
 
 def _fingerprint_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = tbl(spark, sf_dir, "events")
+    ev = events(spark, sf_dir)
     us = F.expr("unix_micros(cast(ts as timestamp))")
     day = (us - us % 86_400_000_000) / 86_400_000_000
     row = F.concat_ws("|", "event_id", "user_id", "event_type",
@@ -3414,14 +3413,14 @@ register(
     "activity_gini_events",
     """Exact integer Gini of events-per-user via the histogram form (no
     global sort — ranks from the tiny distinct-count-value frame).""",
-    lambda spark, sf_dir: activity_gini(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: activity_gini(events(spark, sf_dir)),
     sql_activity_gini)
 
 register(
     "twa_value_events",
     """Time-weighted average value per event_type (step interpolation,
     integer cents x ms weights — the billing/SLO statistic).""",
-    lambda spark, sf_dir: twa_value(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: twa_value(events(spark, sf_dir)),
     sql_twa_value)
 
 register(
@@ -3475,7 +3474,7 @@ register(
 
 def _winsorized_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events(spark, sf_dir)
-    lat = h60(F.col("event_id").cast("string")) % 5000
+    lat = C.h60(F.col("event_id").cast("string")) % 5000
     return winsorized_stats(ev, "event_type", lat)
 
 
@@ -3539,7 +3538,7 @@ def _snapshot_diff_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     added = (base.filter(F.col("event_id") % 101 == 0)
                  .select((F.col("event_id") + 10_000_000).alias("event_id"),
                          "event_type", "user_id", "vq"))
-    row_hash = h60(F.concat_ws(
+    row_hash = C.h60(F.concat_ws(
         "|", F.col("event_id").cast("string"), F.col("event_type"),
         F.col("user_id").cast("string"), F.col("vq").cast("string")))
     return snapshot_diff(base, new.unionByName(added), "event_id",

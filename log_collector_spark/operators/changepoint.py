@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from log_collector_spark.registry import register, tbl
+from log_collector_spark.registry import events, register
 
 SHIFT_WINDOW_H = 6  # hours each side of the candidate boundary
 
@@ -105,5 +105,5 @@ register(
     "mean_shift_hours_events",
     """Two-window CUSUM volume-shift score per (event_type, hour) — RANGE
     frames over the epoch-hour index, gaps count as zero volume.""",
-    lambda spark, sf_dir: mean_shift_hours(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: mean_shift_hours(events(spark, sf_dir)),
     sql_mean_shift_hours)

@@ -29,7 +29,6 @@ from log_collector_spark.registry import (MAX_SIZE, docs, events, parse_events,
                                           props_with_drift, register,
                                           routed_slim, tbl, tx_glob, tx_view)
 from log_collector_spark.textops import common as C
-from log_collector_spark.textops.common import h60
 
 IP_RANGE_ROWS = [
     # contiguous /16-ish ranges inside 10.0.0.0/8 (16 pipe-separated columns)
@@ -241,8 +240,7 @@ register(
     "day_bitmask_overlap_events",
     """Bitmap-index set algebra: per-type-pair co-active days via
     bit_count over 63-bit day-presence words.""",
-    lambda spark, sf_dir: agg_ops.day_bitmask_overlap(
-        tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: agg_ops.day_bitmask_overlap(events(spark, sf_dir)),
     agg_ops.sql_day_bitmask_overlap)
 
 
@@ -720,7 +718,7 @@ register(
 
 def _percentile_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events(spark, sf_dir)
-    lat = h60(F.col("event_id").cast("string")) % 5000
+    lat = C.h60(F.col("event_id").cast("string")) % 5000
     return agg_ops.exact_percentiles(
         ev, "event_type", lat, {"p50": 0.5, "p95": 0.95, "p99": 0.99})
 
@@ -758,7 +756,7 @@ register(
 def _hist_exact_percentile_latency(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     ev = events(spark, sf_dir)
-    lat = h60(F.col("event_id").cast("string")) % 5000
+    lat = C.h60(F.col("event_id").cast("string")) % 5000
     return agg_ops.histogram_exact_percentiles(
         ev, "event_type", lat, {"p50": 0.5, "p95": 0.95, "p99": 0.99})
 
@@ -819,7 +817,7 @@ register(
 
 def _hist_percentile_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events(spark, sf_dir)
-    lat = h60(F.col("event_id").cast("string")) % 5000
+    lat = C.h60(F.col("event_id").cast("string")) % 5000
     return agg_ops.histogram_percentiles(
         ev, "event_type", lat,
         {"p50_lo": 0.5, "p95_lo": 0.95, "p99_lo": 0.99})

@@ -1003,7 +1003,7 @@ register(
     "rle_audit_events",
     """RLE-compressibility audit: run counts of event_type under the
     clustered vs ingest orderings (the encoding-size decision).""",
-    lambda spark, sf_dir: rle_audit(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: rle_audit(events(spark, sf_dir)),
     sql_rle_audit)
 
 register(

@@ -59,10 +59,9 @@ def autocorr_hourly(events: DataFrame, ts_col: str = "ts",
         den   = n²·Q − n·S²          (lag-independent)
 
     where P_k = Σ x_t·x_{t−k}, A_k = Σ_{t>k} x_t, B_k = Σ_{t≤n−k} x_t.
-    acf = num/den; the permille divides with truncation toward zero in
-    both engines (num may be negative; Spark's integer DIV and DuckDB's
-    INTEGER // both truncate — measured, not assumed: DuckDB floors only
-    the FLOAT // form).
+    acf = num/den; num may be negative, so the permille divides
+    abs-split (DIV on |num|, sign restored after) — truncation toward
+    zero that does not depend on either engine's signed-division rule.
 
     Returns (lag, n_terms, acf_num, acf_den, acf_permille), ORDER BY lag.
     """
@@ -100,9 +99,11 @@ def autocorr_hourly(events: DataFrame, ts_col: str = "ts",
                        .cast("long"))
            .withColumn(
                "acf_permille",
-               F.when(F.col("acf_den") > 0,
-                      F.expr("(acf_num * 1000) div acf_den"))
-               .otherwise(F.lit(0)).cast("long")))
+               F.when(F.col("acf_den") <= 0, F.lit(0))
+               .when(F.col("acf_num") >= 0,
+                     F.expr("(acf_num * 1000) div acf_den"))
+               .otherwise(-F.expr("((-acf_num) * 1000) div acf_den"))
+               .cast("long")))
     return (out.select("lag", F.col("n_terms").cast("long").alias("n_terms"),
                        "acf_num", "acf_den", "acf_permille")
             .orderBy("lag"))
@@ -142,17 +143,20 @@ def sql_autocorr_hourly(table: str = "events",
             JOIN dense d1 ON TRUE
             JOIN dense d2 ON d2.h = d1.h - l.lag
             GROUP BY l.lag
+        ),
+        acf AS (
+            SELECT p.lag, p.n_terms,
+                   CAST(t.n*t.n*p.p - t.n*t.s*(p.a + p.b)
+                        + (t.n - p.lag)*t.s*t.s AS BIGINT) AS acf_num,
+                   CAST(t.n*t.n*t.q - t.n*t.s*t.s AS BIGINT) AS acf_den
+            FROM pairs p CROSS JOIN tot t
         )
-        SELECT p.lag, p.n_terms,
-               CAST(t.n*t.n*p.p - t.n*t.s*(p.a + p.b)
-                    + (t.n - p.lag)*t.s*t.s AS BIGINT) AS acf_num,
-               CAST(t.n*t.n*t.q - t.n*t.s*t.s AS BIGINT) AS acf_den,
-               CAST(CASE WHEN t.n*t.n*t.q - t.n*t.s*t.s > 0
-                    THEN (1000 * (t.n*t.n*p.p - t.n*t.s*(p.a + p.b)
-                                  + (t.n - p.lag)*t.s*t.s))
-                         // (t.n*t.n*t.q - t.n*t.s*t.s)
-                    ELSE 0 END AS BIGINT) AS acf_permille
-        FROM pairs p CROSS JOIN tot t
+        SELECT lag, n_terms, acf_num, acf_den,
+               CAST(CASE WHEN acf_den <= 0 THEN 0
+                         WHEN acf_num >= 0 THEN acf_num * 1000 // acf_den
+                         ELSE -((-acf_num) * 1000 // acf_den) END
+                    AS BIGINT) AS acf_permille
+        FROM acf
         ORDER BY lag
     """
 

@@ -4300,7 +4300,7 @@ register(
     "sliding_hll_users_events",
     """Rolling 24h distinct-user gauge per hour from slid HLL registers
     (dense hour×register grid + range window — never rescans raw rows).""",
-    lambda spark, sf_dir: sliding_hll_users(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: sliding_hll_users(events(spark, sf_dir)),
     sql_sliding_hll_users)
 
 register(
@@ -4460,7 +4460,7 @@ register(
     "hll_user_rollup_events",
     """HLL mergeability: hourly distinct-user registers MAXed up to daily
     estimates (sketches merged, never rebuilt from raw rows).""",
-    lambda spark, sf_dir: hll_user_rollup(tbl(spark, sf_dir, "events")),
+    lambda spark, sf_dir: hll_user_rollup(events(spark, sf_dir)),
     sql_hll_user_rollup)
 
 register(

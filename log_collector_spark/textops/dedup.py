@@ -2501,9 +2501,8 @@ register(
     """Near-dup pairs with the hot-shingle guard ON (max_df): the web-scale
     configuration — ubiquitous shingles are dropped from the inverted index
     before the self-join, capping per-key join fan-out at max_df².""",
-    lambda spark, sf_dir: ngram_jaccard_pairs(
-        docs(spark, sf_dir),
-        max_df=NGRAM_MAX_DF),
+    lambda spark, sf_dir: ngram_jaccard_pairs(docs(spark, sf_dir),
+                                              max_df=NGRAM_MAX_DF),
     sql_ngram_jaccard_pairs_maxdf)
 
 

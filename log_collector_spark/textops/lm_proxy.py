@@ -155,7 +155,8 @@ def dsir_importance(df: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
               .crossJoin(F.broadcast(
                   raw.agg(F.sum("n_r").cast("long").alias("R"))))
               .crossJoin(F.broadcast(
-                  tgt.agg(F.sum("n_t").cast("long").alias("T"))))
+                  tgt.agg(F.coalesce(F.sum("n_t"), F.lit(0)).cast("long")
+                          .alias("T"))))
               .select("bucket",
                       ((bitlen(F.col("n_t") + 1) - bitlen(F.col("T") + 1))
                        - (bitlen(F.col("n_r") + 1) - bitlen(F.col("R") + 1))
@@ -164,9 +165,13 @@ def dsir_importance(df: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
                  .groupBy("doc_id", "source")
                  .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
                       F.sum("lam").cast("long").alias("lam_sum")))
-    scored = per_doc.select(
-        "doc_id", "source", "n_bigrams",
-        F.expr("lam_sum * 1000 DIV n_bigrams").alias("imp_millibits"))
+    # abs-split: DIV only ever sees a non-negative numerator, so the
+    # rounding cannot depend on an engine's signed-division rule
+    imp = (F.when(F.col("lam_sum") >= 0,
+                  F.expr("lam_sum * 1000 DIV n_bigrams"))
+           .otherwise(-F.expr("(-lam_sum) * 1000 DIV n_bigrams")))
+    scored = per_doc.select("doc_id", "source", "n_bigrams",
+                            imp.alias("imp_millibits"))
     # top-k FIRST (distributed TakeOrdered — per-partition heads merged
     # on the driver), rank AFTER: a global row_number window before the
     # limit would drag the whole per-doc frame through one task
@@ -212,16 +217,19 @@ def sql_dsir_importance(table: str = "documents",
                    CAST(SUM(l.lam) AS BIGINT) AS lam_sum
             FROM ex e JOIN lam l ON l.bucket = e.bucket
             GROUP BY e.doc_id, e.source
+        ), scored AS (
+            SELECT doc_id, source, n_bigrams,
+                   CASE WHEN lam_sum >= 0 THEN lam_sum * 1000 // n_bigrams
+                        ELSE -((-lam_sum) * 1000 // n_bigrams) END
+                       AS imp_millibits
+            FROM per_doc
         )
         SELECT CAST(rank AS INT) AS rank, doc_id, source, n_bigrams,
                CAST(imp_millibits AS BIGINT) AS imp_millibits
         FROM (
-            SELECT doc_id, source, n_bigrams,
-                   lam_sum * 1000 // n_bigrams AS imp_millibits,
-                   ROW_NUMBER() OVER (
-                       ORDER BY lam_sum * 1000 // n_bigrams DESC,
-                                doc_id) AS rank
-            FROM per_doc)
+            SELECT *, ROW_NUMBER() OVER (
+                       ORDER BY imp_millibits DESC, doc_id) AS rank
+            FROM scored)
         WHERE rank <= {top_k}
         ORDER BY rank
     """

@@ -992,35 +992,44 @@ def _unfilter_png(dec: bytes, w: int, h: int, bpp: int) -> bytearray:
     return out
 
 
-def decode_png(payload: bytes) -> dict:
-    """Generic PNG parser (NOT the encoder inverted): signature, chunk
-    walk with CRC32 validation, IHDR sanity, multi-IDAT concatenation,
-    DEFLATE inflate, full 5-filter reconstruction. Supports 8-bit gray
-    (0), truecolor (2), gray+alpha (4) and RGBA (6), non-interlaced —
-    the shapes a curation pipeline actually meets; anything else raises
-    with the reason (palette/16-bit/Adam7 are a bigger kernel, not a
-    different architecture). Returns integer stats over the
-    reconstructed channel bytes."""
+def _png_chunks(payload: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """(type, data) of every chunk before IEND, CRC32-checked. A chunk
+    whose declared length runs past the payload is an error, not a short
+    read."""
     import struct
     import zlib as _z
 
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG (bad signature)")
-    pos, ihdr, idat = 8, None, bytearray()
+    pos = 8
     while pos + 8 <= len(payload):
         (ln,) = struct.unpack(">I", payload[pos:pos + 4])
-        ctype = payload[pos + 4:pos + 8]
-        data = payload[pos + 8:pos + 8 + ln]
-        (crc,) = struct.unpack(">I", payload[pos + 8 + ln:pos + 12 + ln])
+        end = pos + 12 + ln
+        if end > len(payload):
+            raise ValueError("truncated chunk")
+        ctype, data = payload[pos + 4:pos + 8], payload[pos + 8:end - 4]
+        (crc,) = struct.unpack(">I", payload[end - 4:end])
         if _z.crc32(ctype + data) & 0xFFFFFFFF != crc:
             raise ValueError(f"CRC mismatch in {ctype!r} chunk")
+        if ctype == b"IEND":
+            return
+        yield ctype, data
+        pos = end
+
+
+def _png_pixels(payload: bytes) -> tuple[int, int, int, int, bytearray]:
+    """(width, height, color_type, channels, reconstructed channel bytes):
+    chunk walk, IHDR sanity, multi-IDAT concatenation, one inflate and
+    one 5-filter reconstruction."""
+    import struct
+    import zlib as _z
+
+    ihdr, idat = None, bytearray()
+    for ctype, data in _png_chunks(payload):
         if ctype == b"IHDR":
             ihdr = struct.unpack(">IIBBBBB", data)
         elif ctype == b"IDAT":
             idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + ln
     if ihdr is None or not idat:
         raise ValueError("missing IHDR/IDAT")
     w, h, depth, ctype_i, comp, filt, interlace = ihdr
@@ -1030,7 +1039,20 @@ def decode_png(payload: bytes) -> dict:
     channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(ctype_i)
     if channels is None:
         raise ValueError(f"unsupported color type {ctype_i}")
-    out = _unfilter_png(_z.decompress(bytes(idat)), w, h, channels)
+    return (w, h, ctype_i, channels,
+            _unfilter_png(_z.decompress(bytes(idat)), w, h, channels))
+
+
+def decode_png(payload: bytes) -> dict:
+    """Generic PNG parser (NOT the encoder inverted): signature, chunk
+    walk with CRC32 validation, IHDR sanity, multi-IDAT concatenation,
+    DEFLATE inflate, full 5-filter reconstruction. Supports 8-bit gray
+    (0), truecolor (2), gray+alpha (4) and RGBA (6), non-interlaced —
+    the shapes a curation pipeline actually meets; anything else raises
+    with the reason (palette/16-bit/Adam7 are a bigger kernel, not a
+    different architecture). Returns integer stats over the
+    reconstructed channel bytes."""
+    w, h, ctype_i, channels, out = _png_pixels(payload)
     return {"width": w, "height": h, "color_type": ctype_i,
             "channels": channels, "pixel_sum": sum(out),
             "pixel_min": min(out), "pixel_max": max(out)}
@@ -1040,12 +1062,9 @@ def ahash_png(payload: bytes) -> dict:
     """Average hash over a decoded PNG — identical grid/threshold math to
     :func:`ahash_ppm`, so the same image encoded either way hashes
     identically (the re-encode dedup property aHash exists for)."""
-    d = decode_png(payload)
-    if d["channels"] != 3:
+    w, h, _, channels, px = _png_pixels(payload)
+    if channels != 3:
         raise ValueError("ahash_png expects truecolor input")
-    w, h = d["width"], d["height"]
-    px = _unfilter_png(
-        __import__("zlib").decompress(bytes(_png_idat(payload))), w, h, 3)
     grays = []
     for i in range(64):
         xx, yy = i % 8, i // 8
@@ -1057,20 +1076,6 @@ def ahash_png(payload: bytes) -> dict:
         if grays[i] * 64 > gsum:
             hsh |= 1 << i
     return {"ahash": hsh}
-
-
-def _png_idat(payload: bytes) -> bytearray:
-    import struct
-    pos, idat = 8, bytearray()
-    while pos + 8 <= len(payload):
-        (ln,) = struct.unpack(">I", payload[pos:pos + 4])
-        ctype = payload[pos + 4:pos + 8]
-        if ctype == b"IDAT":
-            idat += payload[pos + 8:pos + 8 + ln]
-        elif ctype == b"IEND":
-            break
-        pos += 12 + ln
-    return idat
 
 
 def media_png_from_documents(docs: DataFrame) -> DataFrame:

@@ -1976,9 +1976,12 @@ def k_center_select(df: DataFrame, vec_col: str = "embedding",
     facility-location-style subset selection for finetuning data and
     eval-set construction.
 
-    Deterministic: seed = smallest vec_id; each round picks the vector
-    maximizing min-d² to the chosen set (ties → smallest vec_id);
-    integer squared-L2 end-to-end, so both engines agree exactly.
+    Deterministic: seed = smallest vec_id; each round picks the
+    not-yet-chosen vector maximizing min-d² to the chosen set (ties →
+    smallest vec_id; a chosen vector would tie at d² = 0 once the
+    distinct points run out, so it is excluded, as the oracle's NOT IN
+    does); integer squared-L2 end-to-end, so both engines agree
+    exactly.
 
     Returns k+1 rows: (round, center_id, sel_d2) for rounds 0..k-1 —
     sel_d2 is the maxmin distance that elected the center, the k-center
@@ -1999,7 +2002,9 @@ def k_center_select(df: DataFrame, vec_col: str = "embedding",
     rows = [(0, int(seed["vec_id"]), 0)]
     centers = [[int(v) for v in seed["q"]]]
     for r in range(1, k):
-        top = (q.select("vec_id", "q", _min_d2_expr(centers).alias("d2"))
+        chosen = [c for _, c, _ in rows]
+        top = (q.filter(~F.col("vec_id").isin(chosen))
+                .select("vec_id", "q", _min_d2_expr(centers).alias("d2"))
                 .orderBy(F.desc("d2"), F.asc("vec_id")).limit(1)
                 .collect()[0])
         rows.append((r, int(top["vec_id"]), int(top["d2"])))

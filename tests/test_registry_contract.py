@@ -3,12 +3,15 @@ build a plan, (b) emit only hash-stable dtypes (the driver's value-hash
 is type-sensitive: BIGINT/VARCHAR/BOOLEAN/DECIMAL only — raw doubles are
 the one family that has ever failed a driver hash), and (c) carry a
 matching oracle_sql() entry. Schema-only: plans are analyzed, never
-executed, so the whole 258-query sweep stays cheap."""
+executed; the schema and tie-determinism audits share ONE build pass
+over the registry (the `built` fixture)."""
 
 from __future__ import annotations
 
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,17 +20,29 @@ ALLOWED = {"bigint", "int", "smallint", "tinyint", "string", "boolean",
            "decimal"}
 
 
-def test_every_query_builds_with_hash_stable_schema_and_oracle(spark):
+@pytest.fixture(scope="module")
+def built(spark):
+    """Every registered plan built once at sf0.001: name -> DataFrame, or
+    the exception its builder raised."""
     import __spark_entry__ as E
 
-    qs = E.queries()
+    out = {}
+    for name, fn in sorted(E.queries().items()):
+        try:
+            out[name] = fn(spark, SF)
+        except Exception as ex:      # noqa: BLE001 — report, don't abort
+            out[name] = ex
+    return out
+
+
+def test_every_query_builds_with_hash_stable_schema_and_oracle(built):
+    import __spark_entry__ as E
+
     oracles = E.oracle_sql()
     bad_types, missing_oracle, broken = [], [], []
-    for name, fn in sorted(qs.items()):
-        try:
-            df = fn(spark, SF)
-        except Exception as ex:      # noqa: BLE001 — report, don't abort
-            broken.append((name, str(ex)[:200]))
+    for name, df in built.items():
+        if isinstance(df, Exception):
+            broken.append((name, str(df)[:200]))
             continue
         for f, t in df.dtypes:
             if t.split("(")[0] not in ALLOWED:
@@ -37,6 +52,24 @@ def test_every_query_builds_with_hash_stable_schema_and_oracle(spark):
     assert not broken, broken
     assert not bad_types, bad_types
     assert not missing_oracle, missing_oracle
+
+
+def test_every_declaring_module_is_listed():
+    """records() imports registry.MODULES; a module that declares queries
+    but is missing from that list would silently drop them."""
+    import glob
+    import re
+
+    from log_collector_spark import registry
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    declaring = set()
+    for path in glob.glob(os.path.join(root, "log_collector_spark", "**",
+                                       "*.py"), recursive=True):
+        if re.search(r"^register\(", open(path).read(), re.M):
+            rel = os.path.relpath(path, root)[:-len(".py")]
+            declaring.add(rel.replace(os.sep, "."))
+    assert declaring == set(registry.MODULES)
 
 
 def test_every_oracle_has_a_query(spark):
@@ -52,7 +85,7 @@ _TIE_PRONE = __import__("re").compile(
     r"spark_partition_id|rand\(")
 
 
-def test_tie_prone_queries_are_value_deterministic(spark):
+def test_tie_prone_queries_are_value_deterministic(spark, built):
     """The r3 driver-hash failures' enabling condition was value
     NON-determinism in tie-prone operators (rank/limit picks under an
     under-specified ORDER BY) — a property no schema check sees. This
@@ -69,8 +102,9 @@ def test_tie_prone_queries_are_value_deterministic(spark):
 
     qs = E.queries()
     prone = []
-    for name, fn in sorted(qs.items()):
-        df = fn(spark, SF)
+    for name, df in built.items():
+        if isinstance(df, Exception):
+            raise df
         if _TIE_PRONE.search(df._jdf.queryExecution().optimizedPlan()
                              .toString()):
             prone.append(name)

@@ -893,6 +893,17 @@ def test_png_codec_kernel():
     with pytest.raises(ValueError, match="signature"):
         M.decode_png(b"\x89PNX" + b"\x00" * 20)
 
+    # a chunk whose declared length runs past the payload (cut mid-IDAT,
+    # or a corrupted length) is rejected up front by both entry points
+    whole = M.encode_png(47)
+    cut = whole[:bytes(whole).index(b"IDAT") + 10]
+    bogus = bytearray(whole)
+    bogus[8:12] = struct.pack(">I", 1 << 30)   # IHDR claims 1 GiB
+    for bad in (cut, bytes(bogus)):
+        for fn in (M.decode_png, M.ahash_png):
+            with pytest.raises(ValueError, match="truncated chunk"):
+                fn(bad)
+
     # 16-bit depth and palette color are honestly unsupported
     def mk(depth, ctype):
         ihdr = struct.pack(">IIBBBBB", 1, 1, depth, ctype, 0, 0, 0)
@@ -970,6 +981,33 @@ def test_kcenter_greedy_semantics(spark):
     assert all(a >= b for a, b in zip(curve, curve[1:])), curve
     assert rows[k]["center_id"] == -1
     assert rows[k]["sel_d2"] <= curve[-1]
+
+
+def test_kcenter_never_reelects_a_center_on_coincident_points(spark):
+    """Three distinct positions, each held by several vec_ids: after
+    three rounds every remaining max-min d² is 0 and the tie-break must
+    pick the smallest NOT-yet-chosen vec_id (the oracle's NOT IN), never
+    re-elect a chosen one. Spark and the DuckDB oracle agree row for
+    row."""
+    import pandas as pd
+
+    from log_collector_spark.textops import similarity as S
+
+    k = S.K_CENTER_K
+    spots = ([0.0] * 4, [0.5] * 4, [-0.5, 0.5, -0.5, 0.5])
+    pdf = pd.DataFrame({"vec_id": range(1, 13),
+                        "embedding": [spots[i % 3] for i in range(12)]})
+    got = [tuple(r) for r in S.k_center_select(
+        spark.createDataFrame(pdf, "vec_id bigint, embedding array<float>"),
+        k=k).collect()]
+    con = duckdb.connect()
+    con.register("emb", pdf)
+    want = [tuple(r) for r in con.execute(
+        S.sql_k_center_select("emb", k=k)).fetchall()]
+    ids = [c for rnd, c, _ in got if rnd < k]
+    assert len(set(ids)) == k, ids
+    assert [d2 for rnd, _, d2 in got if 3 <= rnd < k] == [0] * (k - 3)
+    assert got == want
 
 
 def test_pagerank_step_fixed_point_semantics(spark):
