@@ -148,13 +148,14 @@ _KEYWORDS = {"AND", "AS", "BETWEEN", "BIGINT", "BY", "CASE", "CURRENT",
              "DISTINCT", "DOUBLE", "ELSE", "END", "IS", "NOT", "NULL", "OR",
              "ORDER", "OVER", "PARTITION", "PRECEDING", "ROW", "ROWS",
              "THEN", "UNBOUNDED", "VARCHAR", "WHEN"}
-# functions whose value is non-negative whatever their arguments are
+# calls whose value is non-negative whatever their arguments are, and
+# OVER (...) window specs, whose columns order rows rather than add value
 _NON_NEGATIVE_CALLS = ("abs", "len", "length", "strlen", "count",
                        "row_number", "over")
 
 
-def _numerator(sql: str, i: int) -> tuple[int, str]:
-    """Start and text of the left operand of the division at i: the
+def _numerator(sql: str, i: int) -> str:
+    """Text of the left operand of the division at i: the
     multiplicative chain back to the nearest lower-precedence operator,
     comma, keyword or open paren."""
     j, depth = i, 0
@@ -178,7 +179,7 @@ def _numerator(sql: str, i: int) -> tuple[int, str]:
             if not (c.isalnum() or c == "_") and _STOP.search(sql[:j]):
                 break
         j -= 1
-    return j, " ".join(sql[j:i].split())
+    return " ".join(sql[j:i].split())
 
 
 def _strip_calls(text: str, names: tuple[str, ...]) -> str:
@@ -203,9 +204,9 @@ def _columns(text: str) -> set[str]:
     return out
 
 
-def _sign_guards(sql: str) -> list[tuple[int, int, list[str]]]:
-    """(start, end, compared expressions) of each CASE branch condition
-    that compares two expressions (``WHEN a >= b THEN``)."""
+def _sign_guards(sql: str) -> list[tuple[int, int, str, str]]:
+    """(start, end, lhs, rhs) of the CASE owning each branch condition
+    that compares two expressions (``WHEN lhs >= rhs THEN``)."""
     spans, stack = {}, []
     for t in re.finditer(r"\bCASE\b|\bEND\b", sql, re.I):
         if t.group(0).upper() == "CASE":
@@ -214,44 +215,51 @@ def _sign_guards(sql: str) -> list[tuple[int, int, list[str]]]:
             spans[stack.pop()] = t.end()
     operand = r"((?:(?!\b(?:WHEN|THEN|ELSE|END)\b).)+?)"
     out = []
-    for w in re.finditer(r"\bWHEN\s+" + operand + r"\s*(>=|>|<=|<)\s*"
+    for w in re.finditer(r"\bWHEN\s+" + operand + r"\s*(?:>=|>|<=|<)\s*"
                          + operand + r"\s+THEN\b", sql, re.I | re.S):
         owner = max((s for s in spans if s < w.start() <= spans[s]),
                     default=None)
-        sides = [" ".join(x.split()) for x in (w.group(1), w.group(3))]
         if owner is not None:
-            out.append((owner, spans[owner], [x for x in sides if x != "0"]))
+            lhs, rhs = (" ".join(x.split()) for x in w.group(1, 2))
+            out.append((owner, spans[owner], lhs, rhs))
     return out
 
 
-def _abs_split(sql: str, at: int, start: int, num: str, guards) -> bool:
-    """The division at `at` sits in a CASE that tests the sign of its
-    numerator: either the numerator contains the compared expressions
-    (the non-negative branch) or the division's result is negated and the
-    numerator is built from the compared columns (the negative branch)."""
-    negated = re.search(r"-\s*\(*\s*$", sql[:start]) is not None
-    for a, b, sides in guards:
+def _non_negative(num: str) -> bool:
+    """No subtraction or negation, and only columns known non-negative."""
+    bare = _strip_calls(re.sub(r"'[^']*'", "''", num), _NON_NEGATIVE_CALLS)
+    allowed = set().union(*NON_NEGATIVE_COLUMNS.values())
+    return not re.search(r"-(?!>)", bare) and _columns(bare) <= allowed
+
+
+def _abs_split(at: int, num: str, guards) -> bool:
+    """The division at `at` sits in a CASE whose branch is chosen by the
+    sign of the numerator's signed part (``x`` of ``x >= 0``, ``a - b`` of
+    ``a >= b``, either way round): with that part replaced by 0, the rest
+    of the numerator is non-negative."""
+    for a, b, lhs, rhs in guards:
         if not a <= at < b:
             continue
-        if all(x in num for x in sides):
-            return True
-        if negated and set().union(*map(_columns, sides)) <= _columns(num):
-            return True
+        signed = [f"{lhs} - {rhs}", f"{rhs} - {lhs}"]
+        if rhs == "0":
+            signed = [lhs] + [" - ".join(reversed(lhs.split(" - ")))
+                              for _ in [0] if lhs.count(" - ") == 1]
+        for part in signed:
+            rx = r"(?<![\w.])" + re.escape(part) + r"(?![\w(])"
+            if re.search(rx, num) and \
+                    _non_negative(re.sub(rx, "0", num).replace("-0", "0")):
+                return True
     return False
 
 
 def _unsafe_divisions(sql: str) -> list[str]:
-    allowed = set().union(*NON_NEGATIVE_COLUMNS.values())
     guards = _sign_guards(sql)
     bad = []
     for m in _HIT.finditer(sql):
-        start, num = _numerator(sql, m.start())
-        if num in NON_NEGATIVE_NUMERATORS or \
-                _abs_split(sql, m.start(), start, num, guards):
-            continue
-        bare = _strip_calls(re.sub(r"'[^']*'", "''", num),
-                            _NON_NEGATIVE_CALLS)
-        if re.search(r"-(?!>)", bare) or not _columns(bare) <= allowed:
+        num = _numerator(sql, m.start())
+        if num not in NON_NEGATIVE_NUMERATORS and \
+                not _abs_split(m.start(), num, guards) and \
+                not _non_negative(num):
             bad.append(num)
     return bad
 
@@ -273,6 +281,10 @@ def test_sign_lint_flags_a_bare_signed_numerator():
     assert _unsafe_divisions("SELECT (n_docs - k) // 2 FROM t") == [
         "(n_docs - k)"]
     assert _unsafe_divisions("SELECT n_docs * 1000 // n FROM t") == []
+    # a guard on the denominator is not a sign split of the numerator
+    assert _unsafe_divisions(
+        "SELECT CASE WHEN n > 0 THEN (x - n) * 1000 // n END FROM t") == [
+        "(x - n) * 1000"]
 
 
 # ---------------------------------------------------------------------------
