@@ -65,19 +65,10 @@ def capture_line(compiled: CompiledGrok, line: str) -> dict[str, Any] | None:
     return capture
 
 
-def clean_map(capture: dict[str, Any],
-              rename: dict[str, str] | None = None,
-              remove: Iterable[str] = ()) -> dict[str, Any]:
-    """Garbage.rename + Garbage.remove (grok/api/Garbage.java:95-144).
-    'UNWANTED' is always removed."""
-    if rename:
-        for old in sorted(rename):  # toRename is a TreeMap
-            if old in capture:
-                capture[rename[old]] = capture.pop(old)
-    removes = {"UNWANTED", *remove}
-    for k in list(capture.keys()):
-        if k in removes:
-            del capture[k]
+def clean_map(capture: dict[str, Any]) -> dict[str, Any]:
+    """Garbage.remove (grok/api/Garbage.java:95-144): 'UNWANTED' is always
+    removed."""
+    capture.pop("UNWANTED", None)
     return capture
 
 

@@ -1,19 +1,20 @@
-"""Vectorized grok parse over pandas/Arrow batches (NO per-row Python UDFs).
+"""Vectorized grok parse over Arrow batches (NO per-row Python UDFs).
 
 This is the engine's analog of the reference's per-line loop
 (reader/file/DefaultFileReader.java:233-324 + grok/api/Match.java:142-207),
 re-expressed as batch columnar operations:
 
-- ONE regex pass per batch (``Series.str.extract`` with the precompiled,
-  driver-expanded pattern — the "precompiled pattern dictionary applied
-  per-batch" mandated by the target spec),
+- ONE regex pass per batch with the precompiled, driver-expanded pattern
+  (RE2 ``extract_regex`` where a strictly narrower form of it exists, the
+  exact Python engine for the remaining rows) — the "precompiled pattern
+  dictionary applied per-batch" mandated by the target spec,
 - typed conversion as numpy/pandas column ops (strict-Java validity masks;
   failure → ``""`` in the serialized record, null in the typed column),
 - SimpleDateFormat → epoch-ms as pure int64 arithmetic (Hinnant
   days-from-civil), no datetime objects,
 - Gson-equal ``parsed_json`` assembled by vectorized string concatenation of
-  per-key fragments in sorted-key order — byte-identical to the single-row
-  oracle (tests enforce this).
+  per-key fragments in sorted-key order (pyarrow C++ string kernels) —
+  byte-identical to the single-row oracle (tests enforce this).
 
 ``;json``-typed captures (dynamic key sets, Converter.java:235-270) share the
 same single regex pass and columnar assembly; the only per-row Python they add
@@ -27,18 +28,13 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-
-try:  # pyarrow C++ kernels for the string hot paths (always present under
-    # Spark's Arrow runtime; the pandas fallbacks remain for bare environs)
-    import pyarrow as pa
-    import pyarrow.compute as pc
-except Exception:  # pragma: no cover
-    pa = None
-    pc = None
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from log_collector_spark.grok.compiler import CompiledGrok, CaptureSpec
 from log_collector_spark.grok.converters import _sdf_to_regex, _DEFAULT_DATETIME_FMT
-from log_collector_spark.grok.gson import GSON_ESCAPE_TABLE, java_double_str, java_float_str
+from log_collector_spark.grok.gson import (
+    GSON_ESCAPE_TABLE, gson_escape, java_double_str, java_float_str)
 
 _INT_FULL = re.compile(r"^[+-]?[0-9]+$")
 _FP_FULL = re.compile(r"^[+-]?((\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?|Infinity|NaN)[fFdD]?$")
@@ -306,25 +302,6 @@ def _clean_arrow(arr: "pa.Array") -> "pa.Array":
     return pc.if_else(single, pa.scalar("", pa.string()), out)
 
 
-def _clean_string_vec(v: pd.Series) -> pd.Series:
-    """Match.cleanString vectorized: strip symmetric quotes."""
-    if pc is not None:
-        return _clean_arrow(
-            pa.Array.from_pandas(v, type=pa.string())
-        ).to_pandas().astype("string")
-    v = v.astype("string")
-    ln = v.str.len().fillna(0)
-    first = v.str[0]
-    last = v.str[-1]
-    single_quote = (ln == 1) & first.isin(['"', "'"])
-    sym = (ln >= 2) & (((first == '"') & (last == '"')) |
-                       ((first == "'") & (last == "'")))
-    out = v.copy()
-    out = out.mask(sym, v.str.slice(1, -1))
-    out = out.mask(single_quote, "")
-    return out
-
-
 # backslash and double-quote are escaped UNCONDITIONALLY (two C++ passes;
 # backslash first — its replacement introduces backslashes that must not be
 # re-escaped). The remaining escape set is probed with ONE regex scan and the
@@ -345,15 +322,6 @@ def _escape_arrow(arr: "pa.Array") -> "pa.Array":
     return arr
 
 
-def _escape_vec(v: pd.Series) -> pd.Series:
-    """Gson HTML-safe escape (Arrow fast path, pandas translate fallback)."""
-    if pc is not None:
-        return _escape_arrow(
-            pa.Array.from_pandas(v, type=pa.string())
-        ).to_pandas().astype("string")
-    return v.str.translate(GSON_ESCAPE_TABLE)
-
-
 class VectorizedGrokParser:
     """Batch parser for one compiled grok expression.
 
@@ -368,15 +336,11 @@ class VectorizedGrokParser:
     RESERVED = {"parse_ok", "parsed_json"}
 
     def __init__(self, compiled: CompiledGrok,
-                 provenance: dict[str, str] | None = None,
-                 rename: dict[str, str] | None = None,
-                 remove: tuple[str, ...] = ()):
+                 provenance: dict[str, str] | None = None):
         self.compiled = compiled
         self.provenance = dict(provenance or {})
-        self.rename = dict(rename or {})
-        self.remove = set(remove) | {"UNWANTED"}
-        self.has_json = any(c.type == "json" for c in compiled.captures)
         self._rx: re.Pattern | None = None
+        self._fast = self._fast_pattern()
         # typed output schema: first spec per distinct visible key
         self.typed_keys: list[tuple[str, str | None]] = []
         seen = set()
@@ -389,9 +353,10 @@ class VectorizedGrokParser:
                 raise ValueError(f"capture key {k!r} collides with reserved column")
             self.typed_keys.append((k, c.type))
 
-    def _final_key(self, key: str) -> str | None:
-        key = self.rename.get(key, key)
-        return None if key in self.remove else key
+    @staticmethod
+    def _final_key(key: str) -> str | None:
+        """Garbage.remove: the UNWANTED key never reaches the record."""
+        return None if key == "UNWANTED" else key
 
     def pattern(self) -> re.Pattern:
         if self._rx is None:
@@ -415,7 +380,9 @@ class VectorizedGrokParser:
 
     def _fast_pattern(self) -> str | None:
         """RE2 pattern string, or None when this expression isn't in the
-        fast-path family (then every row takes the Python loop)."""
+        fast-path family or RE2 rejects it (then every row takes the Python
+        loop). Eligibility is decided once here, by compiling the pattern
+        against a one-row array, never per batch."""
         pr = self.compiled.python_regex
         m = self._JSON_TAIL_RX.search(pr)
         if m is None or self._ISO_YEAR not in pr:
@@ -423,6 +390,10 @@ class VectorizedGrokParser:
         pr = pr[:m.start()] + f"(?P<{m.group(1)}>\\{{.*\\}})$"
         pr = "^" + pr.replace(self._ISO_YEAR, r"\d{4}")
         if "(?>" in pr:   # other atomic groups → not fast-path eligible
+            return None
+        try:
+            pc.extract_regex(pa.array([""], pa.string()), pattern=pr)
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
             return None
         return pr
 
@@ -444,21 +415,14 @@ class VectorizedGrokParser:
                 # two-arg scalar convert returns null (Converter IConverter base)
                 frag[present] = "null"
                 return frag, None
-            if pc is not None:  # stay in Arrow end-to-end (C++ kernels)
-                arr = pa.Array.from_pandas(v, type=pa.string())
-                cleaned = _clean_arrow(arr)
-                q = pa.scalar('"', pa.string())
-                fr = pc.binary_join_element_wise(q, _escape_arrow(cleaned), q, "")
-                fr_np = fr.fill_null("").to_numpy(zero_copy_only=False)
-                frag[present] = fr_np[present]
-                typed = cleaned.to_numpy(zero_copy_only=False)
-                return frag, typed
-            cleaned = _clean_string_vec(v.astype("string"))
-            esc = _escape_vec(cleaned)
-            fr = ('"' + esc + '"').to_numpy(dtype=object, na_value="")
-            frag[present] = fr[present]
-            typed = cleaned.to_numpy(dtype=object, na_value=None)
-            return frag, typed
+            # stays in Arrow end-to-end (C++ kernels)
+            arr = pa.Array.from_pandas(v, type=pa.string())
+            cleaned = _clean_arrow(arr)
+            q = pa.scalar('"', pa.string())
+            fr = pc.binary_join_element_wise(q, _escape_arrow(cleaned), q, "")
+            fr_np = fr.fill_null("").to_numpy(zero_copy_only=False)
+            frag[present] = fr_np[present]
+            return frag, cleaned.to_numpy(zero_copy_only=False)
         if t in ("date", "datetime"):
             fmt = spec.fmt or _DEFAULT_DATETIME_FMT
             try:
@@ -592,8 +556,6 @@ class VectorizedGrokParser:
 
     # -- matching --------------------------------------------------------------
 
-    _FAST_SENTINEL = object()
-
     def _match_groups(self, lst: list, n: int, blank: np.ndarray,
                       rx: re.Pattern, gidx: dict
                       ) -> tuple[dict[str, pd.Series], np.ndarray]:
@@ -601,36 +563,27 @@ class VectorizedGrokParser:
         + exact-Python fallback. Group values of unmatched/blank rows are
         None and never read downstream (every consumer masks on
         ``matched``)."""
-        if not hasattr(self, "_fast"):
-            self._fast = self._fast_pattern()
         cols: dict[str, np.ndarray] = {
             name: np.full(n, None, dtype=object) for name in gidx}
         matched = np.zeros(n, dtype=bool)
         todo = ~blank
         if self._fast is not None and n:
-            try:
-                import pyarrow as pa
-                import pyarrow.compute as pc
-
-                arr = pa.array(lst, type=pa.string())
-                ascii_ok = pc.string_is_ascii(arr)
-                st = pc.extract_regex(arr, pattern=self._fast)
-                hit = (pc.and_(ascii_ok, st.is_valid()).to_numpy(
-                    zero_copy_only=False) & todo)
-                if hit.any():
-                    fields = {f.name for f in st.type}
-                    for name in gidx:
-                        if name in fields:
-                            vals = st.field(name).to_numpy(
-                                zero_copy_only=False)
-                            cols[name][hit] = vals[hit]
-                        # groups absent from the fast pattern (e.g. the
-                        # optional timezone) are None on fast rows — the
-                        # narrow pattern only matches rows without them
-                    matched |= hit
-                    todo &= ~hit
-            except Exception:
-                pass  # pyarrow/RE2 unavailable or rejected → full fallback
+            arr = pa.array(lst, type=pa.string())
+            ascii_ok = pc.string_is_ascii(arr)
+            st = pc.extract_regex(arr, pattern=self._fast)
+            hit = (pc.and_(ascii_ok, st.is_valid()).to_numpy(
+                zero_copy_only=False) & todo)
+            if hit.any():
+                fields = {f.name for f in st.type}
+                for name in gidx:
+                    if name in fields:
+                        vals = st.field(name).to_numpy(zero_copy_only=False)
+                        cols[name][hit] = vals[hit]
+                    # groups absent from the fast pattern (e.g. the
+                    # optional timezone) are None on fast rows — the
+                    # narrow pattern only matches rows without them
+                matched |= hit
+                todo &= ~hit
         if todo.any():
             names = list(gidx)
             idxs = [gidx[name] for name in names]
@@ -700,16 +653,13 @@ class VectorizedGrokParser:
 
         # provenance constants: Java map.put OVERWRITES any parsed value
         # (DefaultFileReader.java:275-277), so they REPLACE the key's slots
-        from log_collector_spark.grok.gson import gson_escape
         for k, v in self.provenance.items():
             pf = np.full(n, '"' + gson_escape(str(v)) + '"', dtype=object)
             slots[k] = [(matched.copy(), pf, "append")]
 
         # resolve each key (scalar / list / omitted) and join sorted entries.
         # String building runs as pyarrow C++ kernels (binary_join_element_wise)
-        # when available — object-array "+" is a per-row Python loop.
-        from log_collector_spark.grok.gson import gson_escape as _ge
-
+        # — object-array "+" is a per-row Python loop.
         def _np_entry(key: str, slist) -> np.ndarray:
             cnt = np.zeros(n, dtype="int64")
             acc = np.full(n, "", dtype=object)
@@ -720,50 +670,42 @@ class VectorizedGrokParser:
                 else:
                     cnt += has
                     acc = np.where(has, np.where(acc == "", frag, acc + "," + frag), acc)
-            keyq = '"' + _ge(key) + '":'
+            keyq = '"' + gson_escape(key) + '":'
             single_null = (cnt == 1) & ((acc == "null") | (acc == ""))
             body = np.where(cnt >= 2, "[" + acc + "]", acc)
             return np.where((cnt == 0) | single_null, "", keyq + body).astype(object)
 
-        if pc is not None:
-            joined = None
-            empty_s = pa.scalar("", pa.string())
-            for key in sorted(slots.keys()):
-                slist = slots[key]
-                keyq = pa.scalar('"' + _ge(key) + '":', pa.string())
-                if len(slist) == 1:
-                    has, frag, _mode = slist[0]
-                    fa = pa.array(frag, type=pa.string())
-                    is_null_entry = pc.equal(fa, "null")
-                    body = pc.binary_join_element_wise(keyq, fa, "")
-                    entry = pc.if_else(
-                        pa.array(has & ~is_null_entry.fill_null(False).to_numpy(
-                            zero_copy_only=False)),
-                        body, empty_s)
-                else:  # repeated key → list collect (rare)
-                    entry = pa.array(_np_entry(key, slist), type=pa.string())
-                if joined is None:
-                    joined = entry
-                else:
-                    both = pc.binary_join_element_wise(joined, entry, ",")
-                    joined = pc.if_else(pc.equal(entry, ""), joined,
-                                        pc.if_else(pc.equal(joined, ""), entry, both))
+        joined = None
+        empty_s = pa.scalar("", pa.string())
+        for key in sorted(slots.keys()):
+            slist = slots[key]
+            keyq = pa.scalar('"' + gson_escape(key) + '":', pa.string())
+            if len(slist) == 1:
+                has, frag, _mode = slist[0]
+                fa = pa.array(frag, type=pa.string())
+                is_null_entry = pc.equal(fa, "null")
+                body = pc.binary_join_element_wise(keyq, fa, "")
+                entry = pc.if_else(
+                    pa.array(has & ~is_null_entry.fill_null(False).to_numpy(
+                        zero_copy_only=False)),
+                    body, empty_s)
+            else:  # repeated key → list collect (rare)
+                entry = pa.array(_np_entry(key, slist), type=pa.string())
             if joined is None:
-                joined = pa.array(np.full(n, "", dtype=object), type=pa.string())
-            wrapped = pc.binary_join_element_wise(
-                pa.scalar("{", pa.string()), joined,
-                pa.scalar("}", pa.string()), "")
-            parsed_json = pc.if_else(pa.array(matched), wrapped,
-                                     pa.scalar(None, pa.string()))
-            parsed_json = parsed_json.to_pandas().astype(object).to_numpy()
-            parsed_json = np.where(matched, parsed_json, None)
-        else:
-            joined = np.full(n, "", dtype=object)
-            for key in sorted(slots.keys()):
-                entry = _np_entry(key, slots[key])
-                joined = np.where(entry == "", joined,
-                                  np.where(joined == "", entry, joined + "," + entry))
-            parsed_json = np.where(matched, "{" + joined + "}", None)
+                joined = entry
+            else:
+                both = pc.binary_join_element_wise(joined, entry, ",")
+                joined = pc.if_else(pc.equal(entry, ""), joined,
+                                    pc.if_else(pc.equal(joined, ""), entry, both))
+        if joined is None:
+            joined = pa.array(np.full(n, "", dtype=object), type=pa.string())
+        wrapped = pc.binary_join_element_wise(
+            pa.scalar("{", pa.string()), joined,
+            pa.scalar("}", pa.string()), "")
+        parsed_json = pc.if_else(pa.array(matched), wrapped,
+                                 pa.scalar(None, pa.string()))
+        parsed_json = parsed_json.to_pandas().astype(object).to_numpy()
+        parsed_json = np.where(matched, parsed_json, None)
 
         out = {"parse_ok": matched, "parsed_json": pd.Series(parsed_json, dtype=object)}
         for key, _typ in self.typed_keys:

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from log_collector_spark.operators import aggregate as agg_ops
 from log_collector_spark.plans import pipeline as pl
 from log_collector_spark.registry import (docs, events, register, tbl, tx_glob,
                                           tx_view)
@@ -1018,7 +1019,7 @@ register(
 def _tx_per_turn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = pl.full_pipeline(spark, sf_dir)   # needs parsed_json (wide)
     return ordered_salted(
-        routed.filter(F.col("parse_ok") & ~F.col("is_oversize"))
+        routed.filter(agg_ops.success_expr())
               .select("conv_id", "turn_idx", "parsed_json"))
 
 

@@ -72,29 +72,34 @@ def make_parse_udf(parser: VectorizedGrokParser):
     return grok_parse_udf.asNondeterministic()
 
 
-def grok_parse(df: DataFrame, compiled: CompiledGrok, *,
-               text_col: str = "text",
-               provenance: dict[str, str] | None = None,
-               rename: dict[str, str] | None = None,
-               remove: tuple[str, ...] = (),
-               max_size: int = DEFAULT_MAX_SIZE_BYTES,
-               prefix: str = "") -> DataFrame:
-    """Append parse columns: parse_ok, parsed_json, typed captures, plus the
-    native predicates is_blank / is_oversize (reader decision-table inputs).
+def is_blank() -> Column:
+    """F1 input: the line is empty after Java ``trim`` (skipped, no sink)."""
+    return F.trim(F.coalesce(F.col("text"), F.lit(""))) == ""
 
-    ``prefix`` namespaces capture columns if they would collide with input
-    columns.
+
+def is_oversize(max_size: int) -> Column:
+    """F2 input: the line's UTF-8 size reaches ``max_size`` (errors sink)."""
+    return F.octet_length(F.coalesce(F.col("text"), F.lit(""))) >= max_size
+
+
+def grok_parse(df: DataFrame, compiled: CompiledGrok, *,
+               provenance: dict[str, str] | None = None,
+               max_size: int = DEFAULT_MAX_SIZE_BYTES) -> DataFrame:
+    """Append parse columns over ``text``: parse_ok, parsed_json, typed
+    captures, plus the native predicates is_blank / is_oversize (reader
+    decision-table inputs).
+
+    A capture column that would collide with an input column is named
+    ``<key>_parsed``.
     """
-    parser = VectorizedGrokParser(compiled, provenance=provenance,
-                                  rename=rename, remove=remove)
+    parser = VectorizedGrokParser(compiled, provenance=provenance)
     udf = make_parse_udf(parser)
     existing = set(df.columns)
     out = (
         df
-        .withColumn("is_blank", F.trim(F.coalesce(F.col(text_col), F.lit(""))) == "")
-        .withColumn("is_oversize",
-                    F.octet_length(F.coalesce(F.col(text_col), F.lit(""))) >= max_size)
-        .withColumn("_parsed", udf(F.col(text_col)))
+        .withColumn("is_blank", is_blank())
+        .withColumn("is_oversize", is_oversize(max_size))
+        .withColumn("_parsed", udf(F.col("text")))
     )
     sel: list[Column] = [F.col(c) for c in df.columns] + [
         F.col("is_blank"), F.col("is_oversize"),
@@ -102,8 +107,6 @@ def grok_parse(df: DataFrame, compiled: CompiledGrok, *,
         F.col("_parsed.parsed_json").alias("parsed_json"),
     ]
     for key, _ in parser.typed_keys:
-        name = prefix + key
-        if name in existing:
-            name = prefix + key + "_parsed"
+        name = key + "_parsed" if key in existing else key
         sel.append(F.col(f"_parsed.`{key}`").alias(name))
     return out.select(*sel)

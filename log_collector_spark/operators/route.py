@@ -56,17 +56,18 @@ def sink_tallies(df: DataFrame) -> DataFrame:
 
 
 def fanout_write(df: DataFrame, base_path: str, *,
-                 fmt: str = "parquet", mode: str = "append",
-                 partition_extra: list[str] | None = None) -> None:
-    """One partitioned write = full fan-out (single job, no per-sink scan).
+                 mode: str = "append") -> None:
+    """One partitioned parquet write = full fan-out (single job, no per-sink
+    scan). Blank rows (NULL sink) are skipped, never written.
 
-    At cluster scale this is the right shape: dynamic partition insert writes
-    every sink's files in one pass over the data; per-sink separate writes
-    would re-scan (or re-shuffle) once per sink.
+    The only fan-out writer: batch resume, both streaming pipelines and the
+    configured ``parquet`` writer all call it. At cluster scale this is the
+    right shape: dynamic partition insert writes every sink's files in one
+    pass over the data; per-sink separate writes would re-scan (or
+    re-shuffle) once per sink.
     """
-    cols = ["sink"] + (partition_extra or [])
     (df.filter(F.col("sink").isNotNull())
-       .write.partitionBy(*cols).mode(mode).format(fmt).save(base_path))
+       .write.mode(mode).partitionBy("sink").parquet(base_path))
 
 
 def fanout_spool(df: DataFrame, base_path: str,

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from log_collector_spark.operators import aggregate as agg_ops
 from log_collector_spark.plans import pipeline as pl
 from log_collector_spark.registry import register, routed_slim, tx_view
 
@@ -59,7 +60,7 @@ _SQL_TOOL_LUT = ("(VALUES ('bash','exec',TRUE), ('read','fs',FALSE),"
 
 
 def _clean(routed: DataFrame) -> DataFrame:
-    return routed.filter(F.col("parse_ok") & ~F.col("is_oversize"))
+    return routed.filter(agg_ops.success_expr())
 
 
 def tool_latency(routed: DataFrame) -> DataFrame:
@@ -131,8 +132,6 @@ def sql_role_alternation(tx_view: str) -> str:
 def conversation_stats_ms(routed: DataFrame) -> DataFrame:
     """operators.aggregate.conversation_stats with epoch-ms spans (the
     repo's hash-stable timestamp convention) over the routed clean rows."""
-    from log_collector_spark.operators import aggregate as agg_ops
-
     stats = agg_ops.conversation_stats(_clean(routed))
     ms = lambda c: F.expr(f"unix_micros(cast({c} as timestamp)) div 1000")
     return stats.select(

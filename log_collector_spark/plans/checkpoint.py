@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_collector_spark.operators import aggregate as agg_ops
+from log_collector_spark.operators import route as route_ops
 from log_collector_spark.plans import pipeline as pl
 
 CKPT_TABLE = "checkpoint"
@@ -42,30 +44,62 @@ def _ckpt_path(ckpt_dir: str) -> str:
 def _table_exists(path: str) -> bool:
     """The checkpoint tables legitimately don't exist on a first run —
     check before spark.read so Spark's datasource doesn't log a scary
-    (but caught) FileNotFoundException at ERROR level."""
+    (but caught) FileNotFoundException at ERROR level.
+
+    Every checkpoint read comes through here, so this is also where a
+    rewrite that crashed between its two renames (see :func:`_rewrite`)
+    is rolled back: the table is missing but its ``.compact-old`` copy is
+    complete, and it is renamed back before anyone can mistake the table
+    for a first run."""
+    old = path + ".compact-old"
+    if not os.path.isdir(path) and os.path.isdir(old):
+        os.rename(old, path)
     return os.path.isdir(path)
 
 
-def committed_files(spark: SparkSession, ckpt_dir: str) -> set[str]:
+def _rewrite(path: str, tbl) -> None:
+    """Replace the parquet table at ``path`` by the pyarrow table ``tbl``.
+
+    The new file is fully written into a staging dir first; the swap is two
+    renames. A crash before the first rename leaves the old table in place;
+    a crash between them leaves only ``.compact-old``, which
+    :func:`_table_exists` renames back before any read. No reader sees an
+    empty table, so ``committed_batches`` never loses a batch and
+    ``clean_orphan_staging`` never deletes committed output."""
+    import pyarrow.parquet as pq
+
+    stage = path + ".compact-staging"
+    old = path + ".compact-old"
+    if os.path.isdir(stage):
+        shutil.rmtree(stage)
+    os.makedirs(stage)
+    pq.write_table(tbl, os.path.join(stage, "part-0000.parquet"))
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old)
+
+
+def _committed(spark: SparkSession, ckpt_dir: str, col: str) -> set[str]:
+    """Distinct values of one checkpoint-table column (empty on a first
+    run)."""
     path = _ckpt_path(ckpt_dir)
     if not _table_exists(path):
         return set()
     try:
-        rows = spark.read.parquet(path).select("src_file").distinct().collect()
+        rows = spark.read.parquet(path).select(col).distinct().collect()
     except Exception:
         return set()
-    return {r["src_file"] for r in rows}
+    return {r[col] for r in rows}
+
+
+def committed_files(spark: SparkSession, ckpt_dir: str) -> set[str]:
+    return _committed(spark, ckpt_dir, "src_file")
 
 
 def committed_batches(spark: SparkSession, ckpt_dir: str) -> set[str]:
-    path = _ckpt_path(ckpt_dir)
-    if not _table_exists(path):
-        return set()
-    try:
-        rows = spark.read.parquet(path).select("batch_id").distinct().collect()
-    except Exception:
-        return set()
-    return {r["batch_id"] for r in rows}
+    return _committed(spark, ckpt_dir, "batch_id")
 
 
 def clean_orphan_staging(spark: SparkSession, out_dir: str,
@@ -78,8 +112,6 @@ def clean_orphan_staging(spark: SparkSession, out_dir: str,
     would never be overwritten and ``read_output`` would double-count every
     row of the crashed batch. Run this before each batch (run_resumable does).
     """
-    import shutil
-
     if not os.path.isdir(out_dir):
         return []
     done = committed_batches(spark, ckpt_dir)
@@ -126,22 +158,28 @@ def batch_id(files: list[str]) -> str:
     return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:16]
 
 
+# One checkpoint row: (column, SQL type). lineage_stats writes exactly these
+# columns and the Iceberg DDL declares exactly these.
+CKPT_ROW = (("run_id", "STRING"), ("batch_id", "STRING"), ("stage", "STRING"),
+            ("src_file", "STRING"), ("partition_id", "INT"),
+            ("lines", "BIGINT"), ("success", "BIGINT"), ("error", "BIGINT"),
+            ("committed_at", "TIMESTAMP"))
+
+
 def lineage_stats(routed: DataFrame, run_id: str, bid: str,
                   stage: str) -> DataFrame:
     """Per (source file, physical partition) lineage + metric counters."""
-    return (routed
-            .withColumn("_pid", F.spark_partition_id())
-            .groupBy(F.col("_src_file").alias("src_file"), F.col("_pid"))
-            .agg(F.count(F.lit(1)).alias("lines"),
-                 F.sum(agg_ops.success_expr().cast("long")).alias("success"),
-                 F.sum(agg_ops.error_expr().cast("long")).alias("error"))
-            .select(F.lit(run_id).alias("run_id"),
-                    F.lit(bid).alias("batch_id"),
-                    F.lit(stage).alias("stage"),
-                    "src_file",
-                    F.col("_pid").alias("partition_id"),
-                    "lines", "success", "error",
-                    F.current_timestamp().alias("committed_at")))
+    counts = (routed
+              .withColumn("_pid", F.spark_partition_id())
+              .groupBy(F.col("_src_file").alias("src_file"), "_pid")
+              .agg(F.count(F.lit(1)).alias("lines"),
+                   F.sum(agg_ops.success_expr().cast("long")).alias("success"),
+                   F.sum(agg_ops.error_expr().cast("long")).alias("error")))
+    named = {"run_id": F.lit(run_id), "batch_id": F.lit(bid),
+             "stage": F.lit(stage), "partition_id": F.col("_pid"),
+             "committed_at": F.current_timestamp()}
+    return counts.select(*[named.get(c, F.col(c)).cast(t).alias(c)
+                           for c, t in CKPT_ROW])
 
 
 FILESTATE_TABLE = "filestate"
@@ -158,6 +196,7 @@ def record_filestate(spark: SparkSession, ckpt_dir: str,
     rows = [(f, os.path.getsize(f)) for f in files if os.path.exists(f)]
     if not rows:
         return
+    _table_exists(_filestate_path(ckpt_dir))  # roll back a crashed rewrite
     spark.createDataFrame(rows, "src_file string, bytes long") \
         .coalesce(1).write.mode("append").parquet(_filestate_path(ckpt_dir))
 
@@ -208,32 +247,25 @@ def recover_truncated(spark: SparkSession, ckpt_dir: str) -> list[str]:
     bad = truncated_files(spark, ckpt_dir)
     if not bad:
         return []
-    import shutil
-
     import pyarrow as pa
     import pyarrow.compute as pac
     import pyarrow.parquet as pq
     badset = set(bad)
 
     ckpt = _ckpt_path(ckpt_dir)
-    if os.path.isdir(ckpt):
+    if _table_exists(ckpt):
         tbl = pq.read_table(ckpt)
         idx = tbl.schema.get_field_index("src_file")
         col = [TRUNCATED_TOMBSTONE + v if v in badset else v
                for v in tbl.column("src_file").to_pylist()]
-        tbl = tbl.set_column(idx, "src_file", pa.array(col, pa.string()))
-        shutil.rmtree(ckpt)
-        os.makedirs(ckpt)
-        pq.write_table(tbl, os.path.join(ckpt, "part-0000.parquet"))
+        _rewrite(ckpt, tbl.set_column(idx, "src_file",
+                                      pa.array(col, pa.string())))
 
     fs = _filestate_path(ckpt_dir)
-    if os.path.isdir(fs):
+    if _table_exists(fs):
         tbl = pq.read_table(fs)
-        keep = tbl.filter(pac.invert(pac.is_in(
-            tbl.column("src_file"), value_set=pa.array(bad))))
-        shutil.rmtree(fs)
-        os.makedirs(fs)
-        pq.write_table(keep, os.path.join(fs, "part-0000.parquet"))
+        _rewrite(fs, tbl.filter(pac.invert(pac.is_in(
+            tbl.column("src_file"), value_set=pa.array(bad)))))
     return bad
 
 
@@ -265,8 +297,7 @@ def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
                        F.regexp_replace("_src_file", "^file:(//)?", ""))
     routed = pl.route_stage(pl.enrich_stage(pl.parse_stage(df), spark))
     staging = os.path.join(out_dir, f"batch={bid}")
-    (routed.filter(F.col("sink").isNotNull())
-           .write.mode("overwrite").partitionBy("sink").parquet(staging))
+    route_ops.fanout_write(routed, staging, mode="overwrite")
     if crash_before_commit:
         return {"batch_id": bid, "files": files, "rows": -1,
                 "crashed": True}
@@ -286,8 +317,8 @@ def _empty_output(spark: SparkSession) -> DataFrame:
         [], "conv_id string, turn_idx int, role string, text string, "
             "tool string, ts timestamp, _src_file string")
     routed = pl.route_stage(pl.enrich_stage(pl.parse_stage(empty), spark))
-    # partitionBy("sink") read-back ordering: data columns first, the
-    # partition column last
+    # fan-out read-back ordering: data columns first, the sink partition
+    # column last
     cols = [c for c in routed.columns if c != "sink"] + ["sink"]
     return routed.select(*cols).limit(0)
 
@@ -318,8 +349,7 @@ def read_output(spark: SparkSession, out_dir: str,
 # statements. These emitters ARE that path: run them verbatim through
 # spark.sql() once the catalog exists; iceberg_available() is the gate.
 
-CKPT_TABLE_COLS = "run_id STRING, batch_id STRING, src_file STRING, " \
-                  "n_rows BIGINT, n_error BIGINT, committed_at TIMESTAMP"
+CKPT_TABLE_COLS = ", ".join(f"{c} {t}" for c, t in CKPT_ROW)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -378,42 +408,25 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> dict:
       superseded smaller rows changes no answer.
 
     Driver-side pyarrow (metadata scale, same as recover_truncated), and
-    crash-safe the same way resume itself is: the new file is fully
-    written into a staging dir first and the swap is two renames — a
-    crash between them leaves either the old or the new table readable,
-    and re-running compaction is idempotent. Returns per-table
-    (files_before, files_after, rows)."""
+    crash-safe through the same :func:`_rewrite`; re-running compaction is
+    idempotent. Returns per-table (files_before, files_after, rows)."""
     import glob
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     report = {}
 
-    def _swap(path: str, tbl) -> None:
-        stage = path + ".compact-staging"
-        if os.path.isdir(stage):
-            shutil.rmtree(stage)
-        os.makedirs(stage)
-        pq.write_table(tbl, os.path.join(stage, "part-0000.parquet"))
-        old = path + ".compact-old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(stage, path)
-        shutil.rmtree(old)
-
     ckpt = _ckpt_path(ckpt_dir)
-    if os.path.isdir(ckpt):
+    if _table_exists(ckpt):
         files = glob.glob(os.path.join(ckpt, "*.parquet"))
         tbl = pq.read_table(ckpt)
-        _swap(ckpt, tbl)
+        _rewrite(ckpt, tbl)
         report["checkpoint"] = {"files_before": len(files),
                                 "files_after": 1, "rows": tbl.num_rows}
 
     fs = _filestate_path(ckpt_dir)
-    if os.path.isdir(fs):
+    if _table_exists(fs):
         files = glob.glob(os.path.join(fs, "*.parquet"))
         tbl = pq.read_table(fs)
         agg = (pa.table({"src_file": tbl.column("src_file"),
@@ -421,7 +434,7 @@ def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> dict:
                .group_by("src_file").aggregate([("bytes", "max")])
                .rename_columns(["src_file", "bytes"]))
         agg = agg.sort_by("src_file")
-        _swap(fs, agg)
+        _rewrite(fs, agg)
         report["filestate"] = {"files_before": len(files),
                                "files_after": 1, "rows": agg.num_rows}
     return report

@@ -80,10 +80,8 @@ PARSERS: dict[str, Callable[[dict], Callable[[DataFrame], DataFrame]]] = {
 
 
 def _parquet_writer(conf: dict):
-    def write(df: DataFrame) -> None:
-        (df.write.mode("append").partitionBy("sink")
-           .parquet(conf["writer.parquet.path"]))
-    return write
+    from log_collector_spark.operators.route import fanout_write
+    return lambda df: fanout_write(df, conf["writer.parquet.path"])
 
 
 def _console_writer(conf: dict):
@@ -137,8 +135,9 @@ class ConfiguredPipeline:
     def transform(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
 
-        from log_collector_spark.operators import route as route_ops
         from log_collector_spark.operators import multiline as ml
+        from log_collector_spark.operators import parse as p_ops
+        from log_collector_spark.operators import route as route_ops
         from log_collector_spark.plans import pipeline as pl
 
         if self.multiline:
@@ -148,18 +147,13 @@ class ConfiguredPipeline:
         out = self.parse(df)
         # routing predicates: the grok stage emits them; the CSV stage maps
         # its empty-map failure (csv_ok) onto the same decision-table inputs
-        max_size = int(self.conf.get(MAX_SIZE, DEFAULT_MAX_SIZE_BYTES))
         if "parse_ok" not in out.columns:
             out = out.withColumn("parse_ok", F.col("csv_ok"))
         if "is_blank" not in out.columns:
-            out = out.withColumn(
-                "is_blank",
-                F.trim(F.coalesce(F.col("text"), F.lit(""))) == "")
+            out = out.withColumn("is_blank", p_ops.is_blank())
         if "is_oversize" not in out.columns:
-            out = out.withColumn(
-                "is_oversize",
-                F.octet_length(F.coalesce(F.col("text"), F.lit("")))
-                >= max_size)
+            max_size = int(self.conf.get(MAX_SIZE, DEFAULT_MAX_SIZE_BYTES))
+            out = out.withColumn("is_oversize", p_ops.is_oversize(max_size))
         if "role" in out.columns and "tool" in out.columns:
             out = pl.enrich_stage(out, spark)
         source = self.conf.get(SOURCE_NAME, "source")

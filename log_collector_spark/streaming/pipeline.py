@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from log_collector_spark.operators import aggregate as agg_ops
+from log_collector_spark.operators import route as route_ops
 from log_collector_spark.plans import pipeline as pl
 
 TRANSCRIPT_SCHEMA = T.StructType([
@@ -56,10 +58,8 @@ def start_pipeline_stream(spark: SparkSession, input_dir: str,
     src = read_transcript_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, _batch_id: int) -> None:
-        routed = pl.route_stage(
-            pl.enrich_stage(pl.parse_stage(batch_df), spark))
-        (routed.filter(F.col("sink").isNotNull())
-               .write.mode("append").partitionBy("sink").parquet(out_dir))
+        route_ops.fanout_write(pl.route_stage(
+            pl.enrich_stage(pl.parse_stage(batch_df), spark)), out_dir)
 
     w = src.writeStream.foreachBatch(process) \
         .option("checkpointLocation", checkpoint_loc)
@@ -177,15 +177,10 @@ def start_metered_pipeline_stream(spark: SparkSession, input_dir: str,
             pl.enrich_stage(pl.parse_stage(batch_df), spark))
         routed = routed.withColumn(
             "src", F.element_at(F.split(F.input_file_name(), "/"), -1))
-        (routed.filter(F.col("sink").isNotNull())
-               .write.mode("append").partitionBy("sink").parquet(out_dir))
+        route_ops.fanout_write(routed, out_dir)
         per_src = (routed.groupBy("src")
-                   .agg(F.sum(F.when(F.col("parse_ok")
-                                     & ~F.col("is_oversize"), 1)
-                              .otherwise(0)).alias("ok"),
-                        F.sum(F.when(~F.col("parse_ok")
-                                     | F.col("is_oversize"), 1)
-                              .otherwise(0)).alias("err"),
+                   .agg(F.sum(agg_ops.success_expr().cast("long")).alias("ok"),
+                        F.sum(agg_ops.error_expr().cast("long")).alias("err"),
                         F.max("logtime").alias("t_ms"))
                    .collect())  # one row per source file — driver-scale
         for r in per_src:

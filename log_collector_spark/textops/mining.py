@@ -256,8 +256,7 @@ register(
 
 def _tx_markov_next_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = routed_slim(spark, sf_dir)
-    clean = (routed.filter(F.col("parse_ok") & ~F.col("is_oversize"))
-                   .filter(F.col("tool").isNotNull())
+    clean = (TX._clean(routed).filter(F.col("tool").isNotNull())
                    .select("conv_id", "turn_idx", "tool"))
     return markov_next_event(clean, key_col="conv_id",
                              seq_col="turn_idx", type_col="tool")

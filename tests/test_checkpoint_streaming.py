@@ -8,6 +8,7 @@ metric buckets, and stateful multiline assembly across micro-batches.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 import time
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from log_collector_spark.operators import aggregate as agg_ops
 from log_collector_spark.plans import checkpoint as ck
 from log_collector_spark.plans import pipeline as pl
 
@@ -218,6 +220,72 @@ def test_truncate_of_batch_only_file_keeps_committed_output(spark, tmp_path,
     r3 = ck.run_resumable(spark, input_dir, ckpt, out, "run3",
                           detect_truncate=True)
     assert r3["files"] == []
+
+
+class _Crash(Exception):
+    pass
+
+
+def _tree(d: str) -> list[str]:
+    return sorted(os.path.relpath(os.path.join(r, f), d)
+                  for r, _dirs, fs in os.walk(d) for f in fs)
+
+
+def test_checkpoint_rewrite_crash_keeps_committed_batches(
+        spark, tmp_path, tx_files, monkeypatch):
+    """Both checkpoint rewrites (truncate recovery, compaction) killed at
+    each step — the parquet write, the first rename, the second rename —
+    then resumed: the committed batch must still be in committed_batches,
+    its output files must survive the next run's clean_orphan_staging
+    untouched, and its file must not be re-processed."""
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    snap = str(tmp_path / "snap")
+    os.makedirs(input_dir)
+    tbl = pq.read_table(tx_files[0])
+    pq.write_table(tbl.slice(0, 400), os.path.join(input_dir, "a.parquet"))
+    r1 = ck.run_resumable(spark, input_dir, ckpt, out, "run1",
+                          detect_truncate=True)
+    batch1_dir = os.path.join(out, f"batch={r1['batch_id']}")
+    committed = _tree(batch1_dir)
+    shutil.copytree(ckpt, os.path.join(snap, "ckpt"))
+    shutil.copytree(out, os.path.join(snap, "out"))
+    victim = r1["files"][0]  # truncated: recovery has a rewrite to do
+    tbl = pq.read_table(victim)
+    pq.write_table(tbl.slice(0, tbl.num_rows // 2), victim)
+
+    def boom(*a, **kw):
+        raise _Crash
+
+    for caller in (ck.recover_truncated, ck.compact_checkpoint):
+        for step in ("write", "rename1", "rename2"):
+            case = f"{caller.__name__}/{step}"
+            for d, src in ((ckpt, "ckpt"), (out, "out")):
+                shutil.rmtree(d)
+                shutil.copytree(os.path.join(snap, src), d)
+            with monkeypatch.context() as m:
+                if step == "write":
+                    m.setattr(pq, "write_table", boom)
+                else:
+                    calls, real = [], os.rename
+
+                    def rename(a, b, _k=int(step[-1])):
+                        calls.append(a)
+                        if len(calls) == _k:
+                            raise _Crash
+                        return real(a, b)
+                    m.setattr(os, "rename", rename)
+                with pytest.raises(_Crash):
+                    caller(spark, ckpt)
+            # the resumed run reads the checkpoint and cleans orphan
+            # staging dirs before anything else
+            r2 = ck.run_resumable(spark, input_dir, ckpt, out, "run2")
+            assert r2["files"] == [], case
+            assert r1["batch_id"] in ck.committed_batches(spark, ckpt), case
+            assert _tree(batch1_dir) == committed, case
 
 
 def test_read_output_empty_has_real_schema(spark, tmp_path):
@@ -483,6 +551,17 @@ def test_iceberg_checkpoint_sql_emitters(spark):
     mg = cp.iceberg_commit_batch_sql()
     assert "WHEN NOT MATCHED THEN INSERT *" in mg
     assert "t.run_id = s.run_id" in mg and "t.src_file = s.src_file" in mg
+    # INSERT * takes the rows a commit writes: the DDL declares exactly the
+    # lineage_stats columns, in order, with the same types
+    decl = re.search(r"\((.*)\) USING", ddl).group(1).split(", ")
+    routed = spark.createDataFrame(
+        [("/in/a.log", False, False, True)],
+        "_src_file string, is_blank boolean, is_oversize boolean, "
+        "parse_ok boolean")
+    rows = cp.lineage_stats(routed, "r1", "b1", "route")
+    assert [tuple(d.split(" ")) for d in decl] == [
+        (f.name, f.dataType.simpleString().upper())
+        for f in rows.schema.fields]
 
 
 def test_stream_metered_pipeline_emits_kairos_batches(spark, tmp_path):
@@ -514,9 +593,10 @@ def test_stream_metered_pipeline_emits_kairos_batches(spark, tmp_path):
                    if m["name"].endswith("success"))
     err_total = sum(m["value"] for m in metrics
                     if m["name"].endswith("error"))
+    # success/error as the reference counts them: blank lines are neither
     df = pl.parse_stage(spark.read.parquet(input_dir))
-    n_ok = df.filter(F.col("parse_ok") & ~F.col("is_oversize")).count()
-    n_err = df.filter(~F.col("parse_ok") | F.col("is_oversize")).count()
+    n_ok = df.filter(agg_ops.success_expr()).count()
+    n_err = df.filter(agg_ops.error_expr()).count()
     assert ok_total == n_ok and err_total == n_err
 
     # a second availableNow run sees no new files -> no new metric batch
@@ -999,6 +1079,7 @@ def test_sft_builder_kernel_matches_batch_across_splits(spark):
         [("conv_s", i, r, '{"tokens":%d}' % t) for i, r, t in turns],
         "conv_id string, turn_idx int, role string, payload string")
         .withColumn("parse_ok", F.lit(True))
+        .withColumn("is_blank", F.lit(False))
         .withColumn("is_oversize", F.lit(False)))
     want = (TX.sft_examples(routed, budget=budget)
             .orderBy("turn_idx").toPandas())

@@ -84,3 +84,31 @@ def test_multiline_config_stage(spark):
     recs = {r["record_id"]: r for r in out.collect()}
     assert recs[1]["msg"] == "boom  at deep"
     assert recs[2]["msg"] == "fine"
+
+
+def test_parquet_writer_skips_blank_lines(spark, tmp_path):
+    """writer.class=parquet fans out through route.fanout_write: blank lines
+    (NULL sink, F1) are skipped — no __HIVE_DEFAULT_PARTITION__ directory —
+    and the rows per sink directory equal sink_tallies."""
+    from log_collector_spark.operators import route as route_ops
+
+    out = str(tmp_path / "sinks")
+    conf = {
+        cfg.PARSER_CLASS: "grok",
+        cfg.GROK_EXPR: r"%{WORD:w} %{INT:n;int}",
+        cfg.MAX_SIZE: 16,
+        cfg.WRITER_CLASS: "parquet",
+        "writer.parquet.path": out,
+    }
+    p = cfg.ConfiguredPipeline(conf)
+    df = spark.createDataFrame(
+        [("a 1",), ("",), ("   ",), (None,), ("nope",), ("b 2",),
+         ("c " + "9" * 20,)], "text string")
+    p.run(spark, df)
+    assert sorted(d for d in os.listdir(out) if d.startswith("sink=")) == [
+        "sink=errors", "sink=failures", "sink=source_etl"]
+    got = {r["sink"]: r["n"] for r in spark.read.parquet(out)
+           .groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()}
+    want = {r["sink"]: r["n"] for r in
+            route_ops.sink_tallies(p.transform(spark, df)).collect()}
+    assert got == want == {"source_etl": 2, "failures": 1, "errors": 1}

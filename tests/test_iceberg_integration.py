@@ -54,10 +54,10 @@ def test_iceberg_checkpoint_atomic_commit_branch(spark, tmp_path):
 
     spark.sql(cp.iceberg_create_checkpoint_sql(table))
     rows = spark.createDataFrame(
-        [("r1", "b1", "/in/a.log", 10, 0),
-         ("r1", "b1", "/in/b.log", 7, 1)],
-        "run_id string, batch_id string, src_file string, "
-        "n_rows long, n_error long").selectExpr(
+        [("r1", "b1", "route", "/in/a.log", 0, 10, 10, 0),
+         ("r1", "b1", "route", "/in/b.log", 0, 7, 6, 1)],
+        "run_id string, batch_id string, stage string, src_file string, "
+        "partition_id int, lines long, success long, error long").selectExpr(
         "*", "current_timestamp() as committed_at")
     rows.createOrReplaceTempView("batch_rows")
     # a retried driver commit must not double-insert

@@ -42,12 +42,12 @@ def test_simhash_calibration_matches_duckdb(spark):
 
 def _routed(spark, rows):
     """Minimal routed-frame shape: (conv_id, turn_idx, payload text,
-    parse_ok, is_oversize)."""
-    data = [(c, i, f'{{"tokens":{t}}}', f'{{"tokens":{t}}}', True, False)
-            for c, i, t in rows]
+    parse_ok, is_blank, is_oversize)."""
+    data = [(c, i, f'{{"tokens":{t}}}', f'{{"tokens":{t}}}', True, False,
+             False) for c, i, t in rows]
     return spark.createDataFrame(
         data, "conv_id string, turn_idx int, payload string, text string, "
-              "parse_ok boolean, is_oversize boolean")
+              "parse_ok boolean, is_blank boolean, is_oversize boolean")
 
 
 def test_token_midpoint_positions(spark):

@@ -22,6 +22,7 @@ def _routed(spark, rows):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, "
                                      "payload string")
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 
@@ -457,6 +458,7 @@ def test_peak_inflight_half_open_sweep(spark):
         [(c, i, f'{{"latency_ms":{lat}}}', t) for c, i, t, lat in rows],
         "conv_id string, turn_idx int, payload string, logtime long")
     routed = (df.withColumn("parse_ok", F.lit(True))
+                .withColumn("is_blank", F.lit(False))
                 .withColumn("is_oversize", F.lit(False))
                 .withColumn("tool", F.lit("bash")))
     out = {r["conv_id"]: r for r in TX.peak_inflight(routed).collect()}

@@ -239,6 +239,7 @@ def test_turn_holes_counts_and_first_index(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, "
                                      "text string")
     routed = (df.withColumn("parse_ok", F.lit(True))
+                .withColumn("is_blank", F.lit(False))
                 .withColumn("is_oversize", F.lit(False)))
     out = TX.turn_holes(routed).collect()
     assert len(out) == 1
@@ -251,6 +252,7 @@ def _tx_routed(spark, rows):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, tool string, payload string")
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 
@@ -378,6 +380,7 @@ def test_conversation_redundancy_pools_across_turns(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, "
                                      "text string")
     routed = (df.withColumn("parse_ok", F.lit(True))
+                .withColumn("is_blank", F.lit(False))
                 .withColumn("is_oversize", F.lit(False)))
     out = {r["conv_id"]: r for r in
            TX.conversation_redundancy(routed).collect()}
@@ -491,6 +494,7 @@ def test_latency_inversions_merge_path_and_batch_carry(spark):
     df = (spark.createDataFrame(rows, "conv_id string, turn_idx int, "
                                       "payload string")
           .withColumn("parse_ok", F.lit(True))
+          .withColumn("is_blank", F.lit(False))
           .withColumn("is_oversize", F.lit(False)))
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)

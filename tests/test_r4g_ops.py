@@ -22,6 +22,7 @@ from log_collector_spark.textops import similarity as TS
 def _routed(spark, rows, schema):
     df = spark.createDataFrame(rows, schema)
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 

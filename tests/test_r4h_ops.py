@@ -19,6 +19,7 @@ from log_collector_spark.operators import tx_stats as TX
 def _routed(spark, rows, schema):
     df = spark.createDataFrame(rows, schema)
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 

@@ -17,6 +17,7 @@ from log_collector_spark.textops import analysis as TA
 def _routed(spark, rows, schema):
     df = spark.createDataFrame(rows, schema)
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 

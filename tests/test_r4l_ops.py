@@ -20,6 +20,7 @@ SF = "/root/testdata/sf0.001"
 def _routed(spark, rows, schema):
     df = spark.createDataFrame(rows, schema)
     return (df.withColumn("parse_ok", F.lit(True))
+              .withColumn("is_blank", F.lit(False))
               .withColumn("is_oversize", F.lit(False)))
 
 

@@ -173,6 +173,7 @@ def test_tx_context_depth_trailing_window_semantics(spark):
     routed = (spark.createDataFrame(
         rows, "conv_id string, turn_idx int, payload string")
         .withColumn("parse_ok", F.lit(True))
+        .withColumn("is_blank", F.lit(False))
         .withColumn("is_oversize", F.lit(False)))
     # budget 4000, cums 3000/5000/6500/7000:
     # t1 sees {t1}=1; t2 sees {t1,t2}=2; t3 window (2501,6500] still
@@ -234,6 +235,7 @@ def test_tx_sft_examples_prompt_accounting_and_clean_filter(spark):
     routed = (spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, "
               "payload string, parse_ok boolean")
+        .withColumn("is_blank", F.lit(False))
         .withColumn("is_oversize", F.lit(False)))
     out = {r["turn_idx"]: r for r in
            TX.sft_examples(routed, budget=100).collect()}

@@ -26,6 +26,7 @@ def _routed(spark, rows):
         rows, "conv_id string, turn_idx int, role string, tool string, "
               "tool_category string, payload string")
         .withColumn("parse_ok", F.lit(True))
+        .withColumn("is_blank", F.lit(False))
         .withColumn("is_oversize", F.lit(False)))
 
 
