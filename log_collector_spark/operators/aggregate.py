@@ -113,33 +113,6 @@ def rollup_time_counts(df: DataFrame, ts_ms: Column) -> DataFrame:
         "n")
 
 
-def exact_percentiles(df: DataFrame, group_col: str, value: Column,
-                      quantiles: dict[str, float]) -> DataFrame:
-    """Exact per-group percentiles by rank selection, integer in/out.
-
-    Spec (identical construction in the DuckDB oracle, sidestepping
-    engine-specific quantile interpolation): the q-percentile of a group of
-    n values is the element at 0-based index floor(q*(n-1)) of the sorted
-    values. One shuffle on ``group_col`` + per-group sort (the same cost as
-    any exact quantile); at 100 TB swap in approx_percentile — this operator
-    is the correctness baseline the sketch is validated against."""
-    # ties need no explicit break: the VALUE at any rank of a sorted multiset
-    # is invariant under the ordering of equal elements
-    w = Window.partitionBy(group_col).orderBy("v")
-    ranked = (df.select(F.col(group_col), value.cast("long").alias("v"))
-                .withColumn("rn", F.row_number().over(w))
-                .withColumn("cnt", F.count(F.lit(1)).over(
-                    Window.partitionBy(group_col))))
-    aggs = [
-        F.max(F.when(
-            F.col("rn") == (F.floor(F.lit(q) * (F.col("cnt") - 1)) + 1)
-            .cast("int"), F.col("v"))).alias(name)
-        for name, q in quantiles.items()
-    ]
-    return ranked.groupBy(group_col).agg(
-        F.max("cnt").cast("long").alias("n"), *aggs)
-
-
 def turn_lag_features(df: DataFrame) -> DataFrame:
     """Window functions over the stable turn order: previous role and
     inter-turn gap (analytic layer the reference lacks; SURVEY §2.8)."""
@@ -180,8 +153,8 @@ def json_schema_profile(df: DataFrame, group_col: str = "event_type",
 def histogram_percentiles(df: DataFrame, group_col: str, value: Column,
                           quantiles: dict[str, float],
                           bin_width: int = 100) -> DataFrame:
-    """Mergeable histogram-sketch percentiles — the 100-TB companion of
-    :func:`exact_percentiles`.
+    """Mergeable histogram-sketch percentiles — the lossy companion of
+    :func:`histogram_exact_percentiles`.
 
     The value is bucketed into fixed ``bin_width`` bins; the q-percentile
     estimate is the LOWER BOUND of the bin holding the rank-selected element
@@ -234,19 +207,20 @@ def locf_backfill(df: DataFrame, group_col: str, order_cols: list[str],
 def histogram_exact_percentiles(df: DataFrame, group_col: str,
                                 value: Column,
                                 quantiles: dict[str, float]) -> DataFrame:
-    """EXACT per-group percentiles with NO row-level sort — the 100-TB
-    path for integer-valued metrics (same rank spec as
-    :func:`exact_percentiles`: 0-based index floor(q*(n-1)) of the sorted
-    multiset).
+    """EXACT per-group percentiles by rank selection, integer in/out, with
+    NO row-level sort — the 100-TB path for integer-valued metrics.
+
+    Spec (sidestepping engine-specific quantile interpolation): the
+    q-percentile of a group of n values is the element at 0-based index
+    floor(q*(n-1)) of the sorted values. The DuckDB oracle of
+    ``percentile_latency`` states it as a sort-based ROW_NUMBER selection.
 
     The trick (same as behavior.activity_gini): aggregate to the
     (group, value) histogram first — one map-side-combined shuffle over
     near-distinct pairs — then run the cumulative window over THAT frame,
     whose size is bounded by the value domain per group (e.g. 49,002
     distinct cent values here), not the row count. The q-percentile is the
-    smallest value whose cumulative count reaches rank floor(q*(n-1))+1.
-    exact_percentiles stays as the sort-based correctness baseline; a
-    pytest asserts the two agree on the same input."""
+    smallest value whose cumulative count reaches rank floor(q*(n-1))+1."""
     hist = (df.select(F.col(group_col), value.cast("long").alias("v"))
             .groupBy(group_col, "v")
             .agg(F.count(F.lit(1)).cast("long").alias("m")))
@@ -262,32 +236,6 @@ def histogram_exact_percentiles(df: DataFrame, group_col: str,
     ]
     return cum.groupBy(group_col).agg(
         F.max("n").cast("long").alias("n"), *aggs)
-
-
-def sql_histogram_exact_percentiles(table: str, group_col: str,
-                                    value_sql: str,
-                                    quantiles: dict[str, float]) -> str:
-    aggs = ",\n               ".join(
-        f"CAST(MIN(CASE WHEN cum >= floor({q} * (n - 1)) + 1 "
-        f"THEN v END) AS BIGINT) AS {name}"
-        for name, q in quantiles.items())
-    return f"""
-        WITH hist AS (
-            SELECT {group_col}, {value_sql} AS v,
-                   CAST(COUNT(*) AS BIGINT) AS m
-            FROM {table} GROUP BY 1, 2
-        ), cum AS (
-            SELECT {group_col}, v, m,
-                   CAST(SUM(m) OVER (PARTITION BY {group_col}
-                        ORDER BY v) AS BIGINT) AS cum,
-                   CAST(SUM(m) OVER (PARTITION BY {group_col})
-                        AS BIGINT) AS n
-            FROM hist
-        )
-        SELECT {group_col}, CAST(MAX(n) AS BIGINT) AS n,
-               {aggs}
-        FROM cum GROUP BY {group_col}
-    """
 
 
 # ---------------------------------------------------------------------------

@@ -314,16 +314,16 @@ def winsorized_stats(events: DataFrame, group_col: str, value: Column,
     [lo_q, hi_q] rank-selection percentile bounds (winsorization — outliers
     saturate instead of distorting the sum), then aggregate. Integer in/out.
 
-    Two passes over the values: the exact-percentile frame (one shuffle +
-    per-group sort, see ``aggregate.exact_percentiles``) is a tiny
-    per-group scalar table broadcast back onto the stream, so the clamped
-    aggregate adds only a map-side join + one hash agg. At 100 TB swap the
-    bound-finder for the mergeable histogram sketch
-    (``aggregate.histogram_percentiles``) — same clamp stage."""
-    from log_collector_spark.operators.aggregate import exact_percentiles
+    Two passes over the values: the exact-percentile frame (a
+    (group, value)-histogram agg + cumulative window, see
+    ``aggregate.histogram_exact_percentiles``) is a tiny per-group scalar
+    table broadcast back onto the stream, so the clamped aggregate adds
+    only a map-side join + one hash agg."""
+    from log_collector_spark.operators.aggregate import (
+        histogram_exact_percentiles)
 
-    bounds = exact_percentiles(events, group_col, value,
-                               {"lo": lo_q, "hi": hi_q}) \
+    bounds = histogram_exact_percentiles(events, group_col, value,
+                                         {"lo": lo_q, "hi": hi_q}) \
         .select(group_col, "lo", "hi")
     v = value.cast("long").alias("v")
     base = events.select(F.col(group_col), v)
@@ -523,32 +523,28 @@ def mad_outliers(events: DataFrame, group_col: str = "event_type",
     it hunts (mean/stddev are dragged by the very tail they're meant to
     flag; the Hampel-filter rule every metrics pipeline runs on latency
     streams). Integer in/out: both medians use the exact rank-selection
-    spec of ``aggregate.exact_percentiles``.
+    spec of ``aggregate.histogram_exact_percentiles``.
 
     Returns (group, n, median_v, mad_v, n_outliers).
 
-    Plan: two rank-selection passes (each one shuffle on ``group_col`` +
-    per-group sort — the exact-median floor), each emitting a
-    #groups-row scalar frame broadcast back onto the stream, then a
-    single map-side-combined count. Grouping by a low-cardinality column
-    makes the window partitions coarse — at 100 TB swap the two exact
-    medians for approx_percentile (or the mergeable
-    ``aggregate.histogram_percentiles`` sketch) and keep the identical
-    broadcast-clamp-count tail; this operator is the correctness
-    baseline the sketch version is validated against."""
-    from log_collector_spark.operators.aggregate import exact_percentiles
+    Plan: two exact-median passes (each a (group, value)-histogram agg +
+    cumulative window — no row-level sort), each emitting a #groups-row
+    scalar frame broadcast back onto the stream, then a single
+    map-side-combined count."""
+    from log_collector_spark.operators.aggregate import (
+        histogram_exact_percentiles)
 
     if value is None:
         value = F.round(F.col("value").cast("double") * 1000, 0)
     base = events.select(F.col(group_col),
                          value.cast("long").alias("v"))
-    med = exact_percentiles(base, group_col, F.col("v"),
-                            {"med": 0.5}).select(group_col, "med")
+    med = histogram_exact_percentiles(base, group_col, F.col("v"),
+                                      {"med": 0.5}).select(group_col, "med")
     dev = (base.join(F.broadcast(med), group_col)
                .select(F.col(group_col), F.col("med"),
                        F.abs(F.col("v") - F.col("med")).alias("d")))
-    mad = exact_percentiles(dev, group_col, F.col("d"),
-                            {"mad": 0.5}).select(group_col, "mad")
+    mad = histogram_exact_percentiles(dev, group_col, F.col("d"),
+                                      {"mad": 0.5}).select(group_col, "mad")
     return (dev.join(F.broadcast(mad), group_col)
                .groupBy(group_col)
                .agg(F.count(F.lit(1)).cast("long").alias("n"),
@@ -1618,8 +1614,8 @@ def gini_mean_difference(events: DataFrame, group_col: str = "event_type",
     equal values is invariant under their internal order. Output keeps
     exact integer numerator plus GMD ×1000 (2000·num DIV n(n−1)).
 
-    One rank window + one agg per group — the same single exchange as
-    exact_percentiles."""
+    One rank window + one agg per group — a single exchange on the group
+    key."""
     # default: the events.value double quantized to milli-units — the
     # proven mad_outliers/winsorize convention (oracle-green since r3)
     v = value if value is not None else \

@@ -719,15 +719,16 @@ register(
 def _percentile_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events(spark, sf_dir)
     lat = C.h60(F.col("event_id").cast("string")) % 5000
-    return agg_ops.exact_percentiles(
+    return agg_ops.histogram_exact_percentiles(
         ev, "event_type", lat, {"p50": 0.5, "p95": 0.95, "p99": 0.99})
 
 
 register(
     "percentile_latency",
-    """Exact per-type latency percentiles by rank selection (p50/p95/p99),
-    integer-only: latency is synthesized as h60(event_id) % 5000 so both
-    engines derive identical values from md5.""",
+    """Exact per-type latency percentiles by rank selection (p50/p95/p99)
+    via the (group, value)-histogram form — no row-level sort; the oracle
+    is the sort-based selection. Integer-only: latency is synthesized as
+    h60(event_id) % 5000 so both engines derive identical values from md5.""",
     _percentile_latency,
     lambda: f"""
             WITH lat AS (
@@ -751,26 +752,6 @@ register(
                                  THEN v END) AS BIGINT) AS p99
             FROM ranked GROUP BY event_type
         """)
-
-
-def _hist_exact_percentile_latency(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    ev = events(spark, sf_dir)
-    lat = C.h60(F.col("event_id").cast("string")) % 5000
-    return agg_ops.histogram_exact_percentiles(
-        ev, "event_type", lat, {"p50": 0.5, "p95": 0.95, "p99": 0.99})
-
-
-register(
-    "hist_exact_percentile_latency",
-    """Same percentile spec as percentile_latency but via the (group,
-    value)-histogram form — EXACT with no row-level sort (the 100-TB
-    path for integer metrics).""",
-    _hist_exact_percentile_latency,
-    lambda: agg_ops.sql_histogram_exact_percentiles(
-        "events", "event_type",
-        f"{C.sql_h60('CAST(event_id AS VARCHAR)')} % 5000",
-        {"p50": 0.5, "p95": 0.95, "p99": 0.99}))
 
 
 def _schema_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from log_collector_spark.operators import aggregate as agg_ops
 from log_collector_spark.operators import route as route_ops
 from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.sources.io import iceberg_available  # noqa: F401
 
 CKPT_TABLE = "checkpoint"
 
@@ -350,16 +351,6 @@ def read_output(spark: SparkSession, out_dir: str,
 # spark.sql() once the catalog exists; iceberg_available() is the gate.
 
 CKPT_TABLE_COLS = ", ".join(f"{c} {t}" for c, t in CKPT_ROW)
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is usable in this session."""
-    try:
-        jvm_class = "org.apache.iceberg.spark.SparkCatalog"
-        spark._jvm.java.lang.Class.forName(jvm_class)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def iceberg_create_checkpoint_sql(table: str = "ckpt.checkpoint") -> str:

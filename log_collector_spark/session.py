@@ -17,16 +17,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _quarter_of_ram() -> str:
+    """A quarter of the host's MemTotal as a JVM size string (e.g. 4023m)."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 4 // 1024}m"
+    raise RuntimeError("no MemTotal in /proc/meminfo")
 
 
 def get_spark(master: str | None = None,
               app_name: str = "log_collector_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    # host-derived defaults; SPARK_GRAFT_CPUS / SPARK_DRIVER_MEMORY override
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                or len(os.sched_getaffinity(0)))
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or _quarter_of_ram()
+    master = master or f"local[{cores}]"
+    sp = shuffle_partitions or cores
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -45,7 +55,7 @@ def get_spark(master: str | None = None,
         .config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL", "system")
         # generous broadcast threshold: all our dims are tiny
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         # progress bars interleave with bench.py's one-line JSON on stdout
         # and can split it mid-token for the driver's tail capture

@@ -180,64 +180,9 @@ def sql_pack_sequences(table: str = "documents", group_col: str = "source",
     """
 
 
-def _h60_py(s: str) -> int:
-    """Pure-Python h60 (md5-prefix bigint) — byte-identical to
-    common.h60 / common.sql_h60."""
-    import hashlib
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:C.H60_HEX_LEN],
-               16)
-
-
-def chunk_documents_udtf(df: DataFrame, w: int = CHUNK_W,
-                         stride: int = CHUNK_STRIDE) -> DataFrame:
-    """:func:`chunk_documents` re-expressed as a Spark 4 **Python UDTF**
-    lateral join — the one Python-API family the pandas matrix (scalar
-    pandas_udf / mapInPandas / applyInPandas / applyInPandasWithState)
-    does not cover. A UDTF is the right tool when each input row expands
-    into a VARIABLE number of output rows via imperative logic that
-    Catalyst cannot express; chunk planning CAN be expressed relationally
-    (chunk_documents is the production path — vectorized, whole-stage
-    codegen), so this variant exists to pin the API's semantics against
-    the declarative implementation: same rows, same hashes, same oracle.
-
-    Row-at-a-time Python — NOT for the 100-TB hot path (the docstring of
-    the Catalyst version carries the scale story); it shares that
-    version's oracle, so the equality is driver-checked too."""
-    from pyspark.sql.functions import udtf
-
-    class ChunkPlan:
-        def eval(self, doc_id, text):
-            toks = [t for t in (text or "").split() if t]
-            n = len(toks)
-            if n == 0:
-                return
-            extra = (n - w + (stride - 1)) // stride if n > w else 0
-            for i in range(extra + 1):
-                seg = toks[i * stride:i * stride + w]
-                yield (doc_id, i, min(w, n - i * stride),
-                       _h60_py(" ".join(seg)))
-
-    plan = udtf(ChunkPlan,
-                returnType="doc_id: bigint, chunk_idx: bigint, "
-                           "n_chunk_tokens: bigint, chunk_h60: bigint")
-    spark = df.sparkSession
-    spark.udtf.register("chunk_plan_udtf", plan)
-    df.select("doc_id", "text").createOrReplaceTempView("_chunk_udtf_in")
-    return spark.sql(
-        "SELECT c.doc_id, c.chunk_idx, c.n_chunk_tokens, c.chunk_h60 "
-        "FROM _chunk_udtf_in, LATERAL chunk_plan_udtf(doc_id, text) AS c")
-
-
 # ---------------------------------------------------------------------------
 # driver queries declared over this module's operators (see registry.py)
 # ---------------------------------------------------------------------------
-
-register(
-    "udtf_chunk_documents",
-    """Spark 4 Python UDTF lateral join emitting the chunk plan — pinned
-    to the declarative chunk_documents oracle (same rows, same hashes).""",
-    lambda spark, sf_dir: chunk_documents_udtf(docs(spark, sf_dir)),
-    sql_chunk_documents)
 
 register(
     "chunk_documents",

@@ -736,7 +736,7 @@ def sql_embedding_neardup_unguarded(table: str = "embeddings") -> str:
 
 def dedup_clusters(df: DataFrame, text_col: str = "text",
                    pairs: DataFrame | None = None,
-                   max_iters: int = 25) -> DataFrame:
+                   max_iters: int = 30) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster, keep).
 
     ``cluster`` is the minimum doc_id of the component (a deterministic
@@ -744,54 +744,96 @@ def dedup_clusters(df: DataFrame, text_col: str = "text",
     that appear in some pair are returned — everything else is trivially
     its own component and needs no shuffle at all.
 
-    Algorithm: min-label propagation to fixpoint. Labels only decrease and
-    the fixpoint is unique, so the driver-side convergence loop (one
-    ``count()`` per round — an aggregate, not a collect) is deterministic.
-    Rounds = component diameter; near-dup components are dense and shallow
-    (a hub document links its variants), so 3-5 rounds is typical.
+    Algorithm: the large-star/small-star alternation of Kiveris et al.
+    (MapReduce CC), O(log n) rounds at any component diameter (min-label
+    propagation needs diameter rounds; a crawl-frontier chain of 10^6
+    links would take 10^6 rounds there, ~40 here). Per round, with N(u)
+    the symmetric neighbor set and m(u) = min(N(u) ∪ {u}):
+      * large-star: for every neighbor v > u, emit (v, m(u)) — long
+        chains contract toward minima without inflating any degree;
+      * small-star: canonicalize edges to point small←large, and for
+        each u re-wire its smaller neighbors (and itself) to m(u) —
+        flattening into stars.
+    Both phases are one groupBy-min plus one join per round; the text
+    never moves. Fixpoint: the canonical edge set stops changing (checked
+    by count + modular h60 checksum — one tiny agg per round, no
+    collect); at fixpoint every edge is (node → component-min) and labels
+    read off with a final groupBy-min. No fixpoint within ``max_iters``
+    rounds raises ``RuntimeError`` — unconverged edges are not components.
 
-    100-TB notes: each round is one shuffle of (id, label) pairs — the text
-    never moves. Each round's labels are ``localCheckpoint``-ed, not just
-    persisted: a round references the previous labels TWICE (propagation
-    join + union), so without lineage truncation the logical plan doubles
-    per round and Catalyst analysis goes exponential in the round count —
-    invisible on shallow near-dup graphs (3-5 rounds) but a hang on a
-    diameter-15 chain (caught by the star-CC equality test). For graphs
-    with huge diameter or giant components, the round COUNT itself is the
-    limit; :func:`dedup_clusters_star` converges in O(log n) rounds with
-    the same per-round join shape.
-    """
+    Each round ends in ``localCheckpoint`` — NOT just persist: a round's
+    plan references the previous round's frame several times, so without
+    lineage truncation the logical plan doubles per round and Catalyst
+    analysis time turns exponential (measured: 6 s round 0 → stuck by
+    round 2 on a 9-edge graph). Persist only short-circuits execution;
+    checkpointing is what iterative algorithms need.
+
+    The DuckDB oracle is the recursive-CTE transitive closure
+    (:func:`sql_clusters_over`)."""
     if pairs is None:
         pairs = minhash_lsh_pairs(df, text_col)
-    edges = (pairs.select(F.col("doc_a").alias("src"),
-                          F.col("doc_b").alias("dst"))
-             .union(pairs.select(F.col("doc_b").alias("src"),
-                                 F.col("doc_a").alias("dst")))
-             .distinct())
-    edges = edges.persist()
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    try:
-        for _ in range(max_iters):
-            prop = (edges.join(labels.withColumnRenamed("id", "src"), "src")
-                    .select(F.col("dst").alias("id"), "label"))
-            new_labels = (prop.unionByName(labels)
-                          .groupBy("id").agg(F.min("label").alias("label"))
-                          .localCheckpoint(eager=True))
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "id")
-                       .filter(F.col("n.label") != F.col("o.label"))
-                       .count())
-            labels = new_labels
-            if changed == 0:
-                break
-        return labels.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("cluster"),
-            (F.col("id") == F.col("label")).alias("keep"))
-    finally:
-        edges.unpersist()
+    base = pairs.select(F.col("doc_a").cast("long").alias("u"),
+                        F.col("doc_b").cast("long").alias("v"))
+
+    def _sym(e: DataFrame) -> DataFrame:
+        # both directions from ONE evaluation of e: a union of two
+        # projections would run e's whole plan (the pair job) twice
+        both = F.array(F.struct("u", "v"),
+                       F.struct(F.col("v").alias("u"), F.col("u").alias("v")))
+        return (e.select(F.explode(both).alias("e")).select("e.*")
+                .filter(F.col("u") != F.col("v")).distinct())
+
+    def _checksum(e: DataFrame):
+        # e is symmetric and distinct: every edge counts twice, so the
+        # (count, sum) pair is twice the canonical one — no distinct needed
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(C.h60(F.concat_ws(":", F.least("u", "v"),
+                                               F.greatest("u", "v")))
+                             % F.lit(1_000_000_007)), F.lit(0))
+             .alias("s")).collect()[0]
+        return (row["n"], row["s"])
+
+    edges = _sym(base).localCheckpoint(eager=True)
+    # symmetric, so every node is some edge's u
+    nodes = edges.select(F.col("u").alias("id")).distinct()
+    prev = _checksum(edges)
+    for _ in range(max_iters):
+        # large-star
+        mins = (edges.groupBy("u")
+                .agg(F.least(F.min("v"), F.first("u")).alias("m")))
+        large = (edges.join(mins, "u")
+                 .filter(F.col("v") > F.col("u"))
+                 .select(F.col("v").alias("u"), F.col("m").alias("v")))
+        # small-star over edges pointing small <- large
+        canon = (large.union(edges)
+                 .select(F.greatest("u", "v").alias("u"),
+                         F.least("u", "v").alias("v")).distinct())
+        mins2 = (canon.groupBy("u")
+                 .agg(F.least(F.min("v"), F.first("u")).alias("m")))
+        small = (canon.join(mins2, "u")
+                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                 .union(mins2.select(F.col("u"), F.col("m").alias("v"))))
+        new_edges = _sym(small).localCheckpoint(eager=True)
+        cur = _checksum(new_edges)
+        edges = new_edges
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: no fixpoint after {max_iters} rounds")
+    labels = (edges.groupBy("u")
+              .agg(F.least(F.min("v"), F.first("u")).alias("label")))
+    # nodes can drop out of the star graph once fully merged; restore
+    # them with their component label via the remaining edge ends
+    out = (nodes.join(labels.withColumnRenamed("u", "id"), "id", "left")
+           .select(F.col("id").alias("doc_id"),
+                   F.coalesce(F.col("label"), F.col("id"))
+                    .alias("cluster")))
+    return out.withColumn("keep", F.col("doc_id") == F.col("cluster"))
+
+
 
 
 def sql_clusters_over(pairs_sql: str, a_col: str, b_col: str) -> str:
@@ -963,75 +1005,6 @@ def sql_boilerplate_segments(table: str = "documents", k: int = BOILER_K,
                    >= 500 AS boilerplate
         FROM segs s LEFT JOIN hits h USING (doc_id)
     """
-
-
-def ngram_jaccard_prefix(df: DataFrame, text_col: str = "text",
-                         k: int = SHINGLE_K,
-                         num: int = JACCARD_NUM,
-                         den: int = JACCARD_DEN) -> DataFrame:
-    """Prefix-filtered set-similarity self-join: identical output to
-    :func:`ngram_jaccard_pairs`, but candidate generation indexes only each
-    document's PREFIX under a rarest-first global shingle order (the
-    SSJoin/PPJoin principle, Chaudhuri et al. / Bayardo et al. / Xiao et al.).
-
-    For Jaccard threshold t = num/den, any pair with J >= t has
-    |A∩B| >= ceil(t*|A|): if the first |A| - ceil(t*|A|) + 1 shingles of A
-    (sorted by (document-frequency, shingle)) missed the intersection
-    entirely, the remaining ceil(t*|A|) - 1 slots could not hold it —
-    so indexing just the prefix provably loses NO qualifying pair, while
-    the candidate join degree of a shingle drops from df to its count
-    among prefixes (frequent shingles sort last and fall out of prefixes
-    entirely — the principled version of the ``max_df`` guard, with zero
-    recall loss). Verification computes the exact intersection by joining
-    the candidate pairs (broadcast — they are filter-survivors, tiny
-    relative to the corpus) back to the full shingle index.
-
-    Cost shape: one (shingle) hash-agg for document frequencies, one join
-    + per-doc window sort to rank shingles (the prefix build — at 100 TB
-    this table is what you checkpoint), the prefix self-join, and the
-    verify join. The oracle is the brute-force all-pairs SQL of
-    ngram_jaccard_pairs — equality IS the losslessness proof."""
-    from pyspark.sql.window import Window
-
-    docs = doc_shingles(df, text_col, k)
-    inv = docs.select("doc_id", "n_shingles",
-                      F.explode("shingles").alias("sh"))
-    dfreq = inv.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    # ceil(num/den * n) in exact integer arithmetic
-    alpha = F.floor((F.col("n_shingles") * num + den - 1) / den)
-    plen = (F.col("n_shingles") - alpha + 1).cast("int")
-    w = Window.partitionBy("doc_id").orderBy("df", "sh")
-    pref = (inv.join(dfreq, "sh")
-               .withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= plen)
-               .select("doc_id", "sh"))
-    cand = (pref.alias("a")
-            .join(pref.alias("b"),
-                  (F.col("a.sh") == F.col("b.sh")) &
-                  (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    ia = inv.select(F.col("doc_id").alias("doc_a"),
-                    F.col("n_shingles").alias("size_a"), "sh")
-    ib = inv.select(F.col("doc_id").alias("doc_b"),
-                    F.col("n_shingles").alias("size_b"), "sh")
-    # plain shuffle equi-join on doc_a — NOT a broadcast: prefix-join
-    # survivors scale with corpus size × near-dup density, so broadcasting
-    # `cand` is an unbounded executor-memory bet at 10^9 docs (VERDICT r3
-    # item 3). The shuffle partitions on doc_a, same key as the groupBy
-    # below, so AQE reuses the exchange.
-    pairs = (ia.join(cand.hint("shuffle_hash"), "doc_a")
-               .join(ib, ["doc_b", "sh"])
-               .groupBy("doc_a", "doc_b")
-               .agg(F.count(F.lit(1)).alias("inter"),
-                    F.first("size_a").alias("size_a"),
-                    F.first("size_b").alias("size_b")))
-    union = F.col("size_a") + F.col("size_b") - F.col("inter")
-    return (pairs.withColumn("uni", union.cast("long"))
-                 .filter(F.col("inter") * den >= F.lit(num) * F.col("uni"))
-                 .select("doc_a", "doc_b",
-                         F.col("inter").cast("long").alias("inter"), "uni"))
 
 
 # ---------------------------------------------------------------------------
@@ -1474,105 +1447,6 @@ def sql_keep_best_per_cluster(table: str = "documents") -> str:
         GROUP BY cluster
         ORDER BY cluster
     """
-
-
-def dedup_clusters_star(df: DataFrame, text_col: str = "text",
-                        pairs: DataFrame | None = None,
-                        max_iters: int = 30) -> DataFrame:
-    """Connected components in O(log n) rounds — the large-star/small-star
-    alternation of Kiveris et al. (MapReduce CC), the upgrade path
-    dedup_clusters' docstring promises for high-diameter or giant
-    components (min-label propagation needs diameter rounds; a crawl
-    frontier chain of 10^6 links would take 10^6 rounds there, ~40 here).
-
-    Per round, with N(u) the symmetric neighbor set and
-    m(u) = min(N(u) ∪ {u}):
-      * large-star: for every neighbor v > u, emit (v, m(u)) — long
-        chains contract toward minima without inflating any degree;
-      * small-star: canonicalize edges to point small←large, and for
-        each u re-wire its smaller neighbors (and itself) to m(u) —
-        flattening into stars.
-    Both phases are one groupBy-min plus one join per round — the SAME
-    shuffle shape as a label-propagation round, just O(log n) of them.
-    Fixpoint: the canonical edge set stops changing (checked by count +
-    modular h60 checksum — one tiny agg per round, no collect); at
-    fixpoint every edge is (node → component-min) and labels read off
-    with a final groupBy-min.
-
-    Each round ends in ``localCheckpoint`` — NOT just persist: a round's
-    plan references the previous round's frame several times, so without
-    lineage truncation the logical plan doubles per round and Catalyst
-    analysis time turns exponential (measured: 6 s round 0 → stuck by
-    round 2 on a 9-edge graph). Persist only short-circuits execution;
-    checkpointing is what iterative algorithms need.
-
-    Output contract is identical to :func:`dedup_clusters`
-    ((doc_id, cluster, keep), docs appearing in some pair only) — pytest
-    asserts the two algorithms agree edge-for-edge, and the DuckDB oracle
-    is the same recursive-CTE closure."""
-    if pairs is None:
-        pairs = minhash_lsh_pairs(df, text_col)
-    base = (pairs.select(F.col("doc_a").cast("long").alias("u"),
-                         F.col("doc_b").cast("long").alias("v"))
-            .filter(F.col("u") != F.col("v")))
-    nodes = (base.select(F.col("u").alias("id"))
-             .union(base.select(F.col("v").alias("id"))).distinct()
-             .persist())
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return (e.select("u", "v")
-                .union(e.select(F.col("v").alias("u"),
-                                F.col("u").alias("v")))
-                .filter(F.col("u") != F.col("v")).distinct())
-
-    def _checksum(e: DataFrame):
-        canon = e.select(F.least("u", "v").alias("a"),
-                         F.greatest("u", "v").alias("b")).distinct()
-        row = canon.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(C.h60(F.concat_ws(":", "a", "b"))
-                             % F.lit(1_000_000_007)), F.lit(0))
-             .alias("s")).collect()[0]
-        return (row["n"], row["s"])
-
-    edges = _sym(base).localCheckpoint(eager=True)
-    prev = _checksum(edges)
-    try:
-        for _ in range(max_iters):
-            # large-star
-            mins = (edges.groupBy("u")
-                    .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-            large = (edges.join(mins, "u")
-                     .filter(F.col("v") > F.col("u"))
-                     .select(F.col("v").alias("u"), F.col("m").alias("v")))
-            e1 = _sym(large.union(
-                edges.select(F.least("u", "v").alias("u"),
-                             F.greatest("u", "v").alias("v"))))
-            # small-star over edges pointing small <- large
-            canon = e1.select(F.greatest("u", "v").alias("u"),
-                              F.least("u", "v").alias("v")).distinct()
-            mins2 = (canon.groupBy("u")
-                     .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-            small = (canon.join(mins2, "u")
-                     .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                     .union(mins2.select(F.col("u"), F.col("m").alias("v"))))
-            new_edges = _sym(small).localCheckpoint(eager=True)
-            cur = _checksum(new_edges)
-            edges = new_edges
-            if cur == prev:
-                break
-            prev = cur
-        labels = (edges.groupBy("u")
-                  .agg(F.least(F.min("v"), F.first("u")).alias("label")))
-        # nodes can drop out of the star graph once fully merged; restore
-        # them with their component label via the remaining edge ends
-        out = (nodes.join(labels.withColumnRenamed("u", "id"), "id", "left")
-               .select(F.col("id").alias("doc_id"),
-                       F.coalesce(F.col("label"), F.col("id"))
-                        .alias("cluster")))
-        return out.withColumn("keep", F.col("doc_id") == F.col("cluster"))
-    finally:
-        nodes.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -2546,7 +2420,7 @@ register(
 register(
     "dedup_clusters",
     """Connected components over MinHash near-dup pairs → one canonical
-    doc per component (min-label propagation to fixpoint).""",
+    doc per component (large-star/small-star, O(log n) rounds).""",
     lambda spark, sf_dir: dedup_clusters(docs(spark, sf_dir)),
     sql_dedup_clusters)
 
@@ -2556,13 +2430,6 @@ register(
     packed-int64 argmax — engine-order-free).""",
     lambda spark, sf_dir: keep_best_per_cluster(docs(spark, sf_dir)),
     sql_keep_best_per_cluster)
-
-register(
-    "dedup_clusters_star",
-    """O(log n)-round connected components (large-star/small-star) — the
-    diameter-robust CC; same output contract as dedup_clusters.""",
-    lambda spark, sf_dir: dedup_clusters_star(docs(spark, sf_dir)),
-    sql_dedup_clusters)
 
 register(
     "simhash_pairs",
@@ -2613,15 +2480,6 @@ register(
     lambda: sql_incremental_dedup(
         new_pred="doc_id % 7 <> 0", seen_pred="doc_id % 7 = 0"))
 
-register(
-    "ngram_jaccard_prefix",
-    """PPJoin-style prefix-filtered similarity self-join — provably the same
-    pairs as the brute-force inverted-index join (the oracle), generating
-    candidates from rarest-first shingle prefixes only.""",
-    lambda spark, sf_dir: ngram_jaccard_prefix(docs(spark, sf_dir)),
-    sql_ngram_jaccard_pairs)
-
-
 def _semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors = embs(spark, sf_dir)
     pairs = (embedding_neardup_guarded(vectors)
@@ -2635,8 +2493,8 @@ register(
     """SemDeDup-style semantic dedup: connected components over the
     guarded embedding near-dup pairs → one kept representative (min vec_id)
     per semantic cluster. Composes the two scale-safe primitives: sign-LSH
-    bucketed pair generation (bounded per-bucket work) + min-label
-    propagation (shuffles only (id, label) pairs).""",
+    bucketed pair generation (bounded per-bucket work) + large-star/
+    small-star CC (shuffles only id pairs).""",
     _semantic_dedup_embeddings,
     lambda: sql_clusters_over(
         sql_embedding_neardup_guarded(), "vec_a", "vec_b"))

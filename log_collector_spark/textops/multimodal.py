@@ -856,31 +856,6 @@ def sql_ahash_neardup_pairs(table: str = "documents") -> str:
     """
 
 
-def wav_energy_features_arrow(media: DataFrame) -> DataFrame:
-    """`mapInArrow` flavor of :func:`wav_energy_features` — the iterator
-    hands over raw ``pyarrow.RecordBatch``es, so the binary payloads
-    never round-trip through pandas object boxing (the right map flavor
-    for binary-heavy media columns; grouped-map Arrow lives in
-    tx_stats.conv_stats_arrow). Output is row-for-row identical to the
-    mapInPandas stage and shares its oracle."""
-    import pyarrow as pa
-
-    cols = [f.name for f in ENERGY_FEATURE_SCHEMA.fields[1:]]
-
-    def batches(it):
-        for rb in it:
-            ids = rb.column(0)
-            pays = rb.column(1)
-            rows = [wav_energy(p.as_py()) for p in pays]
-            out = {"media_id": ids}
-            for c in cols:
-                out[c] = pa.array([r[c] for r in rows], pa.int64())
-            yield pa.RecordBatch.from_pydict(out)
-
-    return (media.select("media_id", "payload")
-                 .mapInArrow(batches, ENERGY_FEATURE_SCHEMA))
-
-
 # ---------------------------------------------------------------------------
 # Real pure-Python PNG codec (VERDICT r4 item 3): PNG needs only stdlib
 # zlib — DEFLATE for IDAT, crc32 for chunk checksums — so the one format
@@ -1179,19 +1154,6 @@ def sql_ahash_png_features(table: str = "documents") -> str:
 # ---------------------------------------------------------------------------
 # driver queries declared over this module's operators (see registry.py)
 # ---------------------------------------------------------------------------
-
-def _wav_energy_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = media_wav_from_documents(docs(spark, sf_dir))
-    return wav_energy_features_arrow(media)
-
-
-register(
-    "wav_energy_arrow",
-    """mapInArrow flavor of the WAV energy stage (no pandas boxing of the
-    binary column); row-identical to the mapInPandas stage's oracle.""",
-    _wav_energy_arrow,
-    sql_wav_energy_features)
-
 
 def _wav_energy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_wav_from_documents(docs(spark, sf_dir))

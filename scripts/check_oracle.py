@@ -5,6 +5,10 @@ row count + schema-insensitive sorted values.
 
 Usage: python scripts/check_oracle.py [query ...]   (default: all)
        SF_DIR=/root/testdata/sf0.01 python scripts/check_oracle.py
+
+Spark runs on ``local[N]`` with N the cores the process may use (the
+session default). If the Spark JVM dies mid-run, the script stops with
+exit code 2, naming the query that was running and how many were not run.
 """
 
 from __future__ import annotations
@@ -95,6 +99,7 @@ def norm_rows(cols, rows):
 
 def main() -> int:
     import duckdb
+    from py4j.protocol import Py4JNetworkError
 
     import __spark_entry__ as entrymod
     from log_collector_spark.session import get_spark
@@ -103,8 +108,7 @@ def main() -> int:
     wanted = sys.argv[1:]
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    spark = get_spark(master="local[8]", app_name="check-oracle",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="check-oracle")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -112,14 +116,17 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     failures = 0
-    for name, fn in qs.items():
-        if wanted and name not in wanted:
-            continue
+    names = [n for n in qs if not wanted or n in wanted]
+    for i, name in enumerate(names):
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             scols = sdf.columns
             stypes = {f.name: canon_spark_type(f.dataType) for f in sdf.schema}
             srows = [tuple(r) for r in sdf.collect()]
+        except (Py4JNetworkError, ConnectionError) as e:
+            print(f"[ABORT] {name}: Spark JVM unreachable ({e}); "
+                  f"{len(names) - i - 1} queries not run")
+            return 2
         except Exception as e:
             print(f"[FAIL] {name}: spark error: {e}")
             failures += 1

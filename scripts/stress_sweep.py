@@ -33,12 +33,12 @@ RATIO_FLAG = 12.0
 
 HEAVY = [
     "token_bucket_events", "tx_redundancy", "tx_cube_tool_usage",
-    "ngram_jaccard_prefix", "semantic_dedup_embeddings",
+    "ngram_jaccard_pairs", "semantic_dedup_embeddings",
     "csv_parse_lineitem", "ks_drift_events", "ann_map_embeddings",
     "tx_conv_stats_arrow", "pca_alignment", "ann_mrr_embeddings",
     "containment_pairs", "rouge_pairs_documents", "ann_ndcg_embeddings",
     "simhash_calibration", "substring_span_pairs", "kcore_peel_documents",
-    "dedup_roi_curve_documents", "dedup_clusters_star",
+    "dedup_roi_curve_documents", "dedup_clusters",
     "line_dedup_documents", "minhash_lsh_pairs", "exact_dedup_documents",
     "decode_png_documents", "png_ahash_documents",
     "kcenter_select_embeddings",
@@ -69,8 +69,7 @@ def main() -> int:
     from log_collector_spark.plans import pipeline as pl
     from log_collector_spark.session import get_spark
 
-    spark = get_spark(master="local[32]", app_name="stress-sweep",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="stress-sweep")
     qs = E.queries()
 
     # pre-generate both transcript caches outside any timing

@@ -4,6 +4,7 @@ the edge cases the synthetic corpus may not hit)."""
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 
@@ -13,7 +14,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from log_collector_spark.operators.asof import asof_join
 from log_collector_spark.operators.aggregate import (
-    exact_percentiles, rollup_time_counts)
+    histogram_exact_percentiles, rollup_time_counts)
+
+
+def _rank_select(rows, qs):
+    """Pure-Python percentile reference: per group, the value at 0-based
+    index floor(q*(n-1)) of the sorted values, plus the group size n."""
+    groups: dict = {}
+    for g, v in rows:
+        groups.setdefault(g, []).append(v)
+    out = {}
+    for g, vs in groups.items():
+        vs = sorted(vs)
+        out[g] = {"n": len(vs), **{name: vs[math.floor(q * (len(vs) - 1))]
+                                   for name, q in qs.items()}}
+    return out
 
 
 def test_asof_join_edges(spark):
@@ -95,7 +110,7 @@ def test_exact_percentiles_spec(spark):
     # group g: values 0..99 → p50 = floor(.5*99)=idx 49, p95 = idx 94
     rows = [("g", v) for v in range(100)] + [("h", 7)]
     df = spark.createDataFrame(rows, "grp string, v long")
-    out = {r["grp"]: r for r in exact_percentiles(
+    out = {r["grp"]: r for r in histogram_exact_percentiles(
         df, "grp", F.col("v"), {"p50": 0.5, "p95": 0.95}).collect()}
     assert out["g"]["n"] == 100 and out["g"]["p50"] == 49 \
         and out["g"]["p95"] == 94
@@ -134,8 +149,7 @@ def test_histogram_percentiles_bracket_exact(spark):
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     lat = h60(F.col("event_id").cast("string")) % 5000
-    exact = {r["event_type"]: r for r in exact_percentiles(
-        ev, "event_type", lat, qs).collect()}
+    exact = _rank_select(ev.select("event_type", lat).collect(), qs)
     est = {r["event_type"]: r for r in histogram_percentiles(
         ev, "event_type", lat, qs, bin_width=100).collect()}
     for t, e in exact.items():
@@ -145,7 +159,7 @@ def test_histogram_percentiles_bracket_exact(spark):
 
 def test_histogram_percentiles_equal_sort_based(spark):
     """The histogram-form exact percentiles must agree with the sort-based
-    rank-selection baseline on the same input, including heavy ties and
+    rank-selection reference on the same input, including heavy ties and
     single-element groups."""
     from log_collector_spark.operators import aggregate as agg_ops
 
@@ -154,9 +168,8 @@ def test_histogram_percentiles_equal_sort_based(spark):
             + [("c", v) for v in range(100)])
     df = spark.createDataFrame(rows, "g string, v long")
     qs = {"p50": 0.5, "p95": 0.95, "p99": 0.99}
-    a = {r["g"]: (r["n"], r["p50"], r["p95"], r["p99"])
-         for r in agg_ops.exact_percentiles(df, "g", F.col("v"), qs)
-         .collect()}
+    a = {g: (r["n"], r["p50"], r["p95"], r["p99"])
+         for g, r in _rank_select(rows, qs).items()}
     b = {r["g"]: (r["n"], r["p50"], r["p95"], r["p99"])
          for r in agg_ops.histogram_exact_percentiles(df, "g", F.col("v"),
                                                       qs).collect()}

@@ -230,25 +230,6 @@ def test_hll_registers_combine_map_side(spark):
     assert "partial_max" in plan, plan
 
 
-def test_ppjoin_verify_never_broadcasts_candidates(spark):
-    """VERDICT r3 item 4: the prefix-filter verify join must shuffle on
-    doc_a, never broadcast the candidate-pair set — prefix survivors scale
-    with corpus size x near-dup density, so a broadcast is an unbounded
-    executor-memory bet at 10^9 docs."""
-    from log_collector_spark.textops import dedup as D
-
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    df = D.ngram_jaccard_prefix(docs)
-    plan = _plan(df)
-    # the inverted-index x candidate join is the one on doc_a; assert the
-    # candidate side reaches it through a shuffle, not a broadcast
-    import re
-    for m in re.finditer(r"BroadcastHashJoin \[([^\]]*)\]", plan):
-        assert "doc_a" not in m.group(1), plan
-    assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan
-    D.unpersist_shingles()
-
-
 def test_tx_stats_plan_parse_once_single_exchange(spark):
     """tx_stats aggregates over the routed frame: the grok parse UDF
     evaluates ONCE, both lookups broadcast, exactly one real (hash)

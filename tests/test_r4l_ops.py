@@ -12,7 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from log_collector_spark.operators import tx_stats as TX
 from log_collector_spark.textops import evalops as EV
-from log_collector_spark.textops import multimodal as TM
 
 SF = "/root/testdata/sf0.001"
 
@@ -44,13 +43,3 @@ def test_ann_mrr_bounds_and_consistency_with_recall(spark):
         assert 0 <= r["n_hits"] <= r["n_queries"]
         # a found truth contributes at least 1000//k, so hits>0 => mrr>0
         assert (r["mrr_milli"] > 0) == (r["n_hits"] > 0)
-
-
-def test_wav_energy_arrow_equals_pandas_stage(spark):
-    docs = spark.read.parquet(os.path.join(SF, "documents.parquet")) \
-                .limit(60)
-    media = TM.media_wav_from_documents(docs)
-    a = sorted(tuple(r) for r in TM.wav_energy_features(media).collect())
-    b = sorted(tuple(r) for r in
-               TM.wav_energy_features_arrow(media).collect())
-    assert a == b and len(a) == 60

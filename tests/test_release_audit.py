@@ -56,21 +56,6 @@ def test_wav_energy_kernel_exact():
                        "energy_max": max(es) if es else 0}
 
 
-def test_udtf_chunks_equal_catalyst_chunks(spark):
-    from log_collector_spark.textops import chunking as CH
-    docs = [
-        (0, " ".join(f"t{i}" for i in range(64))),       # exactly w
-        (1, " ".join(f"t{i}" for i in range(65))),       # w+1 -> 2 chunks
-        (2, "one two three"),                            # short
-        (3, ""),                                         # empty -> 0 rows
-        (4, " ".join(f"x{i}" for i in range(200))),      # several chunks
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(tuple(r) for r in CH.chunk_documents(df).collect())
-    b = sorted(tuple(r) for r in CH.chunk_documents_udtf(df).collect())
-    assert a == b and len(a) > 0
-
-
 def test_wav_zcr_kernel_exact():
     from log_collector_spark.textops import multimodal as TM
     for mid in (0, 1, 7, 49, 123):

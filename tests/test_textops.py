@@ -84,13 +84,13 @@ ORACLE_CHECKED = [
     "pack_documents",
     "schema_profile_events",
     "hist_percentile_latency",
-    "hist_exact_percentile_latency",
+    "percentile_latency",
+    "wav_energy_documents",
     "token_rarity_documents",
     "locf_backfill_events",
     "normalize_documents",
     "cooccur_topk_documents",
     "cms_heavy_hitters",
-    "ngram_jaccard_prefix",
 ]
 
 
@@ -212,6 +212,17 @@ def test_dedup_clusters_connected_components(spark):
     assert out == {1: (1, True), 5: (1, False), 9: (1, False),
                    2: (2, True), 3: (2, False),
                    7: (7, True), 8: (7, False)}
+
+    # a 40-node chain (diameter 39) is one component labelled 0
+    chain = spark.createDataFrame([(i, i + 1) for i in range(39)],
+                                  "doc_a long, doc_b long")
+    out = {r["doc_id"]: (r["cluster"], r["keep"])
+           for r in D.dedup_clusters(None, pairs=chain).collect()}
+    assert out == {i: (0, i == 0) for i in range(40)}
+
+    # no fixpoint within max_iters is an error, not a partial labelling
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        D.dedup_clusters(None, pairs=chain, max_iters=1)
 
 
 def test_split_assign_stable_and_partitioned(spark):
@@ -490,22 +501,6 @@ def test_token_rarity_planted(spark):
     assert out[1] == (3, 1, 333)
     assert out[2] == (3, 2, 666)
     assert out[3] == (0, 0, 0)
-
-def test_prefix_filter_equals_bruteforce(spark):
-    """PPJoin prefix filtering is lossless: the prefix-indexed join returns
-    the EXACT pair set of the full inverted-index join at the same
-    threshold (the prefix-filter principle, verified end-to-end)."""
-    from log_collector_spark.textops import dedup as D
-
-    docs = _docs_df(spark)
-    full = {(r["doc_a"], r["doc_b"]): (r["inter"], r["uni"])
-            for r in D.ngram_jaccard_pairs(docs).collect()}
-    pref = {(r["doc_a"], r["doc_b"]): (r["inter"], r["uni"])
-            for r in D.ngram_jaccard_prefix(docs).collect()}
-    D.unpersist_shingles()
-    assert full, "vacuous: no similar pairs at this sf"
-    assert pref == full
-
 
 def test_cms_never_undercounts(spark):
     """Count-min estimates are >= exact counts for every probed token."""
