@@ -13,7 +13,8 @@ Scaling evidence (north_rule: ≥0.8 efficiency between N and 4N executors —
 sandbox stand-in is the same job at two ``local[K]`` levels on identical
 input): the flagship parse→enrich→route→aggregate job is re-run in pinned
 child subprocesses at ``local[SCALE_LO]`` and ``local[SCALE_HI]`` (default
-2 vs 8 cores) over a SCALE_REPEAT× input and the parent reports throughput
+the largest N with 4N ≤ the cores in the affinity mask, vs 4N) over a
+SCALE_REPEAT× input and the parent reports throughput
 at both plus ``efficiency = (tps_hi / tps_lo) / (hi / lo)``.
 Set ``SPARK_GRAFT_SKIP_SCALING=1`` to skip the child runs.
 
@@ -34,15 +35,17 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# N vs 4N pair for the headline efficiency + full ladder for transparency.
-# 2→8 leaves the single shared JVM, the parquet-scan threads, and host-steal
-# headroom out of the python-worker critical path — the closest local-mode
-# emulation of independent executors. 8→32 is reported too (it saturates the
-# box: 32 workers + 32 JVM threads + ~10% hypervisor steal on 32 vCPUs).
-SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "2"))
-SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "8"))
-SCALE_LADDER = [2, 8, 16, 32]
+# every core count below comes from the CPUs this process may run on
+HOST_CPUS = sorted(os.sched_getaffinity(0))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(HOST_CPUS))
+# N vs 4N pair for the headline efficiency (the largest N with 4N ≤ cores;
+# a host with fewer than 4 cores measures 1 vs all of them) + the ladder of
+# powers of two up to the core count for transparency.
+SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO")
+               or max(1, len(HOST_CPUS) // 4))
+SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI")
+               or min(4 * SCALE_LO, len(HOST_CPUS)))
+SCALE_LADDER = [1 << i for i in range(len(HOST_CPUS).bit_length())]
 # The scaling children process SCALE_REPEAT× the main-suite input. At sf0.1
 # the 4N level finishes in ~3 s — fixed per-job overhead (stage scheduling,
 # stage-commit barrier, GC/JIT ramp) is then a double-digit fraction of the
@@ -176,8 +179,7 @@ def child_main(cpus: int) -> None:
 
 BURNER_SRC = r"""
 import os, signal, sys
-lo, hi = map(int, sys.argv[1].split("-"))
-for c in range(lo, hi + 1):
+for c in map(int, sys.argv[1].split(",")):
     if os.fork() == 0:
         os.sched_setaffinity(0, {c})
         x = 1
@@ -187,27 +189,29 @@ signal.pause()
 """
 
 
-def _run_child(cpus: int, total_cores: int = 32) -> dict:
+def _run_child(cpus: int) -> dict:
     """One pinned child measurement, frequency-normalized.
 
-    The child's whole process tree (JVM + python workers) is pinned to
-    ``cpus`` cores — in plain local mode the JVM's scan/Arrow/GC threads of
-    a local[2] run borrow the other 30 cores, silently subsidizing the low
-    level. A register-only spin burner occupies the remaining cores so the
-    chip is equally busy (same turbo frequency) at every level — on a real
-    cluster both sizes run equally-busy nodes, which is what N→4N models.
+    The child's whole process tree (JVM + python workers) is pinned to the
+    first ``cpus`` cores of the affinity mask — in plain local mode the
+    JVM's scan/Arrow/GC threads of a small run borrow the host's other
+    cores, silently subsidizing the low level. A register-only spin burner
+    occupies the mask's remaining cores so the chip is equally busy (same
+    turbo frequency) at every level — on a real cluster both sizes run
+    equally-busy nodes, which is what N→4N models.
     """
     import signal
 
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
+    pinned, rest = HOST_CPUS[:cpus], HOST_CPUS[cpus:]
     burner = None
-    if cpus < total_cores:
+    if rest:
         # own session/process-group so the forked per-core spinners die too
         burner = subprocess.Popen(
-            [sys.executable, "-c", BURNER_SRC, f"{cpus}-{total_cores - 1}"],
+            [sys.executable, "-c", BURNER_SRC, ",".join(map(str, rest))],
             start_new_session=True)
     try:
-        cmd = ["taskset", "-c", f"0-{cpus - 1}", sys.executable,
+        cmd = ["taskset", "-c", ",".join(map(str, pinned)), sys.executable,
                os.path.abspath(__file__), "--child", str(cpus)]
         r = subprocess.run(cmd, capture_output=True, text=True, env=env,
                            timeout=1200)
@@ -309,11 +313,13 @@ workers — the efficiency loss is per-JOB constant cost, which a longer
 job amortizes exactly as the hours-long 100-TB cluster job would), fresh
 JVM per parallelism level, regular-size warm-up run + 3 measured runs per
 child at the headline-pair levels (2 at the informational ladder levels).
-Methodology (emulating N vs 4N executors on one 32-vCPU shared VM):
+Methodology (emulating N vs 4N executors on one shared VM with
+{len(HOST_CPUS)} cores in the affinity mask):
 
 - each child's WHOLE process tree (JVM + python workers) is pinned with
-  `taskset -c 0-(K-1)` — otherwise a local[2] run's JVM scan/Arrow/GC
-  threads borrow the other 30 cores and subsidize the low level,
+  `taskset` to the first K cores of the affinity mask — otherwise a small
+  run's JVM scan/Arrow/GC threads borrow the other cores and subsidize
+  the low level,
 - the remaining cores run a register-only spin burner so the chip is
   equally busy (same turbo frequency) at every level — a real cluster
   compares equally-busy nodes at both sizes,

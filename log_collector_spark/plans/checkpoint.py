@@ -16,17 +16,25 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
   row counts + success/error metrics, one checkpoint table row each
   (north_rule: "every stage emits per-partition lineage records and
   metrics to a checkpoint table"),
+- the metadata tables (``checkpoint``, ``filestate``) are small parquet
+  dirs handled by driver-side pyarrow (:func:`_read`, :func:`_append`,
+  :func:`_rewrite`); a read error raises, never reads as "nothing committed",
 - at cluster scale the same protocol runs against an Iceberg table with
-  atomic commits instead of a directory rename; the DataFrame code is
-  identical (the table format is isolated behind the write calls).
+  atomic commits instead of a directory rename (SQL emitters below).
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pac
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,19 +51,41 @@ def _ckpt_path(ckpt_dir: str) -> str:
 
 
 def _table_exists(path: str) -> bool:
-    """The checkpoint tables legitimately don't exist on a first run —
-    check before spark.read so Spark's datasource doesn't log a scary
-    (but caught) FileNotFoundException at ERROR level.
+    """The checkpoint tables legitimately don't exist on a first run.
 
-    Every checkpoint read comes through here, so this is also where a
-    rewrite that crashed between its two renames (see :func:`_rewrite`)
-    is rolled back: the table is missing but its ``.compact-old`` copy is
-    complete, and it is renamed back before anyone can mistake the table
-    for a first run."""
+    Every checkpoint read and append comes through here, so this is also
+    where a rewrite that crashed between its two renames (see
+    :func:`_rewrite`) is rolled back: the table is missing but its
+    ``.compact-old`` copy is complete, and it is renamed back before anyone
+    can mistake the table for a first run."""
     old = path + ".compact-old"
     if not os.path.isdir(path) and os.path.isdir(old):
         os.rename(old, path)
     return os.path.isdir(path)
+
+
+def _read(path: str, columns: list[str] | None = None, filter=None):
+    """The parquet table at ``path`` as a pyarrow table (``columns`` only,
+    rows matching the pyarrow expression ``filter``), or None when the table
+    does not exist or holds no ``.parquet`` file. Read errors propagate."""
+    files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
+             if _table_exists(path) else [])
+    if not files:
+        return None
+    return pads.dataset(files, format="parquet").to_table(
+        columns=columns, filter=filter)
+
+
+def _append(path: str, tbl) -> None:
+    """Add the pyarrow table ``tbl`` to the table at ``path`` as one new file:
+    written under a hidden name (dot prefix, no ``.parquet`` suffix) that no
+    reader lists, then renamed in; a crash leaves none or a whole one."""
+    _table_exists(path)  # roll back a crashed rewrite before adding to it
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, os.path.join(path, name))
 
 
 def _rewrite(path: str, tbl) -> None:
@@ -67,8 +97,6 @@ def _rewrite(path: str, tbl) -> None:
     :func:`_table_exists` renames back before any read. No reader sees an
     empty table, so ``committed_batches`` never loses a batch and
     ``clean_orphan_staging`` never deletes committed output."""
-    import pyarrow.parquet as pq
-
     stage = path + ".compact-staging"
     old = path + ".compact-old"
     if os.path.isdir(stage):
@@ -82,25 +110,18 @@ def _rewrite(path: str, tbl) -> None:
     shutil.rmtree(old)
 
 
-def _committed(spark: SparkSession, ckpt_dir: str, col: str) -> set[str]:
-    """Distinct values of one checkpoint-table column (empty on a first
-    run)."""
-    path = _ckpt_path(ckpt_dir)
-    if not _table_exists(path):
-        return set()
-    try:
-        rows = spark.read.parquet(path).select(col).distinct().collect()
-    except Exception:
-        return set()
-    return {r[col] for r in rows}
+def _committed(ckpt_dir: str, col: str) -> set[str]:
+    """Distinct values of one checkpoint-table column (empty if none)."""
+    tbl = _read(_ckpt_path(ckpt_dir), [col])
+    return set() if tbl is None else set(tbl.column(col).to_pylist())
 
 
 def committed_files(spark: SparkSession, ckpt_dir: str) -> set[str]:
-    return _committed(spark, ckpt_dir, "src_file")
+    return _committed(ckpt_dir, "src_file")
 
 
 def committed_batches(spark: SparkSession, ckpt_dir: str) -> set[str]:
-    return _committed(spark, ckpt_dir, "batch_id")
+    return _committed(ckpt_dir, "batch_id")
 
 
 def clean_orphan_staging(spark: SparkSession, out_dir: str,
@@ -131,10 +152,9 @@ def pending_files(spark: SparkSession, input_dir: str,
     """Files to process: regex/skip-before pruning (S3, SugoFileFilter
     semantics — see sources/file_filter.py) minus the committed set.
 
-    The committed set is subtracted with a LEFT ANTI join (candidate listing
-    ⟕ checkpoint table) — the committed set is never materialized on the
-    driver, so this works unchanged when the checkpoint table holds 10^8
-    rows. Only the (small) pending result is collected."""
+    The committed set is never materialized: the checkpoint scan keeps only
+    rows whose ``src_file`` is one of the candidates, so memory is bounded
+    by the candidate listing even when the table holds 10^8 rows."""
     from log_collector_spark.sources.file_filter import filtered_files
 
     all_files = [f for f in filtered_files(input_dir, filename_regex,
@@ -142,17 +162,10 @@ def pending_files(spark: SparkSession, input_dir: str,
                  if filename_regex is not None or f.endswith(".parquet")]
     if not all_files:
         return []
-    if not _table_exists(_ckpt_path(ckpt_dir)):
-        return all_files
-    try:
-        done = spark.read.parquet(_ckpt_path(ckpt_dir)).select("src_file")
-    except Exception:
-        return all_files
-    cand = spark.createDataFrame([(f,) for f in all_files],
-                                 "src_file string")
-    pend = {r["src_file"]
-            for r in cand.join(done, "src_file", "left_anti").collect()}
-    return [f for f in all_files if f in pend]
+    done = _read(_ckpt_path(ckpt_dir), ["src_file"],
+                 pac.field("src_file").isin(all_files))
+    done = set() if done is None else set(done.column("src_file").to_pylist())
+    return [f for f in all_files if f not in done]
 
 
 def batch_id(files: list[str]) -> str:
@@ -194,12 +207,18 @@ def record_filestate(spark: SparkSession, ckpt_dir: str,
                      files: list[str]) -> None:
     """Commit-time sidecar: (src_file, bytes) per processed file — the analog
     of the reference's stored byte offset (DefaultFileReader.java:306-310)."""
-    rows = [(f, os.path.getsize(f)) for f in files if os.path.exists(f)]
-    if not rows:
-        return
-    _table_exists(_filestate_path(ckpt_dir))  # roll back a crashed rewrite
-    spark.createDataFrame(rows, "src_file string, bytes long") \
-        .coalesce(1).write.mode("append").parquet(_filestate_path(ckpt_dir))
+    rows = [f for f in files if os.path.exists(f)]
+    if rows:
+        sizes = [os.path.getsize(f) for f in rows]
+        _append(_filestate_path(ckpt_dir), pa.table({
+            "src_file": pa.array(rows, pa.string()),
+            "bytes": pa.array(sizes, pa.int64())}))
+
+
+def _max_bytes(tbl):
+    """Per-file MAX(bytes): the only reading anyone does of filestate."""
+    return (tbl.group_by("src_file").aggregate([("bytes", "max")])
+            .rename_columns(["src_file", "bytes"]))
 
 
 def truncated_files(spark: SparkSession, ckpt_dir: str) -> list[str]:
@@ -207,17 +226,13 @@ def truncated_files(spark: SparkSession, ckpt_dir: str) -> list[str]:
     offset > current length → restart from 0). File-granularity analog: a
     committed file whose on-disk size SHRANK was truncated/rotated in place
     — its checkpoint entry is stale."""
-    if not _table_exists(_filestate_path(ckpt_dir)):
+    tbl = _read(_filestate_path(ckpt_dir), ["src_file", "bytes"])
+    if tbl is None:
         return []
-    try:
-        rows = (spark.read.parquet(_filestate_path(ckpt_dir))
-                .groupBy("src_file")
-                .agg(F.max("bytes").alias("bytes")).collect())
-    except Exception:
-        return []
-    return [r["src_file"] for r in rows
-            if os.path.exists(r["src_file"])
-            and os.path.getsize(r["src_file"]) < r["bytes"]]
+    agg = _max_bytes(tbl)
+    return [f for f, b in zip(agg.column("src_file").to_pylist(),
+                              agg.column("bytes").to_pylist())
+            if os.path.exists(f) and os.path.getsize(f) < b]
 
 
 TRUNCATED_TOMBSTONE = "truncated://"
@@ -238,24 +253,20 @@ def recover_truncated(spark: SparkSession, ckpt_dir: str) -> list[str]:
     say must stay. Filestate rows ARE dropped (keeping the stale larger size
     would re-flag the file as truncated forever).
 
-    The rewrite is driver-side (the checkpoint table is metadata — one row
-    per file×partition, ~10^6 rows at 100 TB); on an Iceberg-backed
-    checkpoint this is an ``UPDATE ... WHERE src_file IN (...)``. Like the
-    reference's restart-from-0, truncate recovery is at-least-once for the
-    affected file: rows its pre-truncate content already emitted stay in the
-    output (the reference re-emits to its topic the same way).
+    On an Iceberg-backed checkpoint this is an ``UPDATE ... WHERE src_file
+    IN (...)``. Like the reference's restart-from-0, truncate recovery is
+    at-least-once for the affected file: rows its pre-truncate content
+    already emitted stay in the output (the reference re-emits to its topic
+    the same way).
     """
     bad = truncated_files(spark, ckpt_dir)
     if not bad:
         return []
-    import pyarrow as pa
-    import pyarrow.compute as pac
-    import pyarrow.parquet as pq
     badset = set(bad)
 
     ckpt = _ckpt_path(ckpt_dir)
-    if _table_exists(ckpt):
-        tbl = pq.read_table(ckpt)
+    tbl = _read(ckpt)
+    if tbl is not None:
         idx = tbl.schema.get_field_index("src_file")
         col = [TRUNCATED_TOMBSTONE + v if v in badset else v
                for v in tbl.column("src_file").to_pylist()]
@@ -263,8 +274,8 @@ def recover_truncated(spark: SparkSession, ckpt_dir: str) -> list[str]:
                                       pa.array(col, pa.string())))
 
     fs = _filestate_path(ckpt_dir)
-    if _table_exists(fs):
-        tbl = pq.read_table(fs)
+    tbl = _read(fs)
+    if tbl is not None:
         _rewrite(fs, tbl.filter(pac.invert(pac.is_in(
             tbl.column("src_file"), value_set=pa.array(bad)))))
     return bad
@@ -278,9 +289,12 @@ def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
                   detect_truncate: bool = False) -> dict:
     """One resumable pipeline run over the files not yet checkpointed.
 
-    Returns {"batch_id", "files", "rows"}; with ``crash_before_commit`` the
-    sink data is written but the checkpoint append is skipped (simulates the
-    reference's crash window — re-running must NOT duplicate output).
+    Returns {"batch_id", "files", "rows"}, ``rows`` = sink rows written
+    (success + error; blank lines are neither); with ``crash_before_commit``
+    the sink data is written but the checkpoint append is skipped (simulates
+    the reference's crash window — re-running must NOT duplicate output).
+    The lineage append is the commit point; filestate goes just before it,
+    so a crash between the two only re-runs the batch.
     """
     clean_orphan_staging(spark, out_dir, ckpt_dir)
     if detect_truncate:
@@ -302,11 +316,11 @@ def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
     if crash_before_commit:
         return {"batch_id": bid, "files": files, "rows": -1,
                 "crashed": True}
-    stats = lineage_stats(routed, run_id, bid, "route")
-    stats.write.mode("append").parquet(_ckpt_path(ckpt_dir))
+    stats = lineage_stats(routed, run_id, bid, "route").toArrow()
     record_filestate(spark, ckpt_dir, files)
-    n = spark.read.parquet(staging).count()
-    return {"batch_id": bid, "files": files, "rows": n}
+    _append(_ckpt_path(ckpt_dir), stats)
+    rows = sum(sum(stats.column(c).to_pylist()) for c in ("success", "error"))
+    return {"batch_id": bid, "files": files, "rows": rows}
 
 
 def _empty_output(spark: SparkSession) -> DataFrame:
@@ -343,8 +357,8 @@ def read_output(spark: SparkSession, out_dir: str,
 # ---------------------------------------------------------------------------
 # Iceberg-backed checkpoint table (SQL emitters; jar-gated)
 # ---------------------------------------------------------------------------
-# The parquet checkpoint above is the executable backend in this sandbox
-# (no iceberg-spark-runtime jar ships with it). On a cluster the same
+# The parquet checkpoint above is the executable backend here (no
+# iceberg-spark-runtime jar ships with the package). On a cluster the same
 # metadata lives in an Iceberg table, where the driver-side
 # rewrite-the-whole-table dance collapses to single transactional
 # statements. These emitters ARE that path: run them verbatim through
@@ -354,9 +368,8 @@ CKPT_TABLE_COLS = ", ".join(f"{c} {t}" for c, t in CKPT_ROW)
 
 
 def iceberg_create_checkpoint_sql(table: str = "ckpt.checkpoint") -> str:
-    """Checkpoint table DDL: partitioned by run for cheap per-run listing,
-    ordered within files by src_file so the pending-set anti-join's
-    build side scans sorted row groups."""
+    """Checkpoint table DDL: partitioned by run for cheap per-run listing;
+    the pending-set scan filters on ``src_file IN (candidates)``."""
     return (f"CREATE TABLE IF NOT EXISTS {table} ({CKPT_TABLE_COLS}) "
             f"USING iceberg PARTITIONED BY (run_id)")
 
@@ -385,47 +398,32 @@ def iceberg_commit_batch_sql(table: str = "ckpt.checkpoint") -> str:
 def compact_checkpoint(spark: SparkSession, ckpt_dir: str) -> dict:
     """Compact the checkpoint metadata tables in place — the maintenance
     pass a long-lived resumable pipeline must run: every committed batch
-    appends one small parquet file to each table (`coalesce(1).append`),
-    so after 10^5 batches a resume pays 10^5 file opens just to learn
-    what is already done.
+    appends one small parquet file to each table (:func:`_append`), so
+    after 10^5 batches a resume pays 10^5 file opens just to learn what is
+    already done.
 
     Semantics preserved EXACTLY:
     - checkpoint table: rows are already per (src_file x partition) facts
       (including ``truncated://`` tombstones, whose batch_ids must keep
       protecting committed output from clean_orphan_staging) — they are
       rewritten verbatim into one file, only the file count changes;
-    - filestate table: collapsed to per-file MAX(bytes) — the only
-      reading anyone does (truncated_files' groupBy-max), so dropping
-      superseded smaller rows changes no answer.
+    - filestate table: collapsed to per-file MAX(bytes) (:func:`_max_bytes`,
+      the reading truncated_files does), so dropping superseded smaller
+      rows changes no answer.
 
-    Driver-side pyarrow (metadata scale, same as recover_truncated), and
-    crash-safe through the same :func:`_rewrite`; re-running compaction is
+    Crash-safe through :func:`_rewrite`; re-running compaction is
     idempotent. Returns per-table (files_before, files_after, rows)."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     report = {}
-
-    ckpt = _ckpt_path(ckpt_dir)
-    if _table_exists(ckpt):
-        files = glob.glob(os.path.join(ckpt, "*.parquet"))
-        tbl = pq.read_table(ckpt)
-        _rewrite(ckpt, tbl)
-        report["checkpoint"] = {"files_before": len(files),
-                                "files_after": 1, "rows": tbl.num_rows}
-
-    fs = _filestate_path(ckpt_dir)
-    if _table_exists(fs):
-        files = glob.glob(os.path.join(fs, "*.parquet"))
-        tbl = pq.read_table(fs)
-        agg = (pa.table({"src_file": tbl.column("src_file"),
-                         "bytes": tbl.column("bytes")})
-               .group_by("src_file").aggregate([("bytes", "max")])
-               .rename_columns(["src_file", "bytes"]))
-        agg = agg.sort_by("src_file")
-        _rewrite(fs, agg)
-        report["filestate"] = {"files_before": len(files),
-                               "files_after": 1, "rows": agg.num_rows}
+    for name, path, shape in (
+            (CKPT_TABLE, _ckpt_path(ckpt_dir), lambda t: t),
+            (FILESTATE_TABLE, _filestate_path(ckpt_dir),
+             lambda t: _max_bytes(t).sort_by("src_file"))):
+        tbl = _read(path)
+        if tbl is None:
+            continue
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        tbl = shape(tbl)
+        _rewrite(path, tbl)
+        report[name] = {"files_before": len(files), "files_after": 1,
+                        "rows": tbl.num_rows}
     return report

@@ -138,33 +138,35 @@ def dsir_importance(df: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
 
     Returns (rank, doc_id, source, n_bigrams, imp_millibits), rank 1..k.
 
-    Plan/scale: one bigram explode, two B-bucket hash aggs (map-side
-    combined, B rows out), one broadcast join of the λ table onto the
-    exploded frame, one per-doc agg, one TakeOrdered(k). The explode is
-    the only data-sized shuffle."""
+    Plan/scale: one bigram explode, counted once per (doc, source,
+    bucket) — the only data-sized shuffle, whose exchange both consumers
+    reuse: the B-bucket agg (raw and target counts in one conditional
+    sum, corpus totals as a window over its B rows) and the per-doc
+    Σ c·λ over a broadcast join of the λ table; one TakeOrdered(k)."""
     bitlen = lambda c: F.length(F.bin(c)).cast("long")
-    ex = (df.select("doc_id", "source",
-                    F.explode(_bigrams("text")).alias("bg"))
-            .withColumn("bucket", C.h60(F.col("bg")) % n_buckets)
-            .drop("bg"))
-    raw = ex.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_r"))
-    tgt = (ex.filter(F.col("source") == target_source)
-             .groupBy("bucket").agg(F.count(F.lit(1)).alias("n_t")))
-    lam = (raw.join(tgt, "bucket", "left")
-              .withColumn("n_t", F.coalesce("n_t", F.lit(0)))
-              .crossJoin(F.broadcast(
-                  raw.agg(F.sum("n_r").cast("long").alias("R"))))
-              .crossJoin(F.broadcast(
-                  tgt.agg(F.coalesce(F.sum("n_t"), F.lit(0)).cast("long")
-                          .alias("T"))))
+    cnt = (df.select("doc_id", "source",
+                     F.explode(_bigrams("text")).alias("bg"))
+             .groupBy("doc_id", "source",
+                      (C.h60(F.col("bg")) % n_buckets).alias("bucket"))
+             .agg(F.count(F.lit(1)).alias("c")))
+    tgt_c = F.when(F.col("source") == target_source, F.col("c")).otherwise(0)
+    # totals: a window over the B bucket rows, not a second agg over them
+    total = Window.partitionBy()
+    lam = (cnt.groupBy("bucket").agg(F.sum("c").alias("n_r"),
+                                     F.sum(tgt_c).alias("n_t"))
               .select("bucket",
-                      ((bitlen(F.col("n_t") + 1) - bitlen(F.col("T") + 1))
-                       - (bitlen(F.col("n_r") + 1) - bitlen(F.col("R") + 1))
+                      ((bitlen(F.col("n_t") + 1)
+                        - bitlen(F.sum("n_t").over(total) + 1))
+                       - (bitlen(F.col("n_r") + 1)
+                          - bitlen(F.sum("n_r").over(total) + 1))
                        ).alias("lam")))
-    per_doc = (ex.join(F.broadcast(lam), "bucket")
-                 .groupBy("doc_id", "source")
-                 .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-                      F.sum("lam").cast("long").alias("lam_sum")))
+    # every bucket has a λ; "left" keeps the inferred bucket IS NOT NULL
+    # filter out of this copy of the counts, so its exchange is reused
+    per_doc = (cnt.join(F.broadcast(lam), "bucket", "left")
+                  .groupBy("doc_id", "source")
+                  .agg(F.sum("c").cast("long").alias("n_bigrams"),
+                       F.sum(F.col("c") * F.col("lam")).cast("long")
+                        .alias("lam_sum")))
     # abs-split: DIV only ever sees a non-negative numerator, so the
     # rounding cannot depend on an engine's signed-division rule
     imp = (F.when(F.col("lam_sum") >= 0,

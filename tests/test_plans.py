@@ -436,3 +436,17 @@ def test_dsir_topk_is_takeordered_not_global_window(spark):
     assert "TakeOrderedAndProject" in plan, plan
     # the lambda table joins broadcast — the vocab never shuffles
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_dsir_explodes_bigrams_once(spark):
+    """The corpus-sized bigram explode runs once: the per-(doc, source,
+    bucket) counts feed both the λ table and the per-doc sum through one
+    reused exchange, so the final executed plan has one Generate."""
+    import __spark_entry__ as E
+
+    df = E.queries()["dsir_importance_documents"](spark, SF_DIR)
+    df.collect()
+    plan = _plan(df)
+    final = plan[plan.index("== Final Plan =="):
+                 plan.index("== Initial Plan ==")]
+    assert final.count("Generate ") == 1, final

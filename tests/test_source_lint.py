@@ -8,11 +8,16 @@ Runs on the package source only (no Spark, milliseconds):
   lines to a ``sink=__HIVE_DEFAULT_PARTITION__`` directory);
 * the outcome predicates live only in ``operators/aggregate.py``
   (``success_expr`` / ``error_expr``); the partial form
-  ``parse_ok & ~is_oversize`` appears nowhere.
+  ``parse_ok & ~is_oversize`` appears nowhere;
+* the checkpoint metadata tables go through one pyarrow path in
+  ``plans/checkpoint.py``: read only by ``_read``, written only by
+  ``_append`` and ``_rewrite``, never by a Spark reader or writer, and no
+  ``except Exception`` turns a read error into "nothing committed".
 """
 
 from __future__ import annotations
 
+import ast
 import os
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -43,3 +48,75 @@ def test_sink_fanout_written_only_by_route():
 
 def test_no_partial_success_predicate():
     assert _hits(PARTIAL_SUCCESS) == []
+
+
+CHECKPOINT = os.path.join(PKG, "plans", "checkpoint.py")
+CKPT_PATHS = {"_ckpt_path", "_filestate_path"}
+
+
+def _checkpoint_tree() -> ast.Module:
+    with open(CHECKPOINT, encoding="utf-8") as fh:
+        return ast.parse(fh.read())
+
+
+def _checkpoint_functions() -> list[ast.FunctionDef]:
+    return [n for n in _checkpoint_tree().body
+            if isinstance(n, ast.FunctionDef)]
+
+
+def _calls(node: ast.AST, attr: str) -> bool:
+    return any(isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+               and n.func.attr == attr for n in ast.walk(node))
+
+
+def _chain(node: ast.AST) -> list[str]:
+    """Attribute names along a call chain: ``a.read.b(x).c`` → c, b, read."""
+    out = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            out.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return out
+
+
+def test_checkpoint_swallows_no_errors():
+    broad = [h.lineno for h in ast.walk(_checkpoint_tree())
+             if isinstance(h, ast.ExceptHandler)
+             and (h.type is None or (isinstance(h.type, ast.Name)
+                                     and h.type.id in ("Exception",
+                                                       "BaseException")))]
+    assert broad == []
+
+
+def test_checkpoint_tables_have_one_pyarrow_io_path():
+    fns = _checkpoint_functions()
+    assert {f.name for f in fns if _calls(f, "write_table")} == \
+        {"_append", "_rewrite"}
+    assert {f.name for f in fns
+            if _calls(f, "read_table") or _calls(f, "dataset")} == {"_read"}
+
+
+def test_checkpoint_tables_never_touched_by_spark_io():
+    hits = []
+    for fn in _checkpoint_functions():
+        # names bound to a metadata table's path inside this function
+        tainted = {t.id for n in ast.walk(fn) if isinstance(n, ast.Assign)
+                   for t in n.targets if isinstance(t, ast.Name)
+                   and any(isinstance(c, ast.Call)
+                           and isinstance(c.func, ast.Name)
+                           and c.func.id in CKPT_PATHS
+                           for c in ast.walk(n.value))}
+        for call in ast.walk(fn):
+            if not (isinstance(call, ast.Call)
+                    and {"read", "write"} & set(_chain(call.func))):
+                continue
+            for arg in call.args + [k.value for k in call.keywords]:
+                for n in ast.walk(arg):
+                    if (isinstance(n, ast.Name) and n.id in tainted) or (
+                            isinstance(n, ast.Call)
+                            and isinstance(n.func, ast.Name)
+                            and n.func.id in CKPT_PATHS):
+                        hits.append(f"{fn.name}:{call.lineno}")
+    assert hits == []
