@@ -113,17 +113,6 @@ def rollup_time_counts(df: DataFrame, ts_ms: Column) -> DataFrame:
         "n")
 
 
-def turn_lag_features(df: DataFrame) -> DataFrame:
-    """Window functions over the stable turn order: previous role and
-    inter-turn gap (analytic layer the reference lacks; SURVEY §2.8)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return (df
-            .withColumn("prev_role", F.lag("role").over(w))
-            .withColumn("gap_s",
-                        F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w))
-            .withColumn("turn_rank", F.row_number().over(w)))
-
-
 def json_schema_profile(df: DataFrame, group_col: str = "event_type",
                         json_col: str = "props") -> DataFrame:
     """Dynamic-schema drift profile: per group, how often each top-level

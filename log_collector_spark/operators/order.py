@@ -53,12 +53,6 @@ def ordered_by_conversation(df: DataFrame,
     return d.sortWithinPartitions("conv_id", "turn_idx")
 
 
-def globally_ordered(df: DataFrame) -> DataFrame:
-    """Total order (range partitioned) — for golden-file equality dumps only;
-    a full sort is a range-exchange, don't use it mid-pipeline."""
-    return df.orderBy("conv_id", "turn_idx")
-
-
 # ---------------------------------------------------------------------------
 # Z-order layout audit (round-4 continuation): the data-clustering decision
 # an Iceberg/Delta OPTIMIZE ZORDER makes, measured as an oracle-checkable

@@ -12,10 +12,17 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
   the sorted pending-file list) with ``mode=overwrite``, then appends
   checkpoint rows. A crash between write and commit simply overwrites the
   same staging dir on re-run — no duplicates,
-- lineage granularity: per (run, batch, source file, physical partition)
-  row counts + success/error metrics, one checkpoint table row each
-  (north_rule: "every stage emits per-partition lineage records and
-  metrics to a checkpoint table"),
+- lineage granularity: per (run, batch, source file, partition) row counts
+  + success/error metrics, one checkpoint table row each (north_rule:
+  "every stage emits per-partition lineage records and metrics to a
+  checkpoint table"). The rows come from what the write left behind, so
+  the batch is parsed once: ``partition_id`` is the write task that wrote
+  the rows (its ``part-NNNNN-`` file number; the write adds no shuffle, so
+  it is the input partition), the ``sink`` directory tells success from
+  error, and ``lines`` adds each file's blank lines (its parquet footer
+  rows minus the rows it wrote; blanks are never written) to the file's
+  lowest-``partition_id`` row. A file that wrote nothing gets one row with
+  ``partition_id`` NULL,
 - the metadata tables (``checkpoint``, ``filestate``) are small parquet
   dirs handled by driver-side pyarrow (:func:`_read`, :func:`_append`,
   :func:`_rewrite`); a read error raises, never reads as "nothing committed",
@@ -25,11 +32,14 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
 
 from __future__ import annotations
 
+import datetime
 import glob
 import hashlib
 import os
 import shutil
 import uuid
+from collections import defaultdict
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.compute as pac
@@ -38,7 +48,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from log_collector_spark.operators import aggregate as agg_ops
+from log_collector_spark.grok.oracle import SINK_OK_SUFFIX
 from log_collector_spark.operators import route as route_ops
 from log_collector_spark.plans import pipeline as pl
 from log_collector_spark.sources.io import iceberg_available  # noqa: F401
@@ -172,28 +182,70 @@ def batch_id(files: list[str]) -> str:
     return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:16]
 
 
-# One checkpoint row: (column, SQL type). lineage_stats writes exactly these
+# One checkpoint row: (column, SQL type). lineage_rows builds exactly these
 # columns and the Iceberg DDL declares exactly these.
 CKPT_ROW = (("run_id", "STRING"), ("batch_id", "STRING"), ("stage", "STRING"),
             ("src_file", "STRING"), ("partition_id", "INT"),
             ("lines", "BIGINT"), ("success", "BIGINT"), ("error", "BIGINT"),
             ("committed_at", "TIMESTAMP"))
+_ARROW_TYPE = {"STRING": pa.string(), "INT": pa.int32(),
+               "BIGINT": pa.int64(), "TIMESTAMP": pa.timestamp("us", "UTC")}
 
 
-def lineage_stats(routed: DataFrame, run_id: str, bid: str,
-                  stage: str) -> DataFrame:
-    """Per (source file, physical partition) lineage + metric counters."""
-    counts = (routed
-              .withColumn("_pid", F.spark_partition_id())
-              .groupBy(F.col("_src_file").alias("src_file"), "_pid")
-              .agg(F.count(F.lit(1)).alias("lines"),
-                   F.sum(agg_ops.success_expr().cast("long")).alias("success"),
-                   F.sum(agg_ops.error_expr().cast("long")).alias("error")))
-    named = {"run_id": F.lit(run_id), "batch_id": F.lit(bid),
-             "stage": F.lit(stage), "partition_id": F.col("_pid"),
-             "committed_at": F.current_timestamp()}
-    return counts.select(*[named.get(c, F.col(c)).cast(t).alias(c)
-                           for c, t in CKPT_ROW])
+def written_counts(spark: SparkSession, staging: str) -> pa.Table:
+    """Success/error rows per (src_file, partition_id) that the fan-out write
+    left under ``staging``: one narrow read of ``_src_file``. A ``*_etl``
+    sink is success, ``errors``/``failures`` are error; ``partition_id`` is
+    the write task, from its ``part-NNNNN-`` file name (NULL if the name
+    does not parse)."""
+    out = spark.read.schema("_src_file STRING, sink STRING").parquet(staging)
+    ok = F.col("sink").endswith(SINK_OK_SUFFIX).cast("long")
+    task = F.regexp_extract(F.input_file_name(), r"/part-(\d+)-", 1)
+    return (out.groupBy(F.col("_src_file").alias("src_file"),
+                        task.try_cast("int").alias("partition_id"))
+            .agg(F.sum(ok).alias("success"), F.sum(1 - ok).alias("error"))
+            .toArrow())
+
+
+def lineage_rows(written: pa.Table, files: list[str], lines: list[int],
+                 run_id: str, bid: str, stage: str) -> pa.Table:
+    """The checkpoint rows of one batch from ``written``
+    (:func:`written_counts`) and each file's footer row count ``lines``;
+    blank lines are placed as the module docstring says.
+
+    ``src_file`` is spelled as in ``files`` (what :func:`pending_files`
+    lists), not as ``input_file_name()`` spells it (absolute, URL-encoded),
+    or the file would never read as committed. Raises, so nothing is
+    committed, if an output file name carried no task number, rows came
+    from a file outside ``files``, or a file wrote more rows than its
+    footer holds."""
+    spelled = {os.path.abspath(f): f for f in files}
+    parts = defaultdict(list)
+    for w in written.to_pylist():
+        if w["partition_id"] is None:
+            raise ValueError(f"batch={bid}: an output file name has no "
+                             f"part-NNNNN- task number")
+        f = spelled.get(unquote(w["src_file"]))
+        if f is None:
+            raise ValueError(f"batch={bid}: rows written for "
+                             f"{w['src_file']}, which is not in the batch")
+        parts[f].append((w["partition_id"], w["success"], w["error"]))
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = []
+    for f, n in zip(files, lines):
+        got = sorted(parts[f]) or [(None, 0, 0)]
+        blank = n - sum(ok + err for _, ok, err in got)
+        if blank < 0:
+            raise ValueError(f"{f} wrote {n - blank} rows; its parquet "
+                             f"footer holds {n}")
+        for pid, ok, err in got:
+            rows.append({"run_id": run_id, "batch_id": bid, "stage": stage,
+                         "src_file": f, "partition_id": pid,
+                         "lines": ok + err + blank, "success": ok,
+                         "error": err, "committed_at": now})
+            blank = 0
+    return pa.Table.from_pylist(rows, pa.schema(
+        [(c, _ARROW_TYPE[t]) for c, t in CKPT_ROW]))
 
 
 FILESTATE_TABLE = "filestate"
@@ -204,15 +256,12 @@ def _filestate_path(ckpt_dir: str) -> str:
 
 
 def record_filestate(spark: SparkSession, ckpt_dir: str,
-                     files: list[str]) -> None:
+                     files: list[str], sizes: list[int]) -> None:
     """Commit-time sidecar: (src_file, bytes) per processed file — the analog
     of the reference's stored byte offset (DefaultFileReader.java:306-310)."""
-    rows = [f for f in files if os.path.exists(f)]
-    if rows:
-        sizes = [os.path.getsize(f) for f in rows]
-        _append(_filestate_path(ckpt_dir), pa.table({
-            "src_file": pa.array(rows, pa.string()),
-            "bytes": pa.array(sizes, pa.int64())}))
+    _append(_filestate_path(ckpt_dir), pa.table({
+        "src_file": pa.array(files, pa.string()),
+        "bytes": pa.array(sizes, pa.int64())}))
 
 
 def _max_bytes(tbl):
@@ -316,8 +365,12 @@ def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
     if crash_before_commit:
         return {"batch_id": bid, "files": files, "rows": -1,
                 "crashed": True}
-    stats = lineage_stats(routed, run_id, bid, "route").toArrow()
-    record_filestate(spark, ckpt_dir, files)
+    written = written_counts(spark, staging)
+    # one stat + one footer read per file: filestate's size, lineage's lines
+    sizes, lines = zip(*((os.path.getsize(f), pq.read_metadata(f).num_rows)
+                         for f in files))
+    stats = lineage_rows(written, files, lines, run_id, bid, "route")
+    record_filestate(spark, ckpt_dir, files, sizes)
     _append(_ckpt_path(ckpt_dir), stats)
     rows = sum(sum(stats.column(c).to_pylist()) for c in ("success", "error"))
     return {"batch_id": bid, "files": files, "rows": rows}

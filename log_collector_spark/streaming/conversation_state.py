@@ -243,9 +243,6 @@ def batch_sessionize_oracle(spark: SparkSession, input_dir: str,
 # operators/tx_stats.sft_examples)
 # ---------------------------------------------------------------------------
 
-SFT_OUT_SCHEMA = ("conv_id STRING, turn_idx BIGINT, prompt_turns BIGINT, "
-                  "prompt_tokens BIGINT, completion_tokens BIGINT, "
-                  "fits_budget BOOLEAN")
 _SFT_STATE_SCHEMA = "n_turns BIGINT, n_tokens BIGINT"
 
 
@@ -304,45 +301,6 @@ class SftExampleBuilder(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-def start_sft_example_stream(spark: SparkSession, input_dir: str,
-                             checkpoint_loc: str, out_dir: str, *,
-                             budget: int = 20000,
-                             max_files_per_trigger: int | None = 1):
-    """Run the incremental SFT builder over the transcript file stream:
-    clean-filter (same predicates as the batch route), extract the token
-    count, and emit one parquet row per assistant turn. protobuf-gated
-    like the sessionizer (the kernel itself is pure pandas and
-    unit-tested against a fake handle)."""
-    try:
-        import google.protobuf  # noqa: F401  (state API wire format)
-    except ImportError as e:  # pragma: no cover - environment gate
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package for "
-            "its state API client: pip install protobuf") from e
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    src = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    clean = (src.filter(
-                 (F.octet_length("text") < 8192) &
-                 (F.trim(F.coalesce(F.col("text"), F.lit(""))) != "") &
-                 (~F.col("text").startswith("corrupt#")))
-                .select("conv_id", "turn_idx", "role",
-                        F.regexp_extract("text", r'"tokens":(\d+)', 1)
-                         .cast("long").alias("tok")))
-    out = (clean.groupBy("conv_id")
-                .transformWithStateInPandas(
-                    SftExampleBuilder(budget),
-                    outputStructType=SFT_OUT_SCHEMA,
-                    outputMode="append",
-                    timeMode="none"))
-    return (out.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
 
 
 # ---------------------------------------------------------------------------

@@ -16,9 +16,11 @@ engine reuses them verbatim under ``foreachBatch``:
   metrics/ReaderMetrics.java:29-35,52-57): a watermarked windowed count —
   the watermark drops state for buckets older than 24h exactly like the
   reference's eviction-at-report,
-- **sinks**: per-sink parquet fan-out append (idempotent per epoch thanks to
-  the streaming commit log; Iceberg/Kafka sinks are drop-in replacements of
-  the same ``foreachBatch`` body on a real cluster).
+- **sinks**: per-sink parquet fan-out append, at-least-once: a crash after
+  the ``foreachBatch`` write and before the streaming commit log records
+  the epoch replays it and appends its rows again (the batch path's
+  staging-dir + lineage commit is not used here yet; Iceberg/Kafka sinks
+  are drop-in replacements of the same ``foreachBatch`` body).
 """
 
 from __future__ import annotations

@@ -698,33 +698,6 @@ def sql_embedding_neardup_guarded(table: str = "embeddings",
     """
 
 
-def sql_embedding_neardup_unguarded(table: str = "embeddings") -> str:
-    qe = C.sql_quantized_embedding("embedding")
-    bucket_terms = " + ".join(
-        "CASE WHEN CAST(list_dot_product(q, {plane}::BIGINT[]) AS BIGINT) > 0 "
-        "THEN CAST({bit} AS BIGINT) ELSE 0 END".format(
-            plane=str(plane), bit=1 << j)
-        for j, plane in enumerate(EMB_PLANES[:EMB_ND_PLANES]))
-    return f"""
-        WITH q AS (
-            SELECT vec_id, {qe} AS q FROM {table}
-        ), qq AS (
-            SELECT vec_id, q,
-                   CAST(list_dot_product(q, q) AS BIGINT) AS norm2,
-                   {bucket_terms} AS bucket
-            FROM q
-        )
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               CAST(list_dot_product(a.q, b.q) AS BIGINT) AS dot
-        FROM qq a JOIN qq b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE CAST(list_dot_product(a.q, b.q) AS BIGINT) > 0
-          AND CAST(list_dot_product(a.q, b.q) AS BIGINT)
-              * CAST(list_dot_product(a.q, b.q) AS BIGINT) * {EMB_COS2_DEN}
-              >= {EMB_COS2_NUM} * a.norm2 * b.norm2
-    """
-
-
 # ---------------------------------------------------------------------------
 # Dedup clustering: connected components over near-dup pairs
 # ---------------------------------------------------------------------------

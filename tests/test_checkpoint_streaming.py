@@ -353,6 +353,214 @@ def test_unreadable_checkpoint_raises_before_touching_output(
     assert contents() == committed
 
 
+# ---------------------------------------------------------------------------
+# Lineage from the written batch (the plan is executed once per run)
+# ---------------------------------------------------------------------------
+
+def _reexecuted_lineage(spark, files: list[str]) -> dict:
+    """Reference lineage by a second execution of the routed plan:
+    {(src_file, spark_partition_id): (lines, success, error)}."""
+    df = spark.read.parquet(*files).withColumn(
+        "_src_file", F.regexp_replace(F.input_file_name(), "^file:(//)?", ""))
+    routed = pl.route_stage(pl.enrich_stage(pl.parse_stage(df), spark))
+    rows = (routed.groupBy("_src_file", F.spark_partition_id().alias("pid"))
+            .agg(F.count(F.lit(1)).alias("lines"),
+                 F.sum(agg_ops.success_expr().cast("long")).alias("success"),
+                 F.sum(agg_ops.error_expr().cast("long")).alias("error"))
+            .collect())
+    return {(r["_src_file"], r["pid"]): (r["lines"], r["success"], r["error"])
+            for r in rows}
+
+
+def _committed_lineage(ckpt: str) -> list[dict]:
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(ckpt, ck.CKPT_TABLE)).to_pylist()
+
+
+def _assert_lineage_matches_reexecution(spark, ckpt: str, files: list[str]):
+    """Per (file, partition_id) success/error and per-file lines equal what
+    re-executing the plan counts; every file's lines equal its footer rows."""
+    import pyarrow.parquet as pq
+
+    want = _reexecuted_lineage(spark, files)
+    got = _committed_lineage(ckpt)
+    assert {(r["src_file"], r["partition_id"]): (r["success"], r["error"])
+            for r in got} == {k: v[1:] for k, v in want.items()}
+    per_file, want_file = {}, {}
+    for r in got:
+        per_file[r["src_file"]] = per_file.get(r["src_file"], 0) + r["lines"]
+    for (f, _), (n, _, _) in want.items():
+        want_file[f] = want_file.get(f, 0) + n
+    assert per_file == want_file == {
+        f: pq.read_metadata(f).num_rows for f in files}
+    return got
+
+
+def test_lineage_from_written_batch_matches_reexecution(spark, tmp_path,
+                                                        tx_files):
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    for f in tx_files[:3]:
+        shutil.copy(f, input_dir)
+    r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"),
+                         str(tmp_path / "out"), "run1")
+    got = _assert_lineage_matches_reexecution(spark, str(tmp_path / "ckpt"),
+                                              r["files"])
+    assert r["rows"] == sum(x["success"] + x["error"] for x in got) > 0
+
+
+def test_lineage_of_split_files_matches_reexecution(spark, tmp_path,
+                                                    tx_files):
+    """Files read as several splits: each split's write task is its own
+    lineage row, and a file's blank lines are counted once."""
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    for f in tx_files[:2]:
+        pq.write_table(pq.read_table(f),
+                       os.path.join(input_dir, os.path.basename(f)),
+                       row_group_size=250)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"),
+                             str(tmp_path / "out"), "run1")
+        got = _assert_lineage_matches_reexecution(
+            spark, str(tmp_path / "ckpt"), r["files"])
+    finally:
+        spark.conf.set(key, prev)
+    for f in r["files"]:
+        assert len({x["partition_id"] for x in got
+                    if x["src_file"] == f}) > 1, "input was not split"
+
+
+def test_zero_row_file_commits(spark, tmp_path, tx_files):
+    """A file with no rows writes nothing; it still gets a lineage row, so it
+    is committed and the next run has nothing to do."""
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    for f in tx_files[:2]:
+        shutil.copy(f, input_dir)
+    empty = os.path.join(input_dir, "zz-empty.parquet")
+    pq.write_table(pq.read_table(tx_files[0]).slice(0, 0), empty)
+    r1 = ck.run_resumable(spark, input_dir, ckpt, out, "run1")
+    assert empty in r1["files"]
+    n_ckpt = len(os.listdir(os.path.join(ckpt, ck.CKPT_TABLE)))
+    r2 = ck.run_resumable(spark, input_dir, ckpt, out, "run2")
+    assert r2["files"] == []
+    assert len(os.listdir(os.path.join(ckpt, ck.CKPT_TABLE))) == n_ckpt
+    assert [(x["partition_id"], x["lines"], x["success"], x["error"])
+            for x in _committed_lineage(ckpt)
+            if x["src_file"] == empty] == [(None, 0, 0, 0)]
+
+
+def test_input_path_with_space_commits(spark, tmp_path, tx_files):
+    """``input_file_name()`` URL-encodes the space; the lineage row must
+    still name the file as the listing does, so the file commits once."""
+    input_dir = str(tmp_path / "in a")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir)
+    shutil.copy(tx_files[0], input_dir)
+    r1 = ck.run_resumable(spark, input_dir, ckpt, str(tmp_path / "out"), "r1")
+    assert {x["src_file"] for x in _committed_lineage(ckpt)} == \
+        set(r1["files"])
+    assert ck.run_resumable(spark, input_dir, ckpt, str(tmp_path / "out"),
+                            "r2")["files"] == []
+
+
+def test_all_blank_file_gets_null_partition_row(spark, tmp_path, tx_files):
+    """An all-blank file writes no rows: its lineage is one row with
+    partition_id NULL holding all its lines, and it is committed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    shutil.copy(tx_files[0], input_dir)
+    tbl = pq.read_table(tx_files[0]).slice(0, 7)
+    blank = os.path.join(input_dir, "zz-blank.parquet")
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("text"), "text",
+                                  pa.array(["", "  ", " "] * 2 + [None])),
+                   blank)
+    r1 = ck.run_resumable(spark, input_dir, ckpt, out, "run1")
+    assert blank in r1["files"]
+    assert [(x["partition_id"], x["lines"], x["success"], x["error"])
+            for x in _committed_lineage(ckpt)
+            if x["src_file"] == blank] == [(None, 7, 0, 0)]
+    assert ck.run_resumable(spark, input_dir, ckpt, out, "run2")["files"] \
+        == []
+
+
+def test_lineage_rows_raise_before_commit():
+    """A part file without a task number, rows from a file outside the
+    batch, or more rows written than a file's footer holds: no rows."""
+    import pyarrow as pa
+
+    def rows(src, pid, n):
+        return ck.lineage_rows(
+            pa.table({"src_file": [src], "partition_id": [pid],
+                      "success": [3], "error": [1]}, schema=pa.schema([
+                          ("src_file", pa.string()),
+                          ("partition_id", pa.int32()),
+                          ("success", pa.int64()), ("error", pa.int64())])),
+            ["/in/a b.parquet"], [n], "r", "b", "route")
+
+    assert rows("/in/a%20b.parquet", 2, 4).to_pylist()[0]["lines"] == 4
+    with pytest.raises(ValueError, match="task number"):
+        rows("/in/a%20b.parquet", None, 4)
+    with pytest.raises(ValueError, match="not in the batch"):
+        rows("/in/c.parquet", 2, 4)
+    with pytest.raises(ValueError, match="footer holds 3"):
+        rows("/in/a%20b.parquet", 2, 3)
+
+
+def _arrow_eval_output_rows(spark, since: int) -> tuple[int, int]:
+    """(ArrowEvalPython output rows summed over the SQL executions with id
+    >= ``since``, next execution id), from Spark's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    rows, nxt = 0, since
+    for ui in conv.asJava(store.executionsList()):
+        eid = ui.executionId()
+        nxt = max(nxt, eid + 1)
+        if eid < since:
+            continue
+        values = conv.asJava(store.executionMetrics(eid))
+        for node in conv.asJava(store.planGraph(eid).allNodes()):
+            if node.name().startswith("ArrowEvalPython"):
+                for m in conv.asJava(node.metrics()):
+                    if m.name() == "number of output rows":
+                        rows += int(values.get(m.accumulatorId(), "0")
+                                    .replace(",", ""))
+    return rows, nxt
+
+
+def test_run_resumable_parses_each_turn_once(spark, tmp_path, tx_files):
+    """The parse UDF sees every input turn exactly once per run: the lineage
+    is read from the written batch, not from a second run of the plan."""
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    for f in tx_files[:2]:
+        shutil.copy(f, input_dir)
+    _, since = _arrow_eval_output_rows(spark, 0)
+    r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"),
+                         str(tmp_path / "out"), "run1")
+    udf_rows, _ = _arrow_eval_output_rows(spark, since)
+    assert udf_rows == sum(pq.read_metadata(f).num_rows for f in r["files"])
+
+
 def test_read_output_empty_has_real_schema(spark, tmp_path):
     """ADVICE round 2: the no-committed-batches frame must carry the real
     fan-out schema (not a one-column stub) so callers can select columns."""
@@ -604,6 +812,8 @@ def test_iceberg_checkpoint_sql_emitters(spark):
     """The Iceberg checkpoint backend is jar-gated in this sandbox; pin the
     emitted SQL (the UPDATE keeps batch_id — the retraction-safety invariant
     — and the MERGE key makes commits idempotent)."""
+    import pyarrow as pa
+
     from log_collector_spark.plans import checkpoint as cp
 
     assert cp.iceberg_available(spark) in (True, False)  # never raises
@@ -617,13 +827,12 @@ def test_iceberg_checkpoint_sql_emitters(spark):
     assert "WHEN NOT MATCHED THEN INSERT *" in mg
     assert "t.run_id = s.run_id" in mg and "t.src_file = s.src_file" in mg
     # INSERT * takes the rows a commit writes: the DDL declares exactly the
-    # lineage_stats columns, in order, with the same types
+    # lineage_rows columns, in order, with the same types
     decl = re.search(r"\((.*)\) USING", ddl).group(1).split(", ")
-    routed = spark.createDataFrame(
-        [("/in/a.log", False, False, True)],
-        "_src_file string, is_blank boolean, is_oversize boolean, "
-        "parse_ok boolean")
-    rows = cp.lineage_stats(routed, "r1", "b1", "route")
+    written = pa.table({"src_file": ["/in/a.log"], "partition_id": [0],
+                        "success": [1], "error": [0]})
+    rows = spark.createDataFrame(cp.lineage_rows(
+        written, ["/in/a.log", "/in/b.log"], [2, 0], "r1", "b1", "route"))
     assert [tuple(d.split(" ")) for d in decl] == [
         (f.name, f.dataType.simpleString().upper())
         for f in rows.schema.fields]

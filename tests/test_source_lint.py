@@ -12,7 +12,10 @@ Runs on the package source only (no Spark, milliseconds):
 * the checkpoint metadata tables go through one pyarrow path in
   ``plans/checkpoint.py``: read only by ``_read``, written only by
   ``_append`` and ``_rewrite``, never by a Spark reader or writer, and no
-  ``except Exception`` turns a read error into "nothing committed".
+  ``except Exception`` turns a read error into "nothing committed";
+* ``run_resumable`` executes the parsed plan once: ``routed`` feeds only
+  the ``route_ops.fanout_write`` call, and the lineage does not come from
+  ``spark_partition_id`` over a second execution of it.
 """
 
 from __future__ import annotations
@@ -120,3 +123,23 @@ def test_checkpoint_tables_never_touched_by_spark_io():
                             and n.func.id in CKPT_PATHS):
                         hits.append(f"{fn.name}:{call.lineno}")
     assert hits == []
+
+
+def test_run_resumable_executes_routed_once():
+    fn = next(f for f in _checkpoint_functions() if f.name == "run_resumable")
+    uses = [n for n in ast.walk(fn) if isinstance(n, ast.Name)
+            and n.id == "routed" and isinstance(n.ctx, ast.Load)]
+    writes = [c.args[0] for c in ast.walk(fn) if isinstance(c, ast.Call)
+              and isinstance(c.func, ast.Attribute)
+              and c.func.attr == "fanout_write"
+              and isinstance(c.func.value, ast.Name)
+              and c.func.value.id == "route_ops"]
+    assert len(writes) == 1 and uses == writes, \
+        [n.lineno for n in uses]
+
+
+def test_checkpoint_never_calls_spark_partition_id():
+    assert [c.lineno for c in ast.walk(_checkpoint_tree())
+            if isinstance(c, ast.Call)
+            and "spark_partition_id" in (getattr(c.func, "attr", None),
+                                         getattr(c.func, "id", None))] == []
