@@ -49,9 +49,9 @@ _SINK_CASE = """
     """
 
 # sink decision of a raw transcripts line (see registry.tx_glob)
-_TX_SINK_CASE = """
+_TX_SINK_CASE = f"""
         CASE WHEN strlen(text) >= 8192 THEN 'errors'
-             WHEN trim(coalesce(text, '')) = '' THEN NULL
+             WHEN {parse_ops.SQL_BLANK} THEN NULL
              WHEN text LIKE 'corrupt#%' THEN 'failures'
              ELSE 'transcripts_etl' END
     """

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from log_collector_spark.operators import parse as parse_ops
 from log_collector_spark.registry import events, register
 
 
@@ -35,7 +36,7 @@ def assemble(df: DataFrame, first_line_pattern: str, *,
              text_col: str = "text") -> DataFrame:
     """→ (file, record_id, first_line_no, n_lines, record)."""
     anchored = f"^(?:{first_line_pattern})$"
-    nonblank = F.trim(F.col(text_col)) != ""
+    nonblank = F.btrim(F.col(text_col), F.lit(parse_ops.WHITESPACE)) != ""
     is_first = F.col(text_col).rlike(anchored) & nonblank
     w = Window.partitionBy(file_col).orderBy(order_col)
     rec = F.sum(is_first.cast("int")).over(w)
@@ -83,7 +84,7 @@ register(
     events: every event is a first line; %5 events add two continuation
     lines; %11 events add a blank line (skipped).""",
     _multiline_assemble_events,
-    lambda: """
+    lambda: f"""
             WITH lines AS (
                 SELECT 'f' || CAST(event_id % 4 AS VARCHAR) AS filename,
                        event_id * 4 AS line_no,
@@ -103,7 +104,8 @@ register(
                        event_id * 4 + 3, ''
                 FROM events WHERE event_id % 11 = 0
             ), nb AS (
-                SELECT * FROM lines WHERE trim(text) <> ''
+                SELECT * FROM lines
+                WHERE trim(text, {parse_ops.SQL_WHITESPACE}) <> ''
             ), recs AS (
                 SELECT *, SUM(CASE WHEN regexp_full_match(text, '\\[.*')
                                    THEN 1 ELSE 0 END)

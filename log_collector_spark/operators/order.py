@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_collector_spark.operators import aggregate as agg_ops
+from log_collector_spark.operators import parse as parse_ops
 from log_collector_spark.plans import pipeline as pl
 from log_collector_spark.registry import (docs, events, register, tbl, tx_glob,
                                           tx_view)
@@ -1025,7 +1026,7 @@ register(
             SELECT conv_id, turn_idx, {_TX_JSON} AS parsed_json
             FROM {tx_view()}
             WHERE strlen(text) < 8192
-              AND trim(coalesce(text, '')) <> ''
+              AND NOT {parse_ops.SQL_BLANK}
               AND text NOT LIKE 'corrupt#%'
         """)
 

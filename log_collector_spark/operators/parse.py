@@ -12,14 +12,14 @@ reference's constructor-time ``grok.compile``) and shipped in the UDF closure;
 executors lazily ``re.compile`` the final regex string once per worker process
 (module-level cache below — workers are reused across tasks).
 
-Blank / oversize predicates stay JVM-side (native ``trim``/``octet_length``),
+Blank / oversize predicates stay JVM-side (native ``btrim``/``octet_length``),
 so Catalyst can push and codegen them; only the regex work crosses into
 Python.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+import sys
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -72,9 +72,18 @@ def make_parse_udf(parser: VectorizedGrokParser):
     return grok_parse_udf.asNondeterministic()
 
 
+# What str.strip() strips, as the grok kernel tests blank lines; and the
+# same set as a DuckDB expression, with is_blank()'s DuckDB twin.
+WHITESPACE = "".join(chr(c) for c in range(sys.maxunicode + 1)
+                     if chr(c).isspace())
+SQL_WHITESPACE = "||".join(f"chr({ord(c)})" for c in WHITESPACE)
+SQL_BLANK = f"(trim(coalesce(text, ''), {SQL_WHITESPACE}) = '')"
+
+
 def is_blank() -> Column:
-    """F1 input: the line is empty after Java ``trim`` (skipped, no sink)."""
-    return F.trim(F.coalesce(F.col("text"), F.lit(""))) == ""
+    """F1 input: the line is empty after ``str.strip()`` (skipped, no sink)."""
+    return F.btrim(F.coalesce(F.col("text"), F.lit("")),
+                   F.lit(WHITESPACE)) == ""
 
 
 def is_oversize(max_size: int) -> Column:

@@ -60,11 +60,11 @@ def fanout_write(df: DataFrame, base_path: str, *,
     """One partitioned parquet write = full fan-out (single job, no per-sink
     scan). Blank rows (NULL sink) are skipped, never written.
 
-    The only fan-out writer: batch resume, both streaming pipelines and the
-    configured ``parquet`` writer all call it. At cluster scale this is the
-    right shape: dynamic partition insert writes every sink's files in one
-    pass over the data; per-sink separate writes would re-scan (or
-    re-shuffle) once per sink.
+    The only fan-out writer: the checkpoint commit core (batch resume and
+    the streaming pipeline) and the configured ``parquet`` writer call it.
+    At cluster scale this is the right shape: dynamic partition insert
+    writes every sink's files in one pass over the data; per-sink separate
+    writes would re-scan (or re-shuffle) once per sink.
     """
     (df.filter(F.col("sink").isNotNull())
        .write.mode(mode).partitionBy("sink").parquet(base_path))

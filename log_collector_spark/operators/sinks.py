@@ -99,23 +99,6 @@ READ_LINE_METRIC_NAME = "collector.line.read.success"   # AbstractReader.java:38
 READ_ERROR_METRIC_NAME = "collector.line.read.error"    # AbstractReader.java:40
 
 
-def kairos_metrics(lineage_rows, host: str = "spark",
-                   timestamp_ms: int = 0) -> list[dict]:
-    """Shape per-source lineage counters into the reference's KairosDB
-    metric records (AbstractReader.java:83-114: one success + one error
-    metric per source, tagged ``{from, host}``, type long)."""
-    out = []
-    for r in lineage_rows:
-        tags = {"from": r["src_file"], "host": host}
-        out.append({"name": READ_LINE_METRIC_NAME, "tags": tags,
-                    "type": "long", "value": int(r["success"]),
-                    "timestamp": timestamp_ms})
-        out.append({"name": READ_ERROR_METRIC_NAME, "tags": tags,
-                    "type": "long", "value": int(r["error"]),
-                    "timestamp": timestamp_ms})
-    return out
-
-
 class MetricSender:
     """W7 metric push with the reference's failed-batch retry
     (AbstractReader.java:107-131): a metric batch whose POST fails is kept
@@ -272,3 +255,34 @@ def build_kairos_batch(metric_map: dict[str, ReaderMetricsState],
                     "tags": tags, "timestamp": now_ms,
                     "value": rm.error_delta()})
     return out
+
+
+def kairos_hook(post=None, host: str = "spark", style: str = "processed",
+                clock=None):
+    """W7 as a commit hook: a callable taking one committed batch's lineage
+    rows (``plans.checkpoint.CKPT_ROW``), folding them per source file
+    basename into the driver-side ``ReaderMetricsState`` map (the
+    reference's ``readMetricMap``; success lands at the source's latest
+    ``logtime``) and sending one :func:`build_kairos_batch` tick. ``post``
+    receives the JSON body (None = drop); ``clock`` () -> epoch-ms stamps
+    the tick (default wall clock)."""
+    import time
+
+    import pyarrow as pa
+
+    states: dict[str, ReaderMetricsState] = {}
+    sender = MetricSender(post or (lambda body: None))
+    now_ms = clock or (lambda: int(time.time() * 1000))
+
+    def on_commit(stats) -> None:
+        src = pa.array([os.path.basename(f)
+                        for f in stats.column("src_file").to_pylist()])
+        for r in stats.append_column("src", src).group_by("src").aggregate(
+                [("success", "sum"), ("error", "sum"),
+                 ("max_logtime", "max")]).to_pylist():
+            rm = states.setdefault(r["src"], ReaderMetricsState())
+            rm.add_success(r["success_sum"], r["max_logtime_max"])
+            rm.add_error(r["error_sum"])
+        sender.send(build_kairos_batch(states, host, now_ms(), style))
+
+    return on_commit

@@ -32,12 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from log_collector_spark.operators import aggregate as agg_ops
+from log_collector_spark.operators import parse as parse_ops
 from log_collector_spark.plans import pipeline as pl
 from log_collector_spark.registry import register, routed_slim, tx_view
 
 # The raw-parquet clean-row predicate (mirrors route_events' rules) for
 # DuckDB oracles, parameterized on the max-size the pipeline routes at.
-SQL_CLEAN = ("strlen(text) < 8192 AND trim(coalesce(text, '')) <> '' "
+SQL_CLEAN = (f"strlen(text) < 8192 AND NOT {parse_ops.SQL_BLANK} "
              "AND text NOT LIKE 'corrupt#%'")
 
 # TRY_CAST, not CAST: DuckDB fuses stacked WHERE clauses and does not
@@ -1259,16 +1260,16 @@ def sql_parse_health_hourly(tx_view: str) -> str:
     return f"""
         WITH flags AS (
             SELECT CAST(epoch_ms(ts) // 3600000 AS BIGINT) AS hour_idx,
-                   CASE WHEN trim(coalesce(text, '')) = ''
+                   CASE WHEN {parse_ops.SQL_BLANK}
                         THEN 1 ELSE 0 END AS b,
-                   CASE WHEN trim(coalesce(text, '')) <> ''
+                   CASE WHEN NOT {parse_ops.SQL_BLANK}
                              AND strlen(text) >= 8192
                         THEN 1 ELSE 0 END AS o,
-                   CASE WHEN trim(coalesce(text, '')) <> ''
+                   CASE WHEN NOT {parse_ops.SQL_BLANK}
                              AND strlen(text) < 8192
                              AND text LIKE 'corrupt#%'
                         THEN 1 ELSE 0 END AS f,
-                   CASE WHEN trim(coalesce(text, '')) <> ''
+                   CASE WHEN NOT {parse_ops.SQL_BLANK}
                              AND strlen(text) < 8192
                              AND text NOT LIKE 'corrupt#%'
                         THEN 1 ELSE 0 END AS k

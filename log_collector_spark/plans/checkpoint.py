@@ -7,11 +7,12 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
 - unit of work = source file (the analog of the reference's per-file offset;
   Parquet/Iceberg files are immutable so "file processed" replaces byte
   offsets),
-- each run processes the files NOT yet in the checkpoint table, writes
-  outputs to a staging directory keyed by a DETERMINISTIC batch id (md5 of
-  the sorted pending-file list) with ``mode=overwrite``, then appends
-  checkpoint rows. A crash between write and commit simply overwrites the
-  same staging dir on re-run — no duplicates,
+- each run commits the files NOT yet in the checkpoint table through
+  :func:`commit_batch` (also the streaming ``foreachBatch`` body): outputs
+  go with ``mode=overwrite`` to a staging dir keyed by a DETERMINISTIC
+  batch id, then checkpoint rows are appended. A crash between write and
+  commit just overwrites the same dir on re-run — no duplicates — and a
+  committed batch id is never written again,
 - lineage granularity: per (run, batch, source file, partition) row counts
   + success/error metrics, one checkpoint table row each (north_rule:
   "every stage emits per-partition lineage records and metrics to a
@@ -22,7 +23,8 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
   error, and ``lines`` adds each file's blank lines (its parquet footer
   rows minus the rows it wrote; blanks are never written) to the file's
   lowest-``partition_id`` row. A file that wrote nothing gets one row with
-  ``partition_id`` NULL,
+  ``partition_id`` NULL; ``max_logtime`` is the latest event time the
+  row's write task wrote,
 - the metadata tables (``checkpoint``, ``filestate``) are small parquet
   dirs handled by driver-side pyarrow (:func:`_read`, :func:`_append`,
   :func:`_rewrite`); a read error raises, never reads as "nothing committed",
@@ -36,6 +38,7 @@ import datetime
 import glob
 import hashlib
 import os
+import re
 import shutil
 import uuid
 from collections import defaultdict
@@ -139,8 +142,8 @@ def clean_orphan_staging(spark: SparkSession, out_dir: str,
     """Delete staging dirs whose batch_id never committed.
 
     Closes the effectively-once hole when the pending set CHANGES between a
-    crash-before-commit and the retry: the retry's batch_id differs (it is
-    the md5 of the pending-file list), so the orphaned ``batch=<old>`` dir
+    crash-before-commit and the retry: the retry's batch_id differs (see
+    :func:`batch_id`), so the orphaned ``batch=<old>`` dir
     would never be overwritten and ``read_output`` would double-count every
     row of the crashed batch. Run this before each batch (run_resumable does).
     """
@@ -178,8 +181,12 @@ def pending_files(spark: SparkSession, input_dir: str,
     return [f for f in all_files if f not in done]
 
 
-def batch_id(files: list[str]) -> str:
-    return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:16]
+def batch_id(files: list[str], sizes: list[int]) -> str:
+    """Deterministic id of a batch of files: a re-run of the same pending
+    set gets the same id, and a truncated file taken again (smaller) a new
+    one, so it never overwrites the batch that first committed it."""
+    return hashlib.md5("\n".join(sorted(
+        f"{f}\t{n}" for f, n in zip(files, sizes))).encode()).hexdigest()[:16]
 
 
 # One checkpoint row: (column, SQL type). lineage_rows builds exactly these
@@ -187,23 +194,25 @@ def batch_id(files: list[str]) -> str:
 CKPT_ROW = (("run_id", "STRING"), ("batch_id", "STRING"), ("stage", "STRING"),
             ("src_file", "STRING"), ("partition_id", "INT"),
             ("lines", "BIGINT"), ("success", "BIGINT"), ("error", "BIGINT"),
-            ("committed_at", "TIMESTAMP"))
+            ("max_logtime", "BIGINT"), ("committed_at", "TIMESTAMP"))
 _ARROW_TYPE = {"STRING": pa.string(), "INT": pa.int32(),
                "BIGINT": pa.int64(), "TIMESTAMP": pa.timestamp("us", "UTC")}
 
 
 def written_counts(spark: SparkSession, staging: str) -> pa.Table:
-    """Success/error rows per (src_file, partition_id) that the fan-out write
-    left under ``staging``: one narrow read of ``_src_file``. A ``*_etl``
-    sink is success, ``errors``/``failures`` are error; ``partition_id`` is
-    the write task, from its ``part-NNNNN-`` file name (NULL if the name
-    does not parse)."""
-    out = spark.read.schema("_src_file STRING, sink STRING").parquet(staging)
+    """Success/error rows and latest ``logtime`` per (src_file,
+    partition_id) that the fan-out write left under ``staging``: one narrow
+    read. A ``*_etl`` sink is success, ``errors``/``failures`` are error;
+    ``partition_id`` is the write task, from its ``part-NNNNN-`` file name
+    (NULL if the name does not parse)."""
+    out = spark.read.schema(
+        "_src_file STRING, sink STRING, logtime BIGINT").parquet(staging)
     ok = F.col("sink").endswith(SINK_OK_SUFFIX).cast("long")
     task = F.regexp_extract(F.input_file_name(), r"/part-(\d+)-", 1)
     return (out.groupBy(F.col("_src_file").alias("src_file"),
                         task.try_cast("int").alias("partition_id"))
-            .agg(F.sum(ok).alias("success"), F.sum(1 - ok).alias("error"))
+            .agg(F.sum(ok).alias("success"), F.sum(1 - ok).alias("error"),
+                 F.max("logtime").alias("max_logtime"))
             .toArrow())
 
 
@@ -229,20 +238,22 @@ def lineage_rows(written: pa.Table, files: list[str], lines: list[int],
         if f is None:
             raise ValueError(f"batch={bid}: rows written for "
                              f"{w['src_file']}, which is not in the batch")
-        parts[f].append((w["partition_id"], w["success"], w["error"]))
+        parts[f].append((w["partition_id"], w["success"], w["error"],
+                         w.get("max_logtime")))
     now = datetime.datetime.now(datetime.timezone.utc)
     rows = []
     for f, n in zip(files, lines):
-        got = sorted(parts[f]) or [(None, 0, 0)]
-        blank = n - sum(ok + err for _, ok, err in got)
+        got = sorted(parts[f]) or [(None, 0, 0, None)]
+        blank = n - sum(ok + err for _, ok, err, _ in got)
         if blank < 0:
             raise ValueError(f"{f} wrote {n - blank} rows; its parquet "
                              f"footer holds {n}")
-        for pid, ok, err in got:
+        for pid, ok, err, t in got:
             rows.append({"run_id": run_id, "batch_id": bid, "stage": stage,
                          "src_file": f, "partition_id": pid,
                          "lines": ok + err + blank, "success": ok,
-                         "error": err, "committed_at": now})
+                         "error": err, "max_logtime": t,
+                         "committed_at": now})
             blank = 0
     return pa.Table.from_pylist(rows, pa.schema(
         [(c, _ARROW_TYPE[t]) for c, t in CKPT_ROW]))
@@ -330,6 +341,42 @@ def recover_truncated(spark: SparkSession, ckpt_dir: str) -> list[str]:
     return bad
 
 
+def frame_files(df: DataFrame) -> tuple[list[str], list[int], list[int]]:
+    """Input files of ``df`` (plain paths), their rows and byte sizes: one
+    narrow count, no parse (a micro-batch's ``inputFiles()`` is empty)."""
+    per_file = df.groupBy(F.input_file_name().alias("f")).count().toArrow()
+    files = [unquote(re.sub("^file:(//)?", "", f))
+             for f in per_file.column("f").to_pylist()]
+    return (files, per_file.column("count").to_pylist(),
+            [os.path.getsize(f) for f in files])
+
+
+def commit_batch(spark: SparkSession, df: DataFrame, bid: str,
+                 files: list[str], lines: list[int], sizes: list[int],
+                 ckpt_dir: str, out_dir: str, run_id: str, *,
+                 crash_before_commit: bool = False) -> pa.Table | None:
+    """The commit core: parse, enrich and route ``df`` (the rows of
+    ``files``), fan it out into ``batch=<bid>`` (overwriting an uncommitted
+    attempt at ``bid``), record filestate, then append the lineage rows:
+    the commit point. Returns those rows, or None if ``bid`` had committed
+    (it is never written again) or ``crash_before_commit`` stopped it."""
+    if bid in committed_batches(spark, ckpt_dir):
+        return None
+    # input_file_name() is a file:// URI; lineage_rows maps it to ``files``
+    df = df.withColumn("_src_file", F.regexp_replace(
+        F.input_file_name(), "^file:(//)?", ""))
+    routed = pl.route_stage(pl.enrich_stage(pl.parse_stage(df), spark))
+    staging = os.path.join(out_dir, f"batch={bid}")
+    route_ops.fanout_write(routed, staging, mode="overwrite")
+    if crash_before_commit:
+        return None
+    stats = lineage_rows(written_counts(spark, staging), files, lines,
+                         run_id, bid, "route")
+    record_filestate(spark, ckpt_dir, files, sizes)
+    _append(_ckpt_path(ckpt_dir), stats)
+    return stats
+
+
 def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
                   out_dir: str, run_id: str, *,
                   crash_before_commit: bool = False,
@@ -352,27 +399,18 @@ def run_resumable(spark: SparkSession, input_dir: str, ckpt_dir: str,
                           filename_regex=filename_regex, last_file=last_file)
     if not files:
         return {"batch_id": None, "files": [], "rows": 0}
-    bid = batch_id(files)
-    df = spark.read.parquet(*files).withColumn(
-        "_src_file", F.input_file_name())
-    # input_file_name() yields file:// URIs; normalize to the plain paths the
-    # checkpoint table stores
-    df = df.withColumn("_src_file",
-                       F.regexp_replace("_src_file", "^file:(//)?", ""))
-    routed = pl.route_stage(pl.enrich_stage(pl.parse_stage(df), spark))
-    staging = os.path.join(out_dir, f"batch={bid}")
-    route_ops.fanout_write(routed, staging, mode="overwrite")
-    if crash_before_commit:
-        return {"batch_id": bid, "files": files, "rows": -1,
-                "crashed": True}
-    written = written_counts(spark, staging)
-    # one stat + one footer read per file: filestate's size, lineage's lines
+    # one stat + one footer read per file: the id's and filestate's size,
+    # lineage's lines
     sizes, lines = zip(*((os.path.getsize(f), pq.read_metadata(f).num_rows)
                          for f in files))
-    stats = lineage_rows(written, files, lines, run_id, bid, "route")
-    record_filestate(spark, ckpt_dir, files, sizes)
-    _append(_ckpt_path(ckpt_dir), stats)
-    rows = sum(sum(stats.column(c).to_pylist()) for c in ("success", "error"))
+    bid = batch_id(files, sizes)
+    stats = commit_batch(spark, spark.read.parquet(*files), bid, files, lines,
+                         sizes, ckpt_dir, out_dir, run_id,
+                         crash_before_commit=crash_before_commit)
+    if crash_before_commit:
+        return {"batch_id": bid, "files": files, "rows": -1, "crashed": True}
+    rows = 0 if stats is None else sum(
+        sum(stats.column(c).to_pylist()) for c in ("success", "error"))
     return {"batch_id": bid, "files": files, "rows": rows}
 
 

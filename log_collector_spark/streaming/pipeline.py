@@ -16,22 +16,23 @@ engine reuses them verbatim under ``foreachBatch``:
   metrics/ReaderMetrics.java:29-35,52-57): a watermarked windowed count —
   the watermark drops state for buckets older than 24h exactly like the
   reference's eviction-at-report,
-- **sinks**: per-sink parquet fan-out append, at-least-once: a crash after
-  the ``foreachBatch`` write and before the streaming commit log records
-  the epoch replays it and appends its rows again (the batch path's
-  staging-dir + lineage commit is not used here yet; Iceberg/Kafka sinks
-  are drop-in replacements of the same ``foreachBatch`` body).
+- **sinks, exactly once**: the ``foreachBatch`` body is the batch commit
+  core ``plans.checkpoint.commit_batch`` with batch id
+  ``<query id>-<batchId>``, lineage in ``<checkpointLocation>/lineage``.
+  Spark replays an uncommitted micro-batch with the same id and files, so
+  the replay overwrites its own staging dir; a committed one is skipped.
+  Metrics (W7) are a hook on the committed lineage rows.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from log_collector_spark.operators import aggregate as agg_ops
-from log_collector_spark.operators import route as route_ops
-from log_collector_spark.plans import pipeline as pl
+from log_collector_spark.plans import checkpoint as ck
 
 TRANSCRIPT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -52,16 +53,35 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     return r.parquet(input_dir)
 
 
+def _append_parquet(df: DataFrame, checkpoint_loc: str, out_dir: str):
+    """Drain ``df`` (availableNow) into ``out_dir`` as appended parquet."""
+    return (df.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint_loc)
+            .trigger(availableNow=True)
+            .format("parquet").option("path", out_dir).start())
+
+
+LINEAGE_DIR = "lineage"
+
+
 def start_pipeline_stream(spark: SparkSession, input_dir: str,
                           checkpoint_loc: str, out_dir: str, *,
-                          available_now: bool = True,
+                          on_commit=None, available_now: bool = True,
                           processing_time: str = "10 seconds"):
-    """parse→enrich→route under foreachBatch; per-sink parquet fan-out."""
+    """parse→enrich→route→per-sink fan-out through the commit core, once
+    per micro-batch. ``on_commit`` receives each newly committed batch's
+    lineage rows, e.g. ``operators.sinks.kairos_hook(...)``: the
+    reference's MetricSender tick (AbstractReader.java:69-135)."""
     src = read_transcript_stream(spark, input_dir)
+    lineage = os.path.join(checkpoint_loc, LINEAGE_DIR)
 
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        route_ops.fanout_write(pl.route_stage(
-            pl.enrich_stage(pl.parse_stage(batch_df), spark)), out_dir)
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        qid = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        stats = ck.commit_batch(spark, batch_df, f"{qid}-{batch_id}",
+                                *ck.frame_files(batch_df), lineage, out_dir,
+                                qid)
+        if stats is not None and on_commit is not None:
+            on_commit(stats)
 
     w = src.writeStream.foreachBatch(process) \
         .option("checkpointLocation", checkpoint_loc)
@@ -93,10 +113,7 @@ def start_dedup_stream(spark: SparkSession, input_dir: str,
     deduped = (src.withColumn("fp", fp)
                   .withWatermark("ts", watermark)
                   .dropDuplicatesWithinWatermark(["fp"]))
-    return (deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
+    return _append_parquet(deduped, checkpoint_loc, out_dir)
 
 
 def start_minute_bucket_stream(spark: SparkSession, input_dir: str,
@@ -110,10 +127,7 @@ def start_minute_bucket_stream(spark: SparkSession, input_dir: str,
               .agg(F.count(F.lit(1)).alias("n"))
               .select(F.col("w.start").alias("bucket_start"),
                       F.col("w.end").alias("bucket_end"), "n"))
-    return (agg.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
+    return _append_parquet(agg, checkpoint_loc, out_dir)
 
 
 def start_session_window_stream(spark: SparkSession, input_dir: str,
@@ -139,67 +153,31 @@ def start_session_window_stream(spark: SparkSession, input_dir: str,
                       F.col("w.start").alias("session_start"),
                       F.col("w.end").alias("session_end"),
                       "n_turns", "first_turn", "last_turn"))
-    return (agg.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
+    return _append_parquet(agg, checkpoint_loc, out_dir)
 
 
-def start_metered_pipeline_stream(spark: SparkSession, input_dir: str,
-                                  checkpoint_loc: str, out_dir: str, *,
-                                  post=None, host: str = "spark",
-                                  style: str = "processed",
-                                  clock=None,
-                                  available_now: bool = True,
-                                  processing_time: str = "10 seconds"):
-    """The W7 loop end-to-end: each micro-batch fans routed rows out per
-    sink AND emits one KairosDB metric batch — the reference's 60-second
-    MetricSender tick (AbstractReader.java:69-135) mapped onto the
-    micro-batch cadence. Per-source success/error counts come from ONE
-    tiny groupBy on the routed frame (never per-row driver work); the
-    per-source ``ReaderMetricsState`` map lives on the driver exactly like
-    the reference's ``readMetricMap``, so `processed` emits deltas and
-    `raw` emits changed-only cumulative ceil-minute datapoints. Failed
-    POSTs back up in the sender and re-send next batch.
-
-    ``post``: callable receiving the JSON body (None = drop, test spy in
-    pytest); ``clock``: () -> epoch-ms for the tick timestamp (defaults to
-    wall clock; injectable for determinism)."""
-    import time as _time
-
-    from log_collector_spark.operators import sinks as sink_ops
-
-    src = read_transcript_stream(spark, input_dir)
-    states: dict[str, sink_ops.ReaderMetricsState] = {}
-    sender = sink_ops.MetricSender(post or (lambda body: None))
-    now_ms = clock or (lambda: int(_time.time() * 1000))
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        routed = pl.route_stage(
-            pl.enrich_stage(pl.parse_stage(batch_df), spark))
-        routed = routed.withColumn(
-            "src", F.element_at(F.split(F.input_file_name(), "/"), -1))
-        route_ops.fanout_write(routed, out_dir)
-        per_src = (routed.groupBy("src")
-                   .agg(F.sum(agg_ops.success_expr().cast("long")).alias("ok"),
-                        F.sum(agg_ops.error_expr().cast("long")).alias("err"),
-                        F.max("logtime").alias("t_ms"))
-                   .collect())  # one row per source file — driver-scale
-        for r in per_src:
-            rm = states.setdefault(r["src"] or "stream",
-                                   sink_ops.ReaderMetricsState())
-            rm.add_success(int(r["ok"] or 0), r["t_ms"])
-            rm.add_error(int(r["err"] or 0))
-        sender.send(sink_ops.build_kairos_batch(states, host, now_ms(),
-                                                style))
-
-    w = src.writeStream.foreachBatch(process) \
-        .option("checkpointLocation", checkpoint_loc)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+def _tool_call_join(src: DataFrame, max_lag: str, watermark: str,
+                    how: str) -> DataFrame:
+    """Assistant tool calls joined to tool results of the same (conv_id,
+    tool) within ``max_lag``; both sides watermarked by ``watermark``."""
+    calls = (src.filter((F.col("role") == "assistant")
+                        & F.col("tool").isNotNull())
+                .select(F.col("conv_id").alias("c_conv"),
+                        F.col("tool").alias("c_tool"),
+                        F.col("turn_idx").alias("call_turn"),
+                        F.col("ts").alias("call_ts"))
+                .withWatermark("call_ts", watermark))
+    results = (src.filter(F.col("role") == "tool")
+                  .select(F.col("conv_id").alias("r_conv"),
+                          F.col("tool").alias("r_tool"),
+                          F.col("turn_idx").alias("result_turn"),
+                          F.col("ts").alias("result_ts"))
+                  .withWatermark("result_ts", watermark))
+    return calls.join(results, F.expr(f"""
+            c_conv = r_conv AND c_tool = r_tool
+            AND result_ts >= call_ts
+            AND result_ts <= call_ts + INTERVAL {max_lag}
+        """), how)
 
 
 def start_tool_pair_join_stream(spark: SparkSession, input_dir: str,
@@ -229,37 +207,32 @@ def start_tool_pair_join_stream(spark: SparkSession, input_dir: str,
     non-time conjunct sits in the join condition and then FAILS to
     derive the state-value watermark — state would never be evicted,
     voiding the boundedness guarantee above."""
-    src = read_transcript_stream(spark, input_dir)
-    calls = (src.filter((F.col("role") == "assistant")
-                        & F.col("tool").isNotNull())
-                .select(F.col("conv_id").alias("c_conv"),
-                        F.col("tool").alias("c_tool"),
-                        F.col("turn_idx").alias("call_turn"),
-                        F.col("ts").alias("call_ts"))
-                .withWatermark("call_ts", watermark))
-    results = (src.filter(F.col("role") == "tool")
-                  .select(F.col("conv_id").alias("r_conv"),
-                          F.col("tool").alias("r_tool"),
-                          F.col("turn_idx").alias("result_turn"),
-                          F.col("ts").alias("result_ts"))
-                  .withWatermark("result_ts", watermark))
-    joined = calls.join(
-        results,
-        F.expr(f"""
-            c_conv = r_conv AND c_tool = r_tool
-            AND result_ts >= call_ts
-            AND result_ts <= call_ts + INTERVAL {max_lag}
-        """),
-        "inner").filter(F.col("result_turn") > F.col("call_turn"))
+    joined = _tool_call_join(read_transcript_stream(spark, input_dir),
+                             max_lag, watermark, "inner").filter(
+        F.col("result_turn") > F.col("call_turn"))
     out = joined.select(
         F.col("c_conv").alias("conv_id"), F.col("c_tool").alias("tool"),
         "call_turn", "result_turn",
         ((F.unix_micros("result_ts") - F.unix_micros("call_ts"))
          / 1000).cast("long").alias("latency_ms"))
-    return (out.writeStream.outputMode("append")
+    return _append_parquet(out, checkpoint_loc, out_dir)
+
+
+def _start_sketch_stream(spark: SparkSession, input_dir: str,
+                         checkpoint_loc: str, out_dir: str, sketch,
+                         max_files_per_trigger: int | None):
+    """Each micro-batch appends ``sketch`` of its non-empty turns to
+    ``out_dir``, tagged with its batch_id."""
+    src = read_transcript_stream(spark, input_dir, max_files_per_trigger)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        (sketch(batch_df.filter(F.coalesce(F.col("text"), F.lit("")) != ""))
+         .withColumn("batch_id", F.lit(batch_id))
+         .write.mode("append").parquet(out_dir))
+
+    return (src.writeStream.foreachBatch(process)
             .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
+            .trigger(availableNow=True).start())
 
 
 def start_cms_stream(spark: SparkSession, input_dir: str,
@@ -279,17 +252,8 @@ def start_cms_stream(spark: SparkSession, input_dir: str,
     contract)."""
     from log_collector_spark.textops.analysis import cms_cells
 
-    src = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cells = cms_cells(batch_df.filter(
-            F.coalesce(F.col("text"), F.lit("")) != ""))
-        (cells.withColumn("batch_id", F.lit(batch_id))
-              .write.mode("append").parquet(out_dir))
-
-    return (src.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True).start())
+    return _start_sketch_stream(spark, input_dir, checkpoint_loc, out_dir,
+                                cms_cells, max_files_per_trigger)
 
 
 def transcript_hll_registers(df: DataFrame) -> DataFrame:
@@ -328,17 +292,9 @@ def start_hll_stream(spark: SparkSession, input_dir: str,
     merged-streaming == one-shot-batch EXACTLY). Replays are harmless
     without dedup: MAX is idempotent, the stronger half of the
     effectively-once story."""
-    src = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        regs = transcript_hll_registers(batch_df.filter(
-            F.coalesce(F.col("text"), F.lit("")) != ""))
-        (regs.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append").parquet(out_dir))
-
-    return (src.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True).start())
+    return _start_sketch_stream(spark, input_dir, checkpoint_loc, out_dir,
+                                transcript_hll_registers,
+                                max_files_per_trigger)
 
 
 def start_tool_timeout_stream(spark: SparkSession, input_dir: str,
@@ -363,20 +319,6 @@ def start_tool_timeout_stream(spark: SparkSession, input_dir: str,
     micro-batches flowing so the watermark actually advances mid-run
     under availableNow. State size: one lag-window of calls per
     (conv, tool), same bound as the inner join."""
-    src = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    calls = (src.filter((F.col("role") == "assistant")
-                        & F.col("tool").isNotNull())
-                .select(F.col("conv_id").alias("c_conv"),
-                        F.col("tool").alias("c_tool"),
-                        F.col("turn_idx").alias("call_turn"),
-                        F.col("ts").alias("call_ts"))
-                .withWatermark("call_ts", watermark))
-    results = (src.filter(F.col("role") == "tool")
-                  .select(F.col("conv_id").alias("r_conv"),
-                          F.col("tool").alias("r_tool"),
-                          F.col("turn_idx").alias("result_turn"),
-                          F.col("ts").alias("result_ts"))
-                  .withWatermark("result_ts", watermark))
     # The join condition is ONLY equi keys + a watermark time range.
     # Spark 4's StreamingJoinHelper must derive a state-value watermark
     # for the calls side from this condition to know when a call is
@@ -386,19 +328,11 @@ def start_tool_timeout_stream(spark: SparkSession, input_dir: str,
     # breaks (verified: ~75% of timed-out calls never emitted). Turn
     # ordering is implied by `result_ts >= call_ts` under the per-conv
     # monotone (turn_idx, ts) invariant, so it stays OUT of the join.
-    joined = calls.join(
-        results,
-        F.expr(f"""
-            c_conv = r_conv AND c_tool = r_tool
-            AND result_ts >= call_ts
-            AND result_ts <= call_ts + INTERVAL {max_lag}
-        """),
-        "leftOuter")
+    joined = _tool_call_join(
+        read_transcript_stream(spark, input_dir, max_files_per_trigger),
+        max_lag, watermark, "leftOuter")
     timeouts = (joined.filter(F.col("r_conv").isNull())
                       .select(F.col("c_conv").alias("conv_id"),
                               F.col("c_tool").alias("tool"),
                               "call_turn", "call_ts"))
-    return (timeouts.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_loc)
-            .trigger(availableNow=True)
-            .format("parquet").option("path", out_dir).start())
+    return _append_parquet(timeouts, checkpoint_loc, out_dir)

@@ -222,6 +222,37 @@ def test_truncate_of_batch_only_file_keeps_committed_output(spark, tmp_path,
     assert r3["files"] == []
 
 
+def test_retaken_truncated_file_never_overwrites_committed_batch(
+        spark, tmp_path, tx_files):
+    """A one-file batch whose file is truncated and taken again gets a new
+    batch id (the id covers each file's size), so the re-take cannot
+    overwrite the committed batch: the pre-truncate rows stay (re-emit,
+    never retract) and each batch id holds one lineage row set."""
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    shutil.copy(tx_files[0], input_dir)
+    r1 = ck.run_resumable(spark, input_dir, ckpt, out, "run1",
+                          detect_truncate=True)
+    c1 = ck.read_output(spark, out, ckpt).count()
+    assert c1 == r1["rows"] > 0
+
+    tbl = pq.read_table(r1["files"][0])
+    pq.write_table(tbl.slice(0, tbl.num_rows // 2), r1["files"][0])
+    r2 = ck.run_resumable(spark, input_dir, ckpt, out, "run2",
+                          detect_truncate=True)
+    assert r2["files"] == r1["files"] and r2["rows"] > 0
+    assert r2["batch_id"] != r1["batch_id"]
+    assert ck.read_output(spark, out, ckpt).count() == c1 + r2["rows"]
+    runs = {}
+    for x in _committed_lineage(ckpt):
+        runs.setdefault(x["batch_id"], set()).add(x["run_id"])
+    assert runs == {r1["batch_id"]: {"run1"}, r2["batch_id"]: {"run2"}}
+
+
 class _Crash(Exception):
     pass
 
@@ -498,6 +529,39 @@ def test_all_blank_file_gets_null_partition_row(spark, tmp_path, tx_files):
             if x["src_file"] == blank] == [(None, 7, 0, 0)]
     assert ck.run_resumable(spark, input_dir, ckpt, out, "run2")["files"] \
         == []
+
+
+def test_blank_is_whatever_str_strip_strips(spark, tmp_path, tx_files):
+    """is_blank agrees with the grok kernel's ``not line.strip()`` on every
+    code point str.isspace() accepts (and on near misses), and lines made
+    only of such code points are blank in the committed lineage, not
+    errors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from log_collector_spark.operators import parse as parse_ops
+
+    near = ["\x00", "\x08", "\u200b", "\ufeff", "x"]
+    texts = [t for c in parse_ops.WHITESPACE + "".join(near)
+             for t in (c, c * 2, c + "x" + c)]
+    got = (spark.createDataFrame([(t,) for t in texts], "text string")
+           .select("text", parse_ops.is_blank().alias("b")).collect())
+    assert {r["text"]: r["b"] for r in got} == {
+        t: not t.strip() for t in texts}
+    assert set(parse_ops.WHITESPACE) == {
+        chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()}
+
+    input_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir)
+    tbl = pq.read_table(tx_files[0]).slice(0, 5)
+    pq.write_table(tbl.set_column(
+        tbl.schema.get_field_index("text"), "text",
+        pa.array(["\t", " ", "\t\t", "\u3000", "\x1c"])),
+        os.path.join(input_dir, "blank.parquet"))
+    ck.run_resumable(spark, input_dir, ckpt, str(tmp_path / "out"), "run1")
+    assert [(x["lines"], x["success"], x["error"])
+            for x in _committed_lineage(ckpt)] == [(5, 0, 0)]
 
 
 def test_lineage_rows_raise_before_commit():
@@ -841,19 +905,29 @@ def test_iceberg_checkpoint_sql_emitters(spark):
 def test_stream_metered_pipeline_emits_kairos_batches(spark, tmp_path):
     """W7 end-to-end under foreachBatch: routed fan-out AND one KairosDB
     DTO batch per micro-batch — deltas across batches, tags/type per the
-    reference DTOs, and the metric totals reconcile with the routed rows."""
+    reference DTOs, and the metric totals reconcile with the routed rows.
+    The metrics come from the commit's lineage rows, so each micro-batch
+    is parsed once."""
     import json
 
+    import pyarrow.parquet as pq
+
+    from log_collector_spark.operators import sinks
     from log_collector_spark.streaming import pipeline as sp
 
     input_dir = pl.transcripts_path(SF_DIR)
     ckpt = str(tmp_path / "mck")
     out = str(tmp_path / "mout")
     bodies: list[str] = []
-    q = sp.start_metered_pipeline_stream(
-        spark, input_dir, ckpt, out,
-        post=bodies.append, clock=lambda: 1_700_000_000_000)
+    _, since = _arrow_eval_output_rows(spark, 0)
+    q = sp.start_pipeline_stream(
+        spark, input_dir, ckpt, out, on_commit=sinks.kairos_hook(
+            post=bodies.append, clock=lambda: 1_700_000_000_000))
     q.awaitTermination(300)
+    udf_rows, _ = _arrow_eval_output_rows(spark, since)
+    assert udf_rows == sum(pq.read_metadata(os.path.join(input_dir, f))
+                           .num_rows for f in os.listdir(input_dir)
+                           if f.endswith(".parquet"))
 
     assert spark.read.parquet(out).count() == _expected_routed_count(spark)
     assert bodies, "no metric batch posted"
@@ -876,12 +950,68 @@ def test_stream_metered_pipeline_emits_kairos_batches(spark, tmp_path):
     # a second availableNow run sees no new files -> no new metric batch
     # grows the totals (delta semantics: nothing changed, deltas are 0)
     bodies2: list[str] = []
-    q2 = sp.start_metered_pipeline_stream(
-        spark, input_dir, ckpt, out,
-        post=bodies2.append, clock=lambda: 1_700_000_060_000)
+    q2 = sp.start_pipeline_stream(
+        spark, input_dir, ckpt, out, on_commit=sinks.kairos_hook(
+            post=bodies2.append, clock=lambda: 1_700_000_060_000))
     q2.awaitTermination(300)
     extra = sum(m["value"] for b in bodies2 for m in json.loads(b))
     assert extra == 0
+
+
+def test_stream_crash_replay_is_exactly_once(spark, tmp_path, tx_files,
+                                            monkeypatch):
+    """Both stream forms (plain, KairosDB hook), killed right after the sink
+    write or right after the lineage append, then restarted on the same
+    checkpointLocation: the output holds every non-blank input row once and
+    each batch id has one lineage row set. The hook counts each committed
+    row once; a batch whose commit raced the crash is not re-sent."""
+    import json
+
+    from log_collector_spark.operators import route as route_ops
+    from log_collector_spark.operators import sinks
+    from log_collector_spark.streaming import pipeline as sp
+
+    input_dir = str(tmp_path / "in")
+    os.makedirs(input_dir)
+    for f in tx_files[:3]:
+        shutil.copy(f, input_dir)
+    n_rows = (pl.parse_stage(spark.read.parquet(input_dir))
+              .filter(~F.col("is_blank")).count())
+    write, append = route_ops.fanout_write, ck._append
+
+    def crash_after_write(*a, **kw):
+        write(*a, **kw)
+        raise _Crash("after the sink write")
+
+    def crash_after_append(path, tbl):
+        append(path, tbl)
+        if path.endswith(ck.CKPT_TABLE):
+            raise _Crash("after the lineage append")
+
+    for i, (hooked, owner, attr, crash, sent) in enumerate((
+            (False, route_ops, "fanout_write", crash_after_write, 0),
+            (False, ck, "_append", crash_after_append, 0),
+            (True, route_ops, "fanout_write", crash_after_write, n_rows),
+            (True, ck, "_append", crash_after_append, 0))):
+        ckpt, out = str(tmp_path / f"ck{i}"), str(tmp_path / f"out{i}")
+        bodies: list[str] = []
+        hook = sinks.kairos_hook(post=bodies.append) if hooked else None
+        monkeypatch.setattr(owner, attr, crash)
+        q = sp.start_pipeline_stream(spark, input_dir, ckpt, out,
+                                     on_commit=hook)
+        with pytest.raises(Exception, match="after the"):
+            q.awaitTermination(300)
+        monkeypatch.undo()
+        sp.start_pipeline_stream(spark, input_dir, ckpt, out,
+                                 on_commit=hook).awaitTermination(300)
+        assert spark.read.parquet(out).count() == n_rows, (i, n_rows)
+        lineage = _committed_lineage(os.path.join(ckpt, sp.LINEAGE_DIR))
+        keys = [(x["batch_id"], x["src_file"], x["partition_id"])
+                for x in lineage]
+        assert len(keys) == len(set(keys)), i
+        assert sum(x["success"] + x["error"] for x in lineage) == n_rows
+        assert sum(m["value"] for b in bodies for m in json.loads(b)) == \
+            sent, i
 
 
 def test_stream_stream_tool_pair_join_matches_batch(spark, tmp_path):

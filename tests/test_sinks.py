@@ -160,6 +160,14 @@ def test_kafka_sink_golden_option_dict():
 
 # --- W7 metric sender retry (AbstractReader.java:107-131) -------------------
 
+def _tick(src: str, ok: int, err: int) -> list[dict]:
+    """One processed-style KairosDB batch for one source."""
+    rm = sinks.ReaderMetricsState()
+    rm.add_success(ok)
+    rm.add_error(err)
+    return sinks.build_kairos_batch({src: rm}, "h1", 0)
+
+
 def test_metric_sender_retries_failed_batch_before_next():
     import json
     sent, fail_next = [], [True]
@@ -171,12 +179,10 @@ def test_metric_sender_retries_failed_batch_before_next():
         sent.append(json.loads(body))
 
     s = sinks.MetricSender(post)
-    batch1 = sinks.kairos_metrics(
-        [{"src_file": "a.log", "success": 10, "error": 2}], host="h1")
+    batch1 = _tick("a.log", 10, 2)
     s.send(batch1)                    # POST fails → batch kept
     assert sent == [] and s.backlog == batch1
-    batch2 = sinks.kairos_metrics(
-        [{"src_file": "b.log", "success": 5, "error": 0}], host="h1")
+    batch2 = _tick("b.log", 5, 0)
     s.send(batch2)                    # failed batch re-sent FIRST, then fresh
     assert sent == [batch1, batch2]
     assert s.backlog == []
@@ -192,8 +198,7 @@ def test_metric_sender_backlog_survives_repeated_failures_and_caps():
         raise IOError("still down")
 
     s = sinks.MetricSender(post, max_backlog=3)
-    m = [{"name": "collector.line.read.success", "tags": {}, "type": "long",
-          "value": i, "timestamp": 0} for i in range(5)]
+    m = [_tick(f"{i}.log", i, 0)[0] for i in range(5)]
     s.send(m[:2])
     s.send(m[2:4])   # resend attempt + fresh attempt both fail
     s.send([m[4]])
@@ -201,18 +206,27 @@ def test_metric_sender_backlog_survives_repeated_failures_and_caps():
     assert [x["value"] for x in s.backlog] == [2, 3, 4]
 
 
-def test_kairos_metric_shape_matches_reference():
-    out = sinks.kairos_metrics(
-        [{"src_file": "x.log", "success": 7, "error": 1}],
-        host="node1", timestamp_ms=123)
-    assert out == [
-        {"name": "collector.line.read.success",
-         "tags": {"from": "x.log", "host": "node1"},
-         "type": "long", "value": 7, "timestamp": 123},
-        {"name": "collector.line.read.error",
-         "tags": {"from": "x.log", "host": "node1"},
-         "type": "long", "value": 1, "timestamp": 123},
-    ]
+def test_kairos_hook_folds_lineage_per_source():
+    """The commit hook sums a source's lineage rows (one per write task)
+    and puts its raw datapoint at the source's latest logtime."""
+    import json
+
+    import pyarrow as pa
+
+    t1, t2 = 1_700_000_000_000, 1_700_000_100_000
+    stats = pa.table({"src_file": ["/in/a.parquet", "/in/a.parquet",
+                                   "/x/b.parquet"],
+                      "success": [3, 4, 1], "error": [1, 0, 2],
+                      "max_logtime": [t2, t1, None]})
+    sent: list[str] = []
+    sinks.kairos_hook(post=sent.append, host="h", style="raw",
+                      clock=lambda: t2)(stats)
+    got = {(m["tags"]["from"], m["name"].rsplit(".", 1)[1]):
+           m.get("datapoints", m.get("value")) for m in json.loads(sent[0])}
+    assert got == {("a.parquet", "success"): [[-(-t2 // 60000) * 60000, 7]],
+                   ("a.parquet", "error"): 1,
+                   ("b.parquet", "success"): [],
+                   ("b.parquet", "error"): 2}
 
 
 def test_kairos_dto_processed_and_raw_golden():

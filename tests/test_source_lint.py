@@ -13,9 +13,12 @@ Runs on the package source only (no Spark, milliseconds):
   ``plans/checkpoint.py``: read only by ``_read``, written only by
   ``_append`` and ``_rewrite``, never by a Spark reader or writer, and no
   ``except Exception`` turns a read error into "nothing committed";
-* ``run_resumable`` executes the parsed plan once: ``routed`` feeds only
-  the ``route_ops.fanout_write`` call, and the lineage does not come from
-  ``spark_partition_id`` over a second execution of it.
+* the commit core ``checkpoint.commit_batch`` executes the parsed plan
+  once: ``routed`` feeds only the ``route_ops.fanout_write`` call, and the
+  lineage does not come from ``spark_partition_id`` over a second
+  execution of it;
+* ``streaming/pipeline.py`` calls no ``fanout_write`` and no ``.collect()``:
+  its sink write and its metrics come only from the commit core.
 """
 
 from __future__ import annotations
@@ -126,7 +129,8 @@ def test_checkpoint_tables_never_touched_by_spark_io():
 
 
 def test_run_resumable_executes_routed_once():
-    fn = next(f for f in _checkpoint_functions() if f.name == "run_resumable")
+    """run_resumable parses through the commit core, commit_batch."""
+    fn = next(f for f in _checkpoint_functions() if f.name == "commit_batch")
     uses = [n for n in ast.walk(fn) if isinstance(n, ast.Name)
             and n.id == "routed" and isinstance(n.ctx, ast.Load)]
     writes = [c.args[0] for c in ast.walk(fn) if isinstance(c, ast.Call)
@@ -143,3 +147,12 @@ def test_checkpoint_never_calls_spark_partition_id():
             if isinstance(c, ast.Call)
             and "spark_partition_id" in (getattr(c.func, "attr", None),
                                          getattr(c.func, "id", None))] == []
+
+
+def test_streams_write_and_meter_only_through_commit_core():
+    with open(os.path.join(PKG, "streaming", "pipeline.py"),
+              encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    assert [c.lineno for c in ast.walk(tree) if isinstance(c, ast.Call)
+            and getattr(c.func, "attr", getattr(c.func, "id", None))
+            in ("fanout_write", "collect")] == []
