@@ -36,7 +36,7 @@ def assemble(df: DataFrame, first_line_pattern: str, *,
              text_col: str = "text") -> DataFrame:
     """→ (file, record_id, first_line_no, n_lines, record)."""
     anchored = f"^(?:{first_line_pattern})$"
-    nonblank = F.btrim(F.col(text_col), F.lit(parse_ops.WHITESPACE)) != ""
+    nonblank = F.ltrim(F.col(text_col), F.lit(parse_ops.WHITESPACE)) != ""
     is_first = F.col(text_col).rlike(anchored) & nonblank
     w = Window.partitionBy(file_col).orderBy(order_col)
     rec = F.sum(is_first.cast("int")).over(w)

@@ -16,15 +16,16 @@ crash between the two steps. This engine upgrades to EFFECTIVELY-ONCE:
 - lineage granularity: per (run, batch, source file, partition) row counts
   + success/error metrics, one checkpoint table row each (north_rule:
   "every stage emits per-partition lineage records and metrics to a
-  checkpoint table"). The rows come from what the write left behind, so
-  the batch is parsed once: ``partition_id`` is the write task that wrote
-  the rows (its ``part-NNNNN-`` file number; the write adds no shuffle, so
-  it is the input partition), the ``sink`` directory tells success from
-  error, and ``lines`` adds each file's blank lines (its parquet footer
-  rows minus the rows it wrote; blanks are never written) to the file's
-  lowest-``partition_id`` row. A file that wrote nothing gets one row with
-  ``partition_id`` NULL; ``max_logtime`` is the latest event time the
-  row's write task wrote,
+  checkpoint table"). The rows come from what the write left behind, read
+  by driver-side pyarrow (:func:`written_counts`), so the batch is parsed
+  once and no Spark job runs after the write: ``partition_id`` is the
+  write task that wrote the rows (its ``part-NNNNN-`` file number; the
+  write adds no shuffle, so it is the input partition), the ``sink``
+  directory tells success from error, and ``lines`` adds each file's blank
+  lines (its parquet footer rows minus the rows it wrote; blanks are never
+  written) to the file's lowest-``partition_id`` row. A file that wrote
+  nothing gets one row with ``partition_id`` NULL; ``max_logtime`` is the
+  latest event time the row's write task wrote,
 - the metadata tables (``checkpoint``, ``filestate``) are small parquet
   dirs handled by driver-side pyarrow (:func:`_read`, :func:`_append`,
   :func:`_rewrite`); a read error raises, never reads as "nothing committed",
@@ -77,15 +78,18 @@ def _table_exists(path: str) -> bool:
     return os.path.isdir(path)
 
 
-def _read(path: str, columns: list[str] | None = None, filter=None):
-    """The parquet table at ``path`` as a pyarrow table (``columns`` only,
-    rows matching the pyarrow expression ``filter``), or None when the table
-    does not exist or holds no ``.parquet`` file. Read errors propagate."""
-    files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
+def _read(path: str, columns: list[str] | None = None, filter=None, *,
+          pattern: str = "*.parquet", partitioning=None):
+    """The parquet files ``pattern`` under ``path`` as one pyarrow table
+    (``columns`` only, rows matching the pyarrow expression ``filter``,
+    directory keys parsed by ``partitioning``), or None when the table does
+    not exist or holds no such file. Read errors propagate."""
+    files = (sorted(glob.glob(os.path.join(path, pattern)))
              if _table_exists(path) else [])
     if not files:
         return None
-    return pads.dataset(files, format="parquet").to_table(
+    return pads.dataset(files, format="parquet", partitioning=partitioning,
+                        partition_base_dir=path).to_table(
         columns=columns, filter=filter)
 
 
@@ -199,21 +203,43 @@ _ARROW_TYPE = {"STRING": pa.string(), "INT": pa.int32(),
                "BIGINT": pa.int64(), "TIMESTAMP": pa.timestamp("us", "UTC")}
 
 
-def written_counts(spark: SparkSession, staging: str) -> pa.Table:
+_WRITTEN = pa.schema([("src_file", pa.string()),
+                      ("partition_id", pa.int32()),
+                      ("success", pa.int64()), ("error", pa.int64()),
+                      ("max_logtime", pa.int64())])
+
+
+def written_counts(staging: str) -> pa.Table:
     """Success/error rows and latest ``logtime`` per (src_file,
-    partition_id) that the fan-out write left under ``staging``: one narrow
-    read. A ``*_etl`` sink is success, ``errors``/``failures`` are error;
-    ``partition_id`` is the write task, from its ``part-NNNNN-`` file name
-    (NULL if the name does not parse)."""
-    out = spark.read.schema(
-        "_src_file STRING, sink STRING, logtime BIGINT").parquet(staging)
-    ok = F.col("sink").endswith(SINK_OK_SUFFIX).cast("long")
-    task = F.regexp_extract(F.input_file_name(), r"/part-(\d+)-", 1)
-    return (out.groupBy(F.col("_src_file").alias("src_file"),
-                        task.try_cast("int").alias("partition_id"))
-            .agg(F.sum(ok).alias("success"), F.sum(1 - ok).alias("error"),
-                 F.max("logtime").alias("max_logtime"))
-            .toArrow())
+    partition_id) that the fan-out write left under ``staging``: one
+    driver-side pyarrow scan of its part files, no Spark job. A ``*_etl``
+    sink is success, ``errors``/``failures`` are error; ``partition_id`` is
+    the write task, from its ``part-NNNNN-`` file name (NULL if the name
+    does not parse)."""
+    out = _read(staging, ["_src_file", "sink", "logtime", "__filename"],
+                pattern="sink=*/*.parquet",
+                partitioning=pads.partitioning(
+                    pa.schema([("sink", pa.string())]), flavor="hive"))
+    if out is None:
+        return _WRITTEN.empty_table()
+    # one row per (input file, part file) first, so the regex runs once per
+    # part file, not once per row
+    per_part = out.group_by(["_src_file", "__filename", "sink"]).aggregate(
+        [([], "count_all"), ("logtime", "max")])
+    rows = per_part["count_all"]
+    ok = pac.ends_with(per_part["sink"], SINK_OK_SUFFIX)
+    task = pac.extract_regex(per_part["__filename"],
+                             r"/part-(?P<t>\d+)-[^/]*$")
+    counts = pa.table({
+        "src_file": per_part["_src_file"],
+        "partition_id": pac.cast(pac.struct_field(task, [0]), pa.int32()),
+        "ok": pac.if_else(ok, rows, 0), "err": pac.if_else(ok, 0, rows),
+        "logtime": per_part["logtime_max"],
+    }).group_by(["src_file", "partition_id"]).aggregate(
+        [("ok", "sum"), ("err", "sum"), ("logtime", "max")])
+    return pa.table([counts[c] for c in ("src_file", "partition_id", "ok_sum",
+                                         "err_sum", "logtime_max")],
+                    schema=_WRITTEN)
 
 
 def lineage_rows(written: pa.Table, files: list[str], lines: list[int],
@@ -266,8 +292,8 @@ def _filestate_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, FILESTATE_TABLE)
 
 
-def record_filestate(spark: SparkSession, ckpt_dir: str,
-                     files: list[str], sizes: list[int]) -> None:
+def record_filestate(ckpt_dir: str, files: list[str],
+                     sizes: list[int]) -> None:
     """Commit-time sidecar: (src_file, bytes) per processed file — the analog
     of the reference's stored byte offset (DefaultFileReader.java:306-310)."""
     _append(_filestate_path(ckpt_dir), pa.table({
@@ -370,9 +396,10 @@ def commit_batch(spark: SparkSession, df: DataFrame, bid: str,
     route_ops.fanout_write(routed, staging, mode="overwrite")
     if crash_before_commit:
         return None
-    stats = lineage_rows(written_counts(spark, staging), files, lines,
+    # no Spark job from here on: the rest is driver-side pyarrow
+    stats = lineage_rows(written_counts(staging), files, lines,
                          run_id, bid, "route")
-    record_filestate(spark, ckpt_dir, files, sizes)
+    record_filestate(ckpt_dir, files, sizes)
     _append(_ckpt_path(ckpt_dir), stats)
     return stats
 

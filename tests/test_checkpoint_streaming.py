@@ -587,16 +587,205 @@ def test_lineage_rows_raise_before_commit():
         rows("/in/a%20b.parquet", 2, 3)
 
 
-def _arrow_eval_output_rows(spark, since: int) -> tuple[int, int]:
-    """(ArrowEvalPython output rows summed over the SQL executions with id
-    >= ``since``, next execution id), from Spark's SQL status store."""
+def _spark_written_counts(spark, staging: str) -> list[tuple]:
+    """The Spark ``groupBy`` that ``written_counts`` used to run over the
+    written batch (two Spark jobs), kept as its reference: sorted rows."""
+    out = spark.read.schema(
+        "_src_file STRING, sink STRING, logtime BIGINT").parquet(staging)
+    ok = F.col("sink").endswith("_etl").cast("long")
+    task = F.regexp_extract(F.input_file_name(), r"/part-(\d+)-", 1)
+    rows = (out.groupBy(F.col("_src_file").alias("src_file"),
+                        task.try_cast("int").alias("partition_id"))
+            .agg(F.sum(ok).alias("success"), F.sum(1 - ok).alias("error"),
+                 F.max("logtime").alias("max_logtime")).collect())
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def _written_counts_rows(staging: str) -> list[tuple]:
+    tbl = ck.written_counts(staging)
+    assert tbl.column_names == ["src_file", "partition_id", "success",
+                                "error", "max_logtime"]
+    return sorted((tuple(r.values()) for r in tbl.to_pylist()), key=repr)
+
+
+def test_written_counts_matches_spark_groupby(spark, tmp_path, tx_files):
+    """The driver-side pyarrow scan returns what the Spark groupBy over the
+    same written batch returned, on one batch that has several tasks per
+    file (split input), a failures-only file (NULL max_logtime), an input
+    dir with a space (URL-encoded ``_src_file``) and Spark's ``_SUCCESS``
+    and ``.crc`` sidecars in its staging dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in a")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    for f in tx_files[:2]:
+        pq.write_table(pq.read_table(f),
+                       os.path.join(input_dir, os.path.basename(f)),
+                       row_group_size=250)
+    tbl = pq.read_table(tx_files[0]).slice(0, 6)
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("text"), "text",
+                                  pa.array(["no grok match here"] * 6)),
+                   os.path.join(input_dir, "zz-failures.parquet"))
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"), out,
+                             "run1")
+    finally:
+        spark.conf.set(key, prev)
+    staging = os.path.join(out, f"batch={r['batch_id']}")
+    sidecars = [f for _, _, fs in os.walk(staging) for f in fs
+                if f == "_SUCCESS" or f.endswith(".crc")]
+    assert "_SUCCESS" in sidecars and len(sidecars) > 1
+    got = _written_counts_rows(staging)
+    assert got == _spark_written_counts(spark, staging)
+    tasks = {}
+    for src, pid, _, _, _ in got:
+        assert "%20" in src
+        tasks.setdefault(src, set()).add(pid)
+    assert max(len(t) for t in tasks.values()) > 1, "input was not split"
+    assert [(ok, err, t) for src, _, ok, err, t in got
+            if src.endswith("zz-failures.parquet")] == [(0, 6, None)]
+
+
+def test_written_counts_of_batch_without_part_files(spark, tmp_path,
+                                                    tx_files):
+    """A batch that wrote no part file (all lines blank) reads as the empty
+    typed table, as the Spark groupBy read it as no rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    input_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    tbl = pq.read_table(tx_files[0]).slice(0, 3)
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("text"), "text",
+                                  pa.array(["", " ", None])),
+                   os.path.join(input_dir, "blank.parquet"))
+    r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"), out,
+                         "run1")
+    staging = os.path.join(out, f"batch={r['batch_id']}")
+    assert os.path.isdir(staging)
+    assert _written_counts_rows(staging) == [] == \
+        _spark_written_counts(spark, staging)
+    assert ck.written_counts(staging).schema == pa.schema([
+        ("src_file", pa.string()), ("partition_id", pa.int32()),
+        ("success", pa.int64()), ("error", pa.int64()),
+        ("max_logtime", pa.int64())])
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs that ``fn()`` launches, counted by a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_runs_no_spark_job_after_the_write(spark, tmp_path, tx_files):
+    """written_counts launches no Spark job, so a 3-file run_resumable
+    launches 4: schema inference, the two broadcast builds of enrich and
+    the fan-out write."""
+    input_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(input_dir)
+    for f in tx_files[:3]:
+        shutil.copy(f, input_dir)
+    res = {}
+    n_run = _jobs_launched(spark, lambda: res.update(ck.run_resumable(
+        spark, input_dir, str(tmp_path / "ckpt"), out, "run1")))
+    staging = os.path.join(out, f"batch={res['batch_id']}")
+    assert _jobs_launched(spark, lambda: ck.written_counts(staging)) == 0
+    assert n_run == 4
+
+
+def test_worker_daemon_rereads_a_zip_only_when_it_changed(tmp_path,
+                                                          monkeypatch):
+    """No Spark: with the daemon's zipimporter.invalidate_caches,
+    importlib.invalidate_caches() leaves an unchanged archive's directory
+    alone and re-reads a rewritten one, whose new member then imports."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from log_collector_spark import worker_daemon
+
+    archive = str(tmp_path / "mods.zip")
+
+    def write(members):
+        with zipfile.ZipFile(archive, "w") as z:
+            for name, src in members.items():
+                z.writestr(name, src)
+
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda path: reads.append(path) or real(path))
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        worker_daemon.invalidate_if_changed)
+    write({"zd_first.py": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zd_first").X == 1
+        importlib.invalidate_caches()  # what the daemon does before forking
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert archive not in reads
+        write({"zd_first.py": "X = 1\n", "zd_second.py": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        assert importlib.import_module("zd_second").Y == 2
+    finally:
+        for name in ("zd_first", "zd_second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_python_workers_run_the_patched_daemon(spark):
+    """Workers fork from log_collector_spark.worker_daemon, so every task
+    runs with its zipimporter.invalidate_caches."""
+    patched = F.udf(lambda _: __import__("zipimport").zipimporter
+                    .invalidate_caches.__module__)
+    assert spark.range(1).select(patched("id")).first()[0] == \
+        "log_collector_spark.worker_daemon"
+
+
+def _sql_store(spark):
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
-    rows, nxt = 0, since
+    return (spark._jsparkSession.sharedState().statusStore(),
+            spark._jvm.scala.jdk.javaapi.CollectionConverters)
+
+
+def _next_execution_id(spark) -> int:
+    """The id the next SQL execution gets. Reads no metrics: past
+    ``spark.sql.ui.retainedExecutions`` the store drops the oldest
+    executions on a background thread, and reading the metrics of one it
+    just dropped raises."""
+    store, conv = _sql_store(spark)
+    return max((ui.executionId() + 1
+                for ui in conv.asJava(store.executionsList())), default=0)
+
+
+def _arrow_eval_output_rows(spark, since: int) -> int:
+    """ArrowEvalPython output rows summed over the SQL executions with id
+    >= ``since``, from Spark's SQL status store."""
+    store, conv = _sql_store(spark)
+    rows = 0
     for ui in conv.asJava(store.executionsList()):
         eid = ui.executionId()
-        nxt = max(nxt, eid + 1)
         if eid < since:
             continue
         values = conv.asJava(store.executionMetrics(eid))
@@ -606,7 +795,7 @@ def _arrow_eval_output_rows(spark, since: int) -> tuple[int, int]:
                     if m.name() == "number of output rows":
                         rows += int(values.get(m.accumulatorId(), "0")
                                     .replace(",", ""))
-    return rows, nxt
+    return rows
 
 
 def test_run_resumable_parses_each_turn_once(spark, tmp_path, tx_files):
@@ -618,10 +807,10 @@ def test_run_resumable_parses_each_turn_once(spark, tmp_path, tx_files):
     os.makedirs(input_dir)
     for f in tx_files[:2]:
         shutil.copy(f, input_dir)
-    _, since = _arrow_eval_output_rows(spark, 0)
+    since = _next_execution_id(spark)
     r = ck.run_resumable(spark, input_dir, str(tmp_path / "ckpt"),
                          str(tmp_path / "out"), "run1")
-    udf_rows, _ = _arrow_eval_output_rows(spark, since)
+    udf_rows = _arrow_eval_output_rows(spark, since)
     assert udf_rows == sum(pq.read_metadata(f).num_rows for f in r["files"])
 
 
@@ -919,12 +1108,12 @@ def test_stream_metered_pipeline_emits_kairos_batches(spark, tmp_path):
     ckpt = str(tmp_path / "mck")
     out = str(tmp_path / "mout")
     bodies: list[str] = []
-    _, since = _arrow_eval_output_rows(spark, 0)
+    since = _next_execution_id(spark)
     q = sp.start_pipeline_stream(
         spark, input_dir, ckpt, out, on_commit=sinks.kairos_hook(
             post=bodies.append, clock=lambda: 1_700_000_000_000))
     q.awaitTermination(300)
-    udf_rows, _ = _arrow_eval_output_rows(spark, since)
+    udf_rows = _arrow_eval_output_rows(spark, since)
     assert udf_rows == sum(pq.read_metadata(os.path.join(input_dir, f))
                            .num_rows for f in os.listdir(input_dir)
                            if f.endswith(".parquet"))

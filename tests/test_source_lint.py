@@ -17,6 +17,10 @@ Runs on the package source only (no Spark, milliseconds):
   once: ``routed`` feeds only the ``route_ops.fanout_write`` call, and the
   lineage does not come from ``spark_partition_id`` over a second
   execution of it;
+* after that write, ``commit_batch`` makes no Spark call: nothing it runs
+  from there on, down through the checkpoint functions it calls, names a
+  SparkSession, a frame or a Spark function, and ``written_counts`` takes
+  no SparkSession;
 * ``streaming/pipeline.py`` calls no ``fanout_write`` and no ``.collect()``:
   its sink write and its metrics come only from the commit core.
 """
@@ -140,6 +144,44 @@ def test_run_resumable_executes_routed_once():
               and c.func.value.id == "route_ops"]
     assert len(writes) == 1 and uses == writes, \
         [n.lineno for n in uses]
+
+
+SPARK_NAMES = {"spark", "df", "routed", "F", "pl", "SparkSession",
+               "DataFrame"}
+
+
+def _spark_refs(nodes: list[ast.AST], fns: dict[str, ast.FunctionDef],
+                seen: set[str]) -> list[str]:
+    """``name:line`` of every Spark name in ``nodes`` and in the checkpoint
+    functions they call, transitively."""
+    hits = []
+    for n in nodes:
+        if isinstance(n, ast.Name) and n.id in SPARK_NAMES:
+            hits.append(f"{n.id}:{n.lineno}")
+        elif (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+              and n.func.id in fns and n.func.id not in seen):
+            seen.add(n.func.id)
+            hits += _spark_refs(list(ast.walk(fns[n.func.id])), fns, seen)
+    return hits
+
+
+def test_commit_batch_makes_no_spark_call_after_its_write():
+    fns = {f.name: f for f in _checkpoint_functions()}
+    fn = fns["commit_batch"]
+    write = next(c for c in ast.walk(fn) if isinstance(c, ast.Call)
+                 and getattr(c.func, "attr", None) == "fanout_write")
+    after = [n for n in ast.walk(fn)
+             if getattr(n, "lineno", 0) > write.end_lineno]
+    assert after, "commit_batch ends at its write"
+    assert _spark_refs(after, fns, set()) == []
+
+
+def test_written_counts_takes_no_spark_session():
+    fn = next(f for f in _checkpoint_functions()
+              if f.name == "written_counts")
+    assert [a.arg for a in fn.args.args + fn.args.kwonlyargs
+            if a.arg == "spark" or "SparkSession" in ast.unparse(
+                a.annotation or ast.Constant(""))] == []
 
 
 def test_checkpoint_never_calls_spark_partition_id():
